@@ -30,7 +30,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from numaflow_spark.queries import QUERIES
-from numaflow_spark.session import get_spark, load_table
+from numaflow_spark.session import DEFAULT_CPUS, get_spark, load_table
+
+# Keys in the streaming stage's generator; the state-partition width is
+# derived from it, so main() and _streaming_throughput share one value.
+KEY_COUNT = 8
 
 
 def main() -> None:
@@ -56,9 +60,7 @@ def main() -> None:
     # measures the plan. Both raw numbers go to stderr.
     from numaflow_spark.scale import streaming_state_partitions
 
-    stream_parts = streaming_state_partitions(
-        8, int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    stream_parts = streaming_state_partitions(KEY_COUNT, DEFAULT_CPUS)
     stream_runs = [
         _streaming_throughput(spark, n_batches=6, state_partitions=stream_parts),
         _streaming_throughput(spark, state_partitions=stream_parts),
@@ -368,7 +370,7 @@ def _streaming_throughput(
     spark,
     n_batches: int = 20,
     rows_per_batch: int = 50_000,
-    key_count: int = 8,
+    key_count: int = KEY_COUNT,
     state_partitions: int | None = None,
 ) -> float:
     """Drain generator -> map -> keyed tumbling agg -> update-mode memory
@@ -397,9 +399,7 @@ def _streaming_throughput(
     if state_partitions is None:
         from numaflow_spark.scale import streaming_state_partitions
 
-        state_partitions = streaming_state_partitions(
-            key_count, int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        )
+        state_partitions = streaming_state_partitions(key_count, DEFAULT_CPUS)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     ckpt = tempfile.mkdtemp(prefix="bench_stream_")

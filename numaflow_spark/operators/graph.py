@@ -338,58 +338,8 @@ def cooccurrence_pairs(
 ) -> DataFrame:
     """Per-group distinct item pairs ``(group, u, v)`` with ``u < v`` — the
     co-occurrence/edge-build primitive under market-basket and co-purchase
-    graphs. Two formulations, A/B-measured per scale (tools/ab_cooc.py,
-    min-of-2 on local[32]):
-
-    * self-join (DEFAULT): ``(group, item)`` dedupe inside a group-key
-      partitioning, then an equi-join on the group key with a ``u < v``
-      residual — ONE exchange per side (the dedupe aggregate and the join
-      share HashPartitioning(group); see _cooccurrence_pairs_selfjoin for
-      the r8 plan note and measurements), narrow rows, codegen join.
-    * set-expansion (``SPARK_GRAFT_COOC_IMPL=set``): one ``collect_set``
-      per group, pair expansion row-locally over the sorted array — one
-      exchange, but the aggregation buffers whole baskets and the
-      flatten/transform explode materializes pair structs outside codegen.
-
-    The r7 rewrite made set-expansion the default on plan shape (fewer
-    Exchanges); measurement reversed it: at sf0.1 the two are within noise
-    (basket_pairs 3.37/3.34, triangle edge build 9.1/10.7s either way),
-    while at sf1 the self-join wins ALL four consumers by 25-30%
-    (basket_pairs 23.0 -> 16.3s, triangle_count 53.6 -> 40.7s,
-    copurchase_lift 22.1 -> 15.8s, degree_distribution 27.7 -> 19.4s) —
-    the aggregation-buffer cost grows faster than the extra exchange. Pair
-    blowup is |group|² in BOTH forms — bounded by basket size, never
-    corpus size. NULL group keys are dropped in both (``a.g == b.g``
-    never matches NULL; groupBy would otherwise keep a NULL-key group —
-    ADVICE r7)."""
-    from pyspark.sql import functions as F
-
-    if os.environ.get("SPARK_GRAFT_COOC_IMPL", "join") != "set":
-        return _cooccurrence_pairs_selfjoin(df, group_col, item_col)
-    sets = df.filter(F.col(group_col).isNotNull()).groupBy(group_col).agg(
-        F.sort_array(F.collect_set(item_col)).alias("_items")
-    )
-    return sets.select(
-        F.col(group_col),
-        F.explode(
-            F.expr(
-                "flatten(transform(_items, (x, i) -> "
-                "transform(slice(_items, i + 2, size(_items)), "
-                "y -> named_struct('u', x, 'v', y))))"
-            )
-        ).alias("_e"),
-    ).select(group_col, F.col("_e.u").alias("u"), F.col("_e.v").alias("v"))
-
-
-def _cooccurrence_pairs_selfjoin(
-    df: DataFrame,
-    group_col: str,
-    item_col: str,
-) -> DataFrame:
-    """The self-join formulation (default — see cooccurrence_pairs for the
-    A/B measurement that picked it): dedupe ``(group, item)`` INSIDE a
-    group-key partitioning, then an equi-join on the group key with a
-    ``u < v`` residual.
+    graphs: dedupe ``(group, item)`` INSIDE a group-key partitioning, then
+    an equi-join on the group key with a ``u < v`` residual.
 
     Plan shape (r8 rewrite): ``repartition(group)`` + ``dropDuplicates``
     instead of a plain ``distinct()``. HashPartitioning(group) satisfies
@@ -405,8 +355,18 @@ def _cooccurrence_pairs_selfjoin(
     a corpus where (group, item) repeats heavily shuffles the duplicates
     it would previously have pre-collapsed — bounded by per-group row
     count, and the win reverses only when the duplicate rate is extreme.
-    NULL group keys are filtered explicitly (join equality would drop
-    them anyway; ADVICE r7)."""
+
+    The r7 set-expansion form (one ``collect_set`` per group, pairs
+    expanded row-locally over the sorted array: one exchange, but the
+    aggregation buffers whole baskets and the explode materializes pair
+    structs outside codegen) was A/B-measured against this one (min-of-2
+    on local[32]) and removed: within noise at sf0.1 (basket_pairs
+    3.37/3.34, triangle edge build 9.1/10.7s either way), while at sf1 the
+    self-join won ALL four consumers by 25-30% (basket_pairs 23.0 ->
+    16.3s, triangle_count 53.6 -> 40.7s, copurchase_lift 22.1 -> 15.8s,
+    degree_distribution 27.7 -> 19.4s). Pair blowup is |group|², bounded
+    by basket size, never corpus size. NULL group keys are filtered
+    explicitly (join equality would drop them anyway; ADVICE r7)."""
     from pyspark.sql import functions as F
 
     gi = (

@@ -16,12 +16,20 @@ The classic two-phase distributed ranking:
 2. Local running aggregates (row_number / running sum / running max) run
    inside each bucket — P parallel sorts of ~n/P rows each, partitioned
    on the bucket column (one hash exchange).
-3. Per-bucket closing totals reduce to <=P rows, and each bucket's
-   EXCLUSIVE prefix (what all strictly-earlier buckets contribute) is
-   computed with a broadcast triangle join over those rows (P^2 <= 1024
-   intermediate rows — deliberately NOT an unpartitioned window, so the
-   rewritten plans contain zero single-partition sorts of any size), then
-   broadcast-joined back:  global = exclusive_prefix (+) local.
+3. Per-bucket closing totals reduce to <=P+2 rows, which the driver
+   collects; each bucket's EXCLUSIVE prefix (what all strictly-earlier
+   buckets contribute) is inlined as a literal map lookup:
+   global = exclusive_prefix (+) local. The literal removes the
+   triangle-join + per-bucket-agg + broadcast-build stages a pure-plan
+   prefix would need — 2-4 AQE jobs per ranking op at sf0.1, where the
+   scheduling floor is 69% of suite wall (VERDICT r11 task 6). Driver
+   traffic is bounded by the partition constant (same class as the BPE
+   1-row argmax and the CC convergence boolean, the repo's bounded-collect
+   allowlist). The collect reads the SAME materialized snapshot the local
+   window reads (cut_lineage eager), so the inlined offsets cannot diverge
+   from the windowed rows; in the lazy plan-audit regime both evaluations
+   are pure functions of the data (the bucket-determinism contract below).
+   No single-partition sort of any size appears in the rewritten plans.
 
 WHY a value-interpolated bucket and not ``repartitionByRange`` +
 ``spark_partition_id()``: the r10 first cut used the physical partition
@@ -57,30 +65,8 @@ globally at 100 TB.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _use_literal_offsets() -> bool:
-    """Driver-side literal offsets (default on, VERDICT r11 task 6): the
-    per-bucket closing totals are <= partitions+1 rows by construction, so
-    collecting them and inlining each bucket's exclusive prefix as a
-    literal map lookup removes the triangle-join + per-bucket-agg +
-    broadcast-build stages from the final plan — 2-4 AQE jobs per ranking
-    op at sf0.1 where the scheduling floor is 69% of suite wall. Driver
-    traffic is bounded by the partition constant (same class as the BPE
-    1-row argmax and the CC convergence boolean, the repo's documented
-    bounded-collect allowlist). The collect reads the SAME materialized
-    snapshot the local window reads (cut_lineage eager), so the inlined
-    offsets cannot diverge from the windowed rows; in the lazy plan-audit
-    regime both evaluations are pure functions of the data (the module's
-    bucket-determinism contract). SPARK_GRAFT_LITERAL_OFFSETS=0 restores
-    the pure-plan triangle path (plan pins cover both)."""
-    return os.environ.get("SPARK_GRAFT_LITERAL_OFFSETS", "1") not in (
-        "0", "false"
-    )
 
 
 def _collect_no_aqe(df: DataFrame):
@@ -104,9 +90,9 @@ def _prefix_map_expr(pairs, pid_col: str, dtype: str, combine):
 
     ``pairs`` = collected (pid, closing_total) rows; buckets with no
     strictly-earlier non-NULL total get no map entry, so the lookup yields
-    NULL — exactly the empty-frame semantics of the triangle join this
-    replaces. Ascending pid is always the prefix direction: descending
-    rankings already flipped the bucket index in _bucket_expr."""
+    NULL — exactly the empty-frame semantics of the window this replaces.
+    Ascending pid is always the prefix direction: descending rankings
+    already flipped the bucket index in _bucket_expr."""
     entries = []
     acc = None
     for pid, val in sorted(pairs, key=lambda kv: kv[0]):
@@ -125,7 +111,6 @@ DEFAULT_RANGE_PARTITIONS = 32
 
 _PID = "__rk_pid"
 _LOC = "__rk_loc"
-_PRE = "__rk_pre"
 _LO = "__rk_lo"
 _HI = "__rk_hi"
 
@@ -185,9 +170,8 @@ def _bucketed(df: DataFrame, primary: str, descending: bool,
         F.max(F.col(primary).cast("bigint")).alias(_HI),
     )
     # NULL primaries get a dedicated edge bucket (-1 ascending, P
-    # descending) so no row is ever dropped by the offsets join (ADVICE
-    # r10: the interpolation alone yields a NULL bucket id, silently lost
-    # by the inner join). The edge choice mirrors the Window.orderBy these
+    # descending): the interpolation alone yields a NULL bucket id, which
+    # the literal prefix lookup would map to offset 0 (ADVICE r10). The edge choice mirrors the Window.orderBy these
     # ops replace: Spark sorts NULLS FIRST ascending, NULLS LAST
     # descending. min/max ignore NULLs, so an all-NULL column routes every
     # row through the NULL arm and (lo, hi) being NULL is harmless.
@@ -215,29 +199,6 @@ def _bucketed(df: DataFrame, primary: str, descending: bool,
 
         part = cut_lineage(part, eager=True)
     return part
-
-
-def _exclusive_prefixes(per_pid: DataFrame, aggs: list[tuple[Column, str]],
-                        pid: str = _PID) -> DataFrame:
-    """For each bucket id, each `agg` over all STRICTLY earlier buckets
-    (NULL when none). ONE broadcast triangle join over <=P rows per side
-    emits every prefix column at once — N running aggregates share a
-    single triangle instead of paying it N times (VERDICT r11 #2)."""
-    metrics = [c for c in per_pid.columns if c != pid]
-    right = per_pid.select(
-        F.col(pid).alias("__rk_qid"),
-        *[F.col(c).alias(f"__rk_r_{c}") for c in metrics],
-    )
-    j = per_pid.select(pid).join(
-        F.broadcast(right), F.col("__rk_qid") < F.col(pid), "left"
-    )
-    return j.groupBy(pid).agg(*[a.alias(out) for a, out in aggs])
-
-
-def _exclusive_prefix(per_pid: DataFrame, agg: Column,
-                      out: str, pid: str = _PID) -> DataFrame:
-    """Single-aggregate convenience wrapper over _exclusive_prefixes."""
-    return _exclusive_prefixes(per_pid, [(agg, out)], pid=pid)
 
 
 def add_running_sum_bounded(df: DataFrame, order_col: str, value_col: str,
@@ -280,38 +241,22 @@ def add_global_rank(df: DataFrame, order_cols: list[Column], out_col: str,
     materialize_ranking_input (skips the per-op eager cut).
 
     ``count_col`` (r13 wave 2, the add_global_ranks device): also stamp
-    the TOTAL row count. Under the literal-offsets regime it is the sum
-    of the already-collected per-bucket counts — a free literal; else one
-    crossJoin-broadcast count agg (what the consumer paid anyway)."""
+    the TOTAL row count — the sum of the already-collected per-bucket
+    counts, a free literal."""
     part = _bucketed(df, primary, descending, partitions, materialize)
     wloc = Window.partitionBy(_PID).orderBy(*order_cols)
     local = part.withColumn(_LOC, F.row_number().over(wloc))
     cnts = part.groupBy(_PID).agg(F.count("*").alias("_cnt"))
-    if _use_literal_offsets():
-        pairs = [(r[0], r[1]) for r in _collect_no_aqe(cnts)]
-        pre = _prefix_map_expr(pairs, _PID, "bigint", lambda a, b: a + b)
-        out = local.withColumn(
-            out_col, (F.coalesce(pre, F.lit(0)) + F.col(_LOC)).cast("bigint")
-        ).drop(_PID, _LOC)
-        if count_col is not None:
-            out = out.withColumn(
-                count_col,
-                F.lit(sum(c for _, c in pairs)).cast("bigint"),
-            )
-        return out
-    offs = _exclusive_prefix(cnts, F.sum("__rk_r__cnt"), _PRE)
-    out = (
-        local.join(F.broadcast(offs), _PID)
-        .withColumn(
-            out_col,
-            (F.coalesce(F.col(_PRE), F.lit(0)) + F.col(_LOC)).cast("bigint"),
-        )
-        .drop(_PID, _LOC, _PRE)
-    )
+    pairs = [(r[0], r[1]) for r in _collect_no_aqe(cnts)]
+    pre = _prefix_map_expr(pairs, _PID, "bigint", lambda a, b: a + b)
+    out = local.withColumn(
+        out_col, (F.coalesce(pre, F.lit(0)) + F.col(_LOC)).cast("bigint")
+    ).drop(_PID, _LOC)
     if count_col is not None:
-        out = out.crossJoin(F.broadcast(
-            df.agg(F.count("*").cast("bigint").alias(count_col))
-        ))
+        out = out.withColumn(
+            count_col,
+            F.lit(sum(c for _, c in pairs)).cast("bigint"),
+        )
     return out
 
 
@@ -327,14 +272,12 @@ def add_global_ranks(df: DataFrame,
     rankings order by INPUT columns, so one broadcast stats row and one
     projection attach every bucket id at once). The result plan is one
     linear chain — per spec: one hash exchange for the local window plus
-    a broadcast offsets join — evaluated once.
+    a literal offsets lookup — evaluated once.
 
     ``count_col`` (r13): also stamp the TOTAL row count as a bigint
-    column. Under the literal-offsets regime the total is the sum of the
-    already-collected per-bucket counts — a free literal, saving the
-    consumer's separate count aggregate + broadcast (ntile consumers all
-    need n); otherwise it costs the one crossJoin-broadcast agg the
-    consumer would have paid anyway."""
+    column: the sum of the already-collected per-bucket counts — a free
+    literal, saving the consumer's separate count aggregate + broadcast
+    (ntile consumers all need n)."""
     import os
 
     aggs = []
@@ -358,10 +301,9 @@ def add_global_ranks(df: DataFrame,
         from numaflow_spark.operators.graph import cut_lineage
 
         part = cut_lineage(part, eager=True)
-    literal = _use_literal_offsets()
     grouped_cnts = None
     total_rows: int | None = None
-    if literal and len(specs) > 1:
+    if len(specs) > 1:
         # ONE pass for every spec's per-bucket counts: grouping sets over
         # the N bucket-id columns (bucket ids are never NULL — the NULL
         # primary routes to a dedicated integer edge bucket — so the
@@ -382,44 +324,25 @@ def add_global_ranks(df: DataFrame,
         pid = f"{_PID}{i}"
         wloc = Window.partitionBy(pid).orderBy(*order_cols)
         result = result.withColumn(f"{_LOC}{i}", F.row_number().over(wloc))
-        if literal:
-            pairs = (
-                grouped_cnts[pid]
-                if grouped_cnts is not None
-                else [(r[0], r[1])
-                      for r in _collect_no_aqe(part.groupBy(pid).agg(
-                          F.count("*").alias("_cnt")))]
-            )
-            if total_rows is None:
-                total_rows = sum(c for _, c in pairs)
-            pre = _prefix_map_expr(pairs, pid, "bigint", lambda a, b: a + b)
-            result = result.withColumn(
-                out_col,
-                (F.coalesce(pre, F.lit(0)) + F.col(f"{_LOC}{i}"))
-                .cast("bigint"),
-            ).drop(pid, f"{_LOC}{i}")
-            continue
-        cnts = part.groupBy(pid).agg(F.count("*").alias("_cnt"))
-        offs = _exclusive_prefix(cnts, F.sum("__rk_r__cnt"), f"{_PRE}{i}",
-                                 pid=pid)
-        result = (
-            result.join(F.broadcast(offs), pid)
-            .withColumn(
-                out_col,
-                (F.coalesce(F.col(f"{_PRE}{i}"), F.lit(0))
-                 + F.col(f"{_LOC}{i}")).cast("bigint"),
-            )
-            .drop(pid, f"{_LOC}{i}", f"{_PRE}{i}")
+        pairs = (
+            grouped_cnts[pid]
+            if grouped_cnts is not None
+            else [(r[0], r[1])
+                  for r in _collect_no_aqe(part.groupBy(pid).agg(
+                      F.count("*").alias("_cnt")))]
         )
+        if total_rows is None:
+            total_rows = sum(c for _, c in pairs)
+        pre = _prefix_map_expr(pairs, pid, "bigint", lambda a, b: a + b)
+        result = result.withColumn(
+            out_col,
+            (F.coalesce(pre, F.lit(0)) + F.col(f"{_LOC}{i}"))
+            .cast("bigint"),
+        ).drop(pid, f"{_LOC}{i}")
     if count_col is not None:
-        if total_rows is not None:
-            result = result.withColumn(
-                count_col, F.lit(int(total_rows)).cast("bigint")
-            )
-        else:
-            result = result.crossJoin(F.broadcast(
-                df.agg(F.count("*").cast("bigint").alias(count_col))
-            ))
+        result = result.withColumn(
+            count_col, F.lit(int(total_rows)).cast("bigint")
+        )
     return result
 
 
@@ -535,19 +458,16 @@ def add_global_running_sums(df: DataFrame, order_cols: list[Column],
     (VERDICT r11 #2: ks_priority_price paid the full bucketing + local
     window + per-bucket totals + triangle twice for its two ECDFs). All N
     sums share one bucket assignment, ONE local Window physical operator
-    (identical window spec, N aggregate expressions), one per-bucket
-    totals aggregation, and one broadcast triangle join — the job count is
-    flat in N.
+    (identical window spec, N aggregate expressions), and one per-bucket
+    totals pull — the job count is flat in N.
 
     ``totals_cols`` (r13, the add_global_ranks ``count_col`` device): for
     each non-None entry, also stamp the GRAND total of that value column
-    as a column of the result. Under the literal-offsets regime the total
-    is the fold of the already-collected per-bucket sums — a free literal
-    in the same exact integer/decimal terms (commutative adds of the same
-    per-bucket values), saving the consumer's separate total aggregate +
-    broadcast join (the ECDF consumers all need n1/n2); otherwise it costs
-    the one crossJoin-broadcast agg the consumer would have paid anyway.
-    ``count_col`` likewise stamps the TOTAL row count — the per-bucket
+    as a column of the result: the fold of the already-collected
+    per-bucket sums — a free literal in the same exact integer/decimal
+    terms (commutative adds of the same per-bucket values), saving the
+    consumer's separate total aggregate + broadcast join (the ECDF
+    consumers all need n1/n2). ``count_col`` likewise stamps the TOTAL row count — the per-bucket
     counts ride the same single sums pull."""
     assert len(value_cols) == len(out_cols) and value_cols
     assert totals_cols is None or len(totals_cols) == len(value_cols)
@@ -564,63 +484,39 @@ def add_global_running_sums(df: DataFrame, order_cols: list[Column],
     if count_col is not None:
         sum_aggs.append(F.count("*").alias("_scnt"))
     sums = part.groupBy(_PID).agg(*sum_aggs)
-    if _use_literal_offsets():
-        dtypes = [
-            f.dataType.simpleString()
-            for f in sums.schema.fields[1:len(value_cols) + 1]
-        ]
-        rows = _collect_no_aqe(sums)
-        out = local
-        for i, out_col in enumerate(out_cols):
-            pre = _prefix_map_expr(
-                [(r[0], r[i + 1]) for r in rows], _PID, dtypes[i],
-                lambda a, b: a + b,
-            )
-            out = out.withColumn(
-                out_col, F.coalesce(pre, F.lit(0)) + F.col(f"{_LOC}{i}")
-            )
-        if totals_cols is not None:
-            for i, tc in enumerate(totals_cols):
-                if tc is None:
-                    continue
-                # grand total = fold of the collected per-bucket sums:
-                # NULL iff every bucket sum is NULL (Spark's sum-over-
-                # empty/all-NULL contract), else the exact commutative add
-                vals = [r[i + 1] for r in rows if r[i + 1] is not None]
-                tot = sum(vals) if vals else None
-                out = out.withColumn(tc, F.lit(tot).cast(dtypes[i]))
-        if count_col is not None:
-            # count-over-anything is 0 on empty input, never NULL
-            out = out.withColumn(
-                count_col,
-                F.lit(sum(r[len(value_cols) + 1] for r in rows))
-                .cast("bigint"),
-            )
-        return out.drop(
-            _PID, *[f"{_LOC}{i}" for i in range(len(value_cols))]
-        )
-    offs = _exclusive_prefixes(
-        sums,
-        [(F.sum(f"__rk_r__s{i}"), f"{_PRE}{i}")
-         for i in range(len(value_cols))],
-    )
-    out = local.join(F.broadcast(offs), _PID)
-    for i, out_col in enumerate(out_cols):
-        out = out.withColumn(
-            out_col,
-            F.coalesce(F.col(f"{_PRE}{i}"), F.lit(0)) + F.col(f"{_LOC}{i}"),
-        )
-    tot_aggs = [
-        F.sum(v).alias(tc)
-        for v, tc in zip(value_cols, totals_cols or []) if tc is not None
+    dtypes = [
+        f.dataType.simpleString()
+        for f in sums.schema.fields[1:len(value_cols) + 1]
     ]
+    rows = _collect_no_aqe(sums)
+    out = local
+    for i, out_col in enumerate(out_cols):
+        pre = _prefix_map_expr(
+            [(r[0], r[i + 1]) for r in rows], _PID, dtypes[i],
+            lambda a, b: a + b,
+        )
+        out = out.withColumn(
+            out_col, F.coalesce(pre, F.lit(0)) + F.col(f"{_LOC}{i}")
+        )
+    if totals_cols is not None:
+        for i, tc in enumerate(totals_cols):
+            if tc is None:
+                continue
+            # grand total = fold of the collected per-bucket sums:
+            # NULL iff every bucket sum is NULL (Spark's sum-over-
+            # empty/all-NULL contract), else the exact commutative add
+            vals = [r[i + 1] for r in rows if r[i + 1] is not None]
+            tot = sum(vals) if vals else None
+            out = out.withColumn(tc, F.lit(tot).cast(dtypes[i]))
     if count_col is not None:
-        tot_aggs.append(F.count("*").cast("bigint").alias(count_col))
-    if tot_aggs:
-        out = out.crossJoin(F.broadcast(df.agg(*tot_aggs)))
+        # count-over-anything is 0 on empty input, never NULL
+        out = out.withColumn(
+            count_col,
+            F.lit(sum(r[len(value_cols) + 1] for r in rows))
+            .cast("bigint"),
+        )
     return out.drop(
-        _PID, *[f"{_LOC}{i}" for i in range(len(value_cols))],
-        *[f"{_PRE}{i}" for i in range(len(value_cols))],
+        _PID, *[f"{_LOC}{i}" for i in range(len(value_cols))]
     )
 
 
@@ -642,23 +538,16 @@ def add_global_running_max_strictly_before(
     )
     local = part.withColumn(_LOC, F.max(value_col).over(wloc))
     maxes = part.groupBy(_PID).agg(F.max(value_col).alias("_m"))
-    if _use_literal_offsets():
-        dtype = maxes.schema.fields[1].dataType.simpleString()
-        pre = _prefix_map_expr(
-            [(r[0], r[1]) for r in _collect_no_aqe(maxes)], _PID, dtype,
-            lambda a, b: max(a, b),
-        )
-        # greatest() skips NULLs (returns NULL only when BOTH are), which
-        # is exactly the empty-frame semantics of the window it replaces
-        return local.withColumn(
-            out_col, F.greatest(pre, F.col(_LOC))
-        ).drop(_PID, _LOC)
-    offs = _exclusive_prefix(maxes, F.max("__rk_r__m"), _PRE)
-    return (
-        local.join(F.broadcast(offs), _PID)
-        .withColumn(out_col, F.greatest(F.col(_PRE), F.col(_LOC)))
-        .drop(_PID, _LOC, _PRE)
+    dtype = maxes.schema.fields[1].dataType.simpleString()
+    pre = _prefix_map_expr(
+        [(r[0], r[1]) for r in _collect_no_aqe(maxes)], _PID, dtype,
+        lambda a, b: max(a, b),
     )
+    # greatest() skips NULLs (returns NULL only when BOTH are), which
+    # is exactly the empty-frame semantics of the window it replaces
+    return local.withColumn(
+        out_col, F.greatest(pre, F.col(_LOC))
+    ).drop(_PID, _LOC)
 
 
 def ntile_from_rank(rank_col: str, n_col: str, k: int) -> Column:

@@ -1507,14 +1507,12 @@ def _pagerank_sql() -> str:
 ORACLES["pagerank_bipartite"] = _pagerank_sql()
 
 # ---------------------------------------------------------------------------
-# STAGED oracles (r6 declaration queue — see queries.py::STAGED_QUERIES).
-# bpe_merges is deliberately absent: rows-only (no tractable SQL twin for
-# the iterative argmax + array-fold loop).
+# Commerce and corpus analytics twins. bpe_merges is deliberately absent:
+# rows-only (no tractable SQL twin for the iterative argmax + array-fold loop).
 # ---------------------------------------------------------------------------
 
-STAGED_ORACLES: dict[str, str] = {}
 
-STAGED_ORACLES["hourly_channel_matrix"] = """
+ORACLES["hourly_channel_matrix"] = """
     SELECT
       CAST(sum(CASE WHEN hour(ts) >= 0  AND hour(ts) < 6  AND event_type = 'view'  THEN 1 ELSE 0 END) AS BIGINT) AS night_views,
       CAST(sum(CASE WHEN hour(ts) >= 6  AND hour(ts) < 12 AND event_type = 'view'  THEN 1 ELSE 0 END) AS BIGINT) AS morning_views,
@@ -1527,7 +1525,7 @@ STAGED_ORACLES["hourly_channel_matrix"] = """
     FROM events
 """
 
-STAGED_ORACLES["basket_pairs"] = """
+ORACLES["basket_pairs"] = """
     WITH pairs AS (
         SELECT DISTINCT a.l_orderkey, a.l_partkey AS p1, b.l_partkey AS p2
         FROM lineitem a JOIN lineitem b
@@ -1542,7 +1540,7 @@ STAGED_ORACLES["basket_pairs"] = """
     LIMIT 50
 """
 
-STAGED_ORACLES["revenue_rolling_30d"] = """
+ORACLES["revenue_rolling_30d"] = """
     WITH daily AS (
         SELECT n_name AS nation,
                datediff('day', DATE '1995-01-01', CAST(l_shipdate AS DATE)) AS day_no,
@@ -1560,7 +1558,7 @@ STAGED_ORACLES["revenue_rolling_30d"] = """
     FROM daily
 """
 
-STAGED_ORACLES["clv_deciles"] = """
+ORACLES["clv_deciles"] = """
     WITH per_cust AS (
         SELECT o_custkey,
                CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS ltv_c
@@ -1575,7 +1573,7 @@ STAGED_ORACLES["clv_deciles"] = """
     FROM tiled GROUP BY decile
 """
 
-STAGED_ORACLES["cdc_orders_apply"] = """
+ORACLES["cdc_orders_apply"] = """
     WITH snapshot AS (
         SELECT c_custkey, c_name,
                CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS bal_c
@@ -1598,7 +1596,7 @@ STAGED_ORACLES["cdc_orders_apply"] = """
 # grouped_hll_users: identical per-group register math in DuckDB
 from numaflow_spark.operators.sketch import hll_oracle_sql_by as _hll_by_sql
 
-STAGED_ORACLES["grouped_hll_users"] = _hll_by_sql(
+ORACLES["grouped_hll_users"] = _hll_by_sql(
     "events", ["event_type"], "user_id"
 )
 
@@ -1619,7 +1617,7 @@ STAGED_ORACLES["grouped_hll_users"] = _hll_by_sql(
 # — the one oracle that could not run at x10 (2e10 levenshtein calls);
 # this exact-and-exhaustive blocking is near-linear in names + candidates
 # and returns the identical pair set (re-verified at sf0.001/0.01/0.1).
-STAGED_ORACLES["editdist_part_names"] = """
+ORACLES["editdist_part_names"] = """
     WITH names AS MATERIALIZED (SELECT DISTINCT p_name AS nm FROM part),
     lens AS (SELECT DISTINCT len(nm) AS L FROM names),
     segdef AS MATERIALIZED (
@@ -1703,9 +1701,9 @@ def _khop_sql() -> str:
     return sql
 
 
-STAGED_ORACLES["khop_trade_graph"] = _khop_sql()
+ORACLES["khop_trade_graph"] = _khop_sql()
 
-STAGED_ORACLES["yoy_nation_revenue"] = """
+ORACLES["yoy_nation_revenue"] = """
     WITH yearly AS (
         SELECT n_name AS nation, year(l_shipdate) AS yr,
                CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
@@ -1720,7 +1718,7 @@ STAGED_ORACLES["yoy_nation_revenue"] = """
     FROM yearly
 """
 
-STAGED_ORACLES["part_return_ratio"] = """
+ORACLES["part_return_ratio"] = """
     WITH agg AS (
         SELECT p_brand,
                CAST(sum(CASE WHEN l_returnflag = 'R'
@@ -1736,7 +1734,7 @@ STAGED_ORACLES["part_return_ratio"] = """
     WHERE shipped_qty >= 10
 """
 
-STAGED_ORACLES["repeat_customer_years"] = """
+ORACLES["repeat_customer_years"] = """
     WITH cy AS (
         SELECT DISTINCT o_custkey, year(o_orderdate) AS yr FROM orders
     ),
@@ -1751,7 +1749,7 @@ STAGED_ORACLES["repeat_customer_years"] = """
     FROM flagged GROUP BY yr
 """
 
-STAGED_ORACLES["supplier_concentration_hhi"] = """
+ORACLES["supplier_concentration_hhi"] = """
     WITH per_supp AS (
         SELECT n_name AS nation, s_suppkey,
                CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
@@ -1849,9 +1847,9 @@ def _bpe_merges_sql(n_merges: int = 8) -> str:
     return sql
 
 
-STAGED_ORACLES["bpe_merges"] = _bpe_merges_sql(8)
+ORACLES["bpe_merges"] = _bpe_merges_sql(8)
 
-STAGED_ORACLES["corpus_rollup"] = """
+ORACLES["corpus_rollup"] = """
     SELECT coalesce(lang, 'ALL') AS lang,
            coalesce(source, 'ALL') AS source,
            count(*) AS n_docs,
@@ -1861,19 +1859,8 @@ STAGED_ORACLES["corpus_rollup"] = """
     GROUP BY ROLLUP (lang, source)
 """
 
-# ---------------------------------------------------------------------------
-# r6 promotion: every staged oracle moves into the registered set alongside
-# its query (queries.py r6 ORDERING CONTRACT). The staged queue is empty;
-# new oracles written mid-round go into STAGED_ORACLES first.
-# ---------------------------------------------------------------------------
-ORACLES.update(STAGED_ORACLES)
-STAGED_ORACLES = {}
 
-# ---------------------------------------------------------------------------
-# r7 staged oracles (queries.py r7 declaration queue).
-# ---------------------------------------------------------------------------
-
-STAGED_ORACLES["session_islands"] = """
+ORACLES["session_islands"] = """
     WITH e AS (
         SELECT user_id, event_id, epoch_us(ts) // 1000000 AS ts_s FROM events
     ),
@@ -1895,7 +1882,7 @@ STAGED_ORACLES["session_islands"] = """
     FROM numbered GROUP BY user_id, sess_no
 """
 
-STAGED_ORACLES["gap_fill_locf"] = """
+ORACLES["gap_fill_locf"] = """
     WITH daily AS (
         SELECT n_name AS nation,
                datediff('day', DATE '1995-01-01', CAST(l_shipdate AS DATE)) AS day_no,
@@ -1918,7 +1905,7 @@ STAGED_ORACLES["gap_fill_locf"] = """
     FROM cal c LEFT JOIN daily d ON c.nation = d.nation AND c.day_no = d.day_no
 """
 
-STAGED_ORACLES["inverted_index"] = """
+ORACLES["inverted_index"] = """
     WITH pairs AS (
         SELECT DISTINCT term, doc_id FROM (
             SELECT unnest(string_split(text, ' ')) AS term, doc_id FROM documents
@@ -1929,7 +1916,7 @@ STAGED_ORACLES["inverted_index"] = """
     FROM pairs GROUP BY term HAVING count(*) >= 10
 """
 
-STAGED_ORACLES["corpus_profile"] = """
+ORACLES["corpus_profile"] = """
     WITH n AS (SELECT count(*) AS n_rows FROM documents)
     SELECT column_name, n_rows, n_null, n_distinct FROM (
         SELECT 'doc_id' AS column_name, (SELECT n_rows FROM n) AS n_rows,
@@ -1952,7 +1939,7 @@ STAGED_ORACLES["corpus_profile"] = """
 
 # weighted_sample: mirrors q_weighted_sample's integer priority-sampling
 # rank exactly (16-bit-limb Knuth hash, 2^16 scale, floor division).
-STAGED_ORACLES["weighted_sample"] = """
+ORACLES["weighted_sample"] = """
     SELECT doc_id, lang, n_chars,
            (((((((doc_id % 4294967296) // 65536) * 2654435761) % 65536) * 65536
               + ((doc_id % 4294967296) % 65536) * 2654435761) % 4294967296)
@@ -1964,7 +1951,7 @@ STAGED_ORACLES["weighted_sample"] = """
 
 # triangle_count: id-oriented 3-way self-join — the orientation choice
 # (degree order in the operator, id order here) never changes the count.
-STAGED_ORACLES["triangle_count"] = """
+ORACLES["triangle_count"] = """
     WITH e AS MATERIALIZED (
         SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
         FROM lineitem a JOIN lineitem b
@@ -1975,7 +1962,7 @@ STAGED_ORACLES["triangle_count"] = """
               JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
 """
 
-STAGED_ORACLES["chunk_documents"] = """
+ORACLES["chunk_documents"] = """
     WITH toks AS (
         SELECT doc_id,
                list_filter(string_split(text, ' '), t -> len(t) > 0) AS ts
@@ -1993,11 +1980,8 @@ STAGED_ORACLES["chunk_documents"] = """
     FROM chunks WHERE len(chunk) > 0
 """
 
-# r6 late-window promotion twin (see queries.py).
-ORACLES.update(STAGED_ORACLES)
-STAGED_ORACLES = {}
 
-STAGED_ORACLES["sliding_distinct_users"] = """
+ORACLES["sliding_distinct_users"] = """
     WITH day_user AS (
         SELECT DISTINCT epoch_us(ts) // 86400000000 AS day, user_id
         FROM events
@@ -2007,17 +1991,15 @@ STAGED_ORACLES["sliding_distinct_users"] = """
     GROUP BY day + off
 """
 
-# promotion event 3 twin (see queries.py)
-ORACLES.update(STAGED_ORACLES)
-STAGED_ORACLES = {}
 
 # ---------------------------------------------------------------------------
-# r7 staged batch 1 twins (queries.py). Integer-only outputs; every SUM that
-# DuckDB would promote to HUGEINT is cast back to BIGINT (the r5 lesson,
-# enforced by tests/test_queries_oracle.py::test_oracle_types_spark_expressible).
+# Event analytics + corpus profiling twins. Integer-only outputs; every SUM
+# that DuckDB would promote to HUGEINT is cast back to BIGINT (the r5 lesson,
+# enforced by
+# tests/test_queries_oracle.py::test_oracle_types_spark_expressible).
 # ---------------------------------------------------------------------------
 
-STAGED_ORACLES["event_transitions"] = """
+ORACLES["event_transitions"] = """
     WITH s AS (
         SELECT event_type AS to_type,
                lag(event_type) OVER (
@@ -2030,7 +2012,7 @@ STAGED_ORACLES["event_transitions"] = """
     GROUP BY from_type, to_type
 """
 
-STAGED_ORACLES["top_event_paths"] = """
+ORACLES["top_event_paths"] = """
     WITH s AS (
         SELECT user_id, event_type,
                row_number() OVER (
@@ -2047,7 +2029,7 @@ STAGED_ORACLES["top_event_paths"] = """
     LIMIT 50
 """
 
-STAGED_ORACLES["vocab_coverage"] = """
+ORACLES["vocab_coverage"] = """
     WITH t AS (
         SELECT unnest(string_split(text, ' ')) AS term FROM documents
     ), c AS (
@@ -2064,7 +2046,7 @@ STAGED_ORACLES["vocab_coverage"] = """
     WHERE (cum - n) * 10 < total * 9
 """
 
-STAGED_ORACLES["ohlc_daily"] = """
+ORACLES["ohlc_daily"] = """
     WITH e AS (
         SELECT event_type,
                epoch_us(ts) // 86400000000 AS day,
@@ -2093,7 +2075,7 @@ STAGED_ORACLES["ohlc_daily"] = """
     FROM oc GROUP BY event_type, day
 """
 
-STAGED_ORACLES["source_length_histogram"] = """
+ORACLES["source_length_histogram"] = """
     SELECT source,
            length(bin(n_chars)) AS bucket,
            count(*) AS n_docs,
@@ -2102,7 +2084,7 @@ STAGED_ORACLES["source_length_histogram"] = """
     GROUP BY source, bucket
 """
 
-STAGED_ORACLES["lang_confusion"] = """
+ORACLES["lang_confusion"] = """
     WITH c AS (
         SELECT lang, string_split(text, ' ') AS w FROM documents
     ), n AS (
@@ -2125,13 +2107,8 @@ STAGED_ORACLES["lang_confusion"] = """
     FROM pred GROUP BY lang, lang_pred
 """
 
-# promotion event 4 twin (see queries.py)
-ORACLES.update(STAGED_ORACLES)
-STAGED_ORACLES = {}
 
-# r7 staged batch 2 twins.
-
-STAGED_ORACLES["customer_rfm"] = """
+ORACLES["customer_rfm"] = """
     WITH per_cust AS (
         SELECT o_custkey,
                max(epoch_us(o_orderdate) // 86400000000) AS last_day,
@@ -2154,7 +2131,7 @@ STAGED_ORACLES["customer_rfm"] = """
     FROM base
 """
 
-STAGED_ORACLES["user_streaks"] = """
+ORACLES["user_streaks"] = """
     WITH ud AS (
         SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day
         FROM events
@@ -2172,7 +2149,7 @@ STAGED_ORACLES["user_streaks"] = """
     FROM runs GROUP BY user_id
 """
 
-STAGED_ORACLES["order_fill_latency"] = """
+ORACLES["order_fill_latency"] = """
     SELECT o_orderpriority,
            (epoch_us(l_shipdate) // 86400000000
             - epoch_us(o_orderdate) // 86400000000) // 7 AS latency_weeks,
@@ -2181,7 +2158,7 @@ STAGED_ORACLES["order_fill_latency"] = """
     GROUP BY o_orderpriority, latency_weeks
 """
 
-STAGED_ORACLES["copurchase_lift"] = """
+ORACLES["copurchase_lift"] = """
     WITH op AS (
         SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
     ), n_orders_t AS (
@@ -2206,13 +2183,8 @@ STAGED_ORACLES["copurchase_lift"] = """
     LIMIT 50
 """
 
-# promotion event 5 twin (see queries.py)
-ORACLES.update(STAGED_ORACLES)
-STAGED_ORACLES = {}
 
-# r7 staged batch 3 twins.
-
-STAGED_ORACLES["first_touch_attribution"] = """
+ORACLES["first_touch_attribution"] = """
     WITH e AS (
         SELECT user_id, event_id, event_type,
                epoch_us(ts) AS ts_u,
@@ -2232,7 +2204,7 @@ STAGED_ORACLES["first_touch_attribution"] = """
     GROUP BY gap_days
 """
 
-STAGED_ORACLES["pareto_parts"] = """
+ORACLES["pareto_parts"] = """
     WITH base AS (
         SELECT p_partkey,
                CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price_c,
@@ -2251,7 +2223,7 @@ STAGED_ORACLES["pareto_parts"] = """
     WHERE best_cheaper_size IS NULL OR best_cheaper_size <= size
 """
 
-STAGED_ORACLES["brand_mode_returnflag"] = """
+ORACLES["brand_mode_returnflag"] = """
     WITH census AS (
         SELECT p_brand, l_returnflag, count(*) AS n
         FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -2267,13 +2239,8 @@ STAGED_ORACLES["brand_mode_returnflag"] = """
     FROM ranked WHERE rn = 1
 """
 
-# promotion event 6 twin (see queries.py)
-ORACLES.update(STAGED_ORACLES)
-STAGED_ORACLES = {}
 
-# r7 staged batch 4 twins.
-
-STAGED_ORACLES["median_order_value"] = """
+ORACLES["median_order_value"] = """
     WITH base AS (
         SELECT o_orderpriority, o_orderkey,
                CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price_c
@@ -2290,14 +2257,14 @@ STAGED_ORACLES["median_order_value"] = """
     FROM ranked WHERE rn = (n_orders + 1) // 2
 """
 
-STAGED_ORACLES["label_source_matrix"] = """
+ORACLES["label_source_matrix"] = """
     SELECT source, label, count(*) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS chars
     FROM embeddings JOIN documents ON vec_id = doc_id
     GROUP BY source, label
 """
 
-STAGED_ORACLES["seasonal_index"] = """
+ORACLES["seasonal_index"] = """
     WITH monthly AS (
         SELECT year(o_orderdate) AS yr, month(o_orderdate) AS mo,
                CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS rev_c
@@ -2310,7 +2277,7 @@ STAGED_ORACLES["seasonal_index"] = """
     FROM monthly JOIN yearly ON monthly.yr = yearly.yr
 """
 
-STAGED_ORACLES["error_rate_hours"] = """
+ORACLES["error_rate_hours"] = """
     WITH hours AS (
         SELECT epoch_us(ts) // 3600000000 AS hour_bin,
                count(*) AS n_events,
@@ -2322,13 +2289,8 @@ STAGED_ORACLES["error_rate_hours"] = """
     FROM hours WHERE (n_errors * 1000000) // n_events > 250000
 """
 
-# promotion event 7 twin (see queries.py)
-ORACLES.update(STAGED_ORACLES)
-STAGED_ORACLES = {}
 
-# r7 staged batch 5 twins.
-
-STAGED_ORACLES["degree_distribution"] = """
+ORACLES["degree_distribution"] = """
     WITH edges AS (
         SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
         FROM lineitem a JOIN lineitem b
@@ -2346,7 +2308,7 @@ STAGED_ORACLES["degree_distribution"] = """
     FROM deg GROUP BY degree_bucket
 """
 
-STAGED_ORACLES["gini_orders"] = """
+ORACLES["gini_orders"] = """
     WITH per_cust AS (
         SELECT o_custkey, count(*) AS x FROM orders GROUP BY o_custkey
     ), ranked AS (
@@ -2363,7 +2325,7 @@ STAGED_ORACLES["gini_orders"] = """
     FROM m
 """
 
-STAGED_ORACLES["interarrival_histogram"] = """
+ORACLES["interarrival_histogram"] = """
     WITH e AS (
         SELECT user_id, event_id, event_type,
                epoch_us(ts) // 1000000 AS ts_s
@@ -2380,13 +2342,8 @@ STAGED_ORACLES["interarrival_histogram"] = """
     GROUP BY event_type, gap_bucket
 """
 
-# promotion event 8 twin (see queries.py)
-ORACLES.update(STAGED_ORACLES)
-STAGED_ORACLES = {}
 
-# r7 staged batch 6 twins.
-
-STAGED_ORACLES["revenue_pareto_customers"] = """
+ORACLES["revenue_pareto_customers"] = """
     WITH per_cust AS (
         SELECT o_custkey,
                CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS rev_c
@@ -2407,7 +2364,7 @@ STAGED_ORACLES["revenue_pareto_customers"] = """
     GROUP BY n_customers, total_rev_c
 """
 
-STAGED_ORACLES["segment_status_matrix"] = """
+ORACLES["segment_status_matrix"] = """
     SELECT c_mktsegment, o_orderstatus,
            count(*) AS n_orders,
            CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS rev_c
@@ -2415,7 +2372,7 @@ STAGED_ORACLES["segment_status_matrix"] = """
     GROUP BY c_mktsegment, o_orderstatus
 """
 
-STAGED_ORACLES["negative_balance_exposure"] = """
+ORACLES["negative_balance_exposure"] = """
     WITH risky AS (
         SELECT c_custkey, c_nationkey FROM customer WHERE c_acctbal < 0
     ), open_orders AS (
@@ -2433,13 +2390,8 @@ STAGED_ORACLES["negative_balance_exposure"] = """
     GROUP BY n_name
 """
 
-# promotion event 9 twin (see queries.py)
-ORACLES.update(STAGED_ORACLES)
-STAGED_ORACLES = {}
 
-# r7 staged queue twins (verified, awaiting the r7 window rotation).
-
-STAGED_ORACLES["dow_hour_heatmap"] = """
+ORACLES["dow_hour_heatmap"] = """
     SELECT (epoch_us(ts) // 86400000000 + 4) % 7 AS dow,
            (epoch_us(ts) // 3600000000) % 24 AS hour,
            count(*) AS n_events,
@@ -2448,7 +2400,7 @@ STAGED_ORACLES["dow_hour_heatmap"] = """
     GROUP BY dow, hour
 """
 
-STAGED_ORACLES["first_event_census"] = """
+ORACLES["first_event_census"] = """
     WITH ranked AS (
         SELECT event_type,
                row_number() OVER (
@@ -2461,7 +2413,7 @@ STAGED_ORACLES["first_event_census"] = """
     GROUP BY event_type
 """
 
-STAGED_ORACLES["wau_dau_stickiness"] = """
+ORACLES["wau_dau_stickiness"] = """
     WITH day_user AS (
         SELECT DISTINCT epoch_us(ts) // 86400000000 AS day, user_id
         FROM events
@@ -2477,7 +2429,7 @@ STAGED_ORACLES["wau_dau_stickiness"] = """
     FROM dau JOIN wau ON dau.day = wau.day
 """
 
-STAGED_ORACLES["dedup_rate_by_source"] = """
+ORACLES["dedup_rate_by_source"] = """
     WITH fp AS (
         SELECT source,
                md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
@@ -2493,7 +2445,7 @@ STAGED_ORACLES["dedup_rate_by_source"] = """
     FROM agg
 """
 
-STAGED_ORACLES["supplier_lead_time_stats"] = """
+ORACLES["supplier_lead_time_stats"] = """
     WITH x AS (
         SELECT l_suppkey,
                epoch_us(l_shipdate) // 86400000000
@@ -2512,17 +2464,14 @@ STAGED_ORACLES["supplier_lead_time_stats"] = """
     FROM m
 """
 
-# Promotion event 10 twin (see queries.py — r7 window rotation).
-ORACLES.update(STAGED_ORACLES)
-STAGED_ORACLES = {}
 
 # ---------------------------------------------------------------------------
-# r8 staged queue twins. Integer-only / set-determined outputs; every SUM
-# DuckDB would promote to HUGEINT is cast back to BIGINT; rank()/row_number()
-# cast to INTEGER to match Spark's IntegerType.
+# Integer-only / set-determined outputs; every SUM DuckDB would promote to
+# HUGEINT is cast back to BIGINT; rank()/row_number() cast to INTEGER to match
+# Spark's IntegerType.
 # ---------------------------------------------------------------------------
 
-STAGED_ORACLES["topk_brand_parts_ties"] = """
+ORACLES["topk_brand_parts_ties"] = """
     WITH rev AS (
         SELECT p_brand, p_partkey,
                CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
@@ -2538,7 +2487,7 @@ STAGED_ORACLES["topk_brand_parts_ties"] = """
     SELECT p_brand, p_partkey, rev_c, rnk FROM ranked WHERE rnk <= 3
 """
 
-STAGED_ORACLES["quantity_quartiles"] = """
+ORACLES["quantity_quartiles"] = """
     WITH base AS (
         SELECT l_returnflag, CAST(floor(l_quantity) AS BIGINT) AS qty
         FROM lineitem
@@ -2555,7 +2504,7 @@ STAGED_ORACLES["quantity_quartiles"] = """
     FROM ranked GROUP BY l_returnflag
 """
 
-STAGED_ORACLES["session_funnel"] = """
+ORACLES["session_funnel"] = """
     WITH e AS (
         SELECT user_id, event_id, event_type,
                epoch_us(ts) // 1000000 AS ts_s
@@ -2584,7 +2533,7 @@ STAGED_ORACLES["session_funnel"] = """
     FROM sessions GROUP BY size_bucket
 """
 
-STAGED_ORACLES["brand_rank_shift_yoy"] = """
+ORACLES["brand_rank_shift_yoy"] = """
     WITH yearly AS (
         SELECT p_brand, year(l_shipdate) AS yr,
                CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
@@ -2603,7 +2552,7 @@ STAGED_ORACLES["brand_rank_shift_yoy"] = """
     FROM ranked
 """
 
-STAGED_ORACLES["source_overlap_matrix"] = """
+ORACLES["source_overlap_matrix"] = """
     WITH toks AS (
         SELECT source, string_split(text, ' ') AS w FROM documents
     ), sh AS (
@@ -2617,7 +2566,7 @@ STAGED_ORACLES["source_overlap_matrix"] = """
     GROUP BY src_a, src_b
 """
 
-STAGED_ORACLES["customer_order_gap_median"] = """
+ORACLES["customer_order_gap_median"] = """
     WITH o AS (
         SELECT o_custkey, o_orderkey,
                epoch_us(o_orderdate) // 86400000000 AS od
@@ -2643,19 +2592,13 @@ STAGED_ORACLES["customer_order_gap_median"] = """
 """
 
 
-# Promotion event 11 twin (see queries.py — r8 window rotation).
-ORACLES.update(STAGED_ORACLES)
-STAGED_ORACLES = {}
-
-
 # ---------------------------------------------------------------------------
-# r9 staged oracle twins (see queries.py r9 staged queue). All arithmetic is
-# integer (counts, cent-scaled revenue, basis-point shares with
-# positive-operand // division) so value hashes replay engine-exactly;
+# All arithmetic is integer (counts, cent-scaled revenue, basis-point shares
+# with positive-operand // division) so value hashes replay engine-exactly;
 # every SUM over BIGINT is cast back from HUGEINT.
 # ---------------------------------------------------------------------------
 
-STAGED_ORACLES["nation_yoy_order_growth"] = """
+ORACLES["nation_yoy_order_growth"] = """
     WITH yearly AS (
         SELECT n.n_name, year(o.o_orderdate) AS yr,
                count(*) AS orders_cnt
@@ -2671,7 +2614,7 @@ STAGED_ORACLES["nation_yoy_order_growth"] = """
     FROM yearly
 """
 
-STAGED_ORACLES["order_concurrency_peak"] = """
+ORACLES["order_concurrency_peak"] = """
     WITH closed AS (
         SELECT l_orderkey,
                max(epoch_us(l_shipdate) // 86400000000) AS close_day
@@ -2706,7 +2649,7 @@ STAGED_ORACLES["order_concurrency_peak"] = """
     FROM peaked WHERE open_orders = peak GROUP BY c_mktsegment
 """
 
-STAGED_ORACLES["nation_seat_apportionment"] = """
+ORACLES["nation_seat_apportionment"] = """
     WITH cnt AS (
         SELECT n.n_name, count(*) AS orders_cnt
         FROM orders o
@@ -2732,7 +2675,7 @@ STAGED_ORACLES["nation_seat_apportionment"] = """
     FROM ranked
 """
 
-STAGED_ORACLES["event_type_daily_share"] = """
+ORACLES["event_type_daily_share"] = """
     WITH per AS (
         SELECT CAST(ts AS DATE) AS day, event_type, count(*) AS cnt
         FROM events GROUP BY day, event_type
@@ -2743,7 +2686,7 @@ STAGED_ORACLES["event_type_daily_share"] = """
     FROM per
 """
 
-STAGED_ORACLES["repeat_purchase_rate"] = """
+ORACLES["repeat_purchase_rate"] = """
     WITH per_cust AS (
         SELECT o_custkey, count(*) AS n_orders FROM orders GROUP BY o_custkey
     ), by_nation AS (
@@ -2760,7 +2703,7 @@ STAGED_ORACLES["repeat_purchase_rate"] = """
     FROM by_nation
 """
 
-STAGED_ORACLES["brand_weighted_median_price"] = """
+ORACLES["brand_weighted_median_price"] = """
     WITH per_price AS (
         SELECT p.p_brand,
                CAST(floor(l.l_extendedprice * 100) AS BIGINT) AS price_c,
@@ -2784,7 +2727,7 @@ STAGED_ORACLES["brand_weighted_median_price"] = """
 # Gaps-and-islands: month_no minus a per-customer row_number is constant
 # within a consecutive-month run. row_number ties are impossible (months
 # are distinct per customer), so the island ids are deterministic.
-STAGED_ORACLES["customer_streak_census"] = """
+ORACLES["customer_streak_census"] = """
     WITH m AS (
         SELECT DISTINCT o_custkey,
                year(o_orderdate) * 12 + month(o_orderdate) AS mno
@@ -2811,7 +2754,7 @@ STAGED_ORACLES["customer_streak_census"] = """
 # times). The oracle uses the row-level row_number formulation — simplest
 # to trust; the engine's collapsed cumulative-threshold form selects the
 # same value because both are exact order statistics over one multiset.
-STAGED_ORACLES["brand_price_mad"] = """
+ORACLES["brand_price_mad"] = """
     WITH px AS (
         SELECT p.p_brand,
                CAST(floor(l.l_extendedprice * 100) AS BIGINT) AS price_c
@@ -2838,19 +2781,14 @@ STAGED_ORACLES["brand_price_mad"] = """
     WHERE r2.rk = (r2.n + 1) // 2
 """
 
-# Promotion event 12 (r9): the eight staged oracles above join ORACLES
-# alongside their queries (queries.py promotion event 12).
-ORACLES.update(STAGED_ORACLES)
-STAGED_ORACLES = {}
 
 # ---------------------------------------------------------------------------
-# r10 staged queue oracles (queries.py r10 staged block). Type discipline:
-# every count stays BIGINT, SUM(BIGINT) casts back from HUGEINT, ntile/
-# dense_rank/year-derived keys cast to INT to match Spark's column types
-# (the driver's value hash is type-sensitive).
+# Type discipline: every count stays BIGINT, SUM(BIGINT) casts back from
+# HUGEINT, ntile/dense_rank/year-derived keys cast to INT to match Spark's
+# column types (the driver's value hash is type-sensitive).
 # ---------------------------------------------------------------------------
 
-STAGED_ORACLES["clv_decile_migration"] = """
+ORACLES["clv_decile_migration"] = """
     WITH per AS (
         SELECT o_custkey, year(o_orderdate) AS yr,
                CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
@@ -2874,7 +2812,7 @@ STAGED_ORACLES["clv_decile_migration"] = """
     GROUP BY a.d, b.d
 """
 
-STAGED_ORACLES["new_parts_monthly_cumulative"] = """
+ORACLES["new_parts_monthly_cumulative"] = """
     WITH firsts AS (
         SELECT l_partkey,
                min(CAST(year(l_shipdate) * 100 + month(l_shipdate) AS INT))
@@ -2893,7 +2831,7 @@ STAGED_ORACLES["new_parts_monthly_cumulative"] = """
     FROM census
 """
 
-STAGED_ORACLES["nation_order_gaps"] = """
+ORACLES["nation_order_gaps"] = """
     WITH ok AS (
         SELECT o_custkey,
                CAST(year(o_orderdate) * 12 + month(o_orderdate) - 1 AS INT)
@@ -2924,7 +2862,7 @@ STAGED_ORACLES["nation_order_gaps"] = """
     GROUP BY n.n_name
 """
 
-STAGED_ORACLES["gap_trend_census"] = """
+ORACLES["gap_trend_census"] = """
     WITH gaps AS (
         SELECT o_custkey, o_orderdate, o_orderkey,
                epoch(o_orderdate) - lag(epoch(o_orderdate)) OVER (
@@ -2946,7 +2884,7 @@ STAGED_ORACLES["gap_trend_census"] = """
     GROUP BY trend
 """
 
-STAGED_ORACLES["nation_top_supplier_rank"] = """
+ORACLES["nation_top_supplier_rank"] = """
     WITH rev AS (
         SELECT l_suppkey,
                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -2971,7 +2909,7 @@ STAGED_ORACLES["nation_top_supplier_rank"] = """
     WHERE c.rn = 1
 """
 
-STAGED_ORACLES["unresolved_errors"] = """
+ORACLES["unresolved_errors"] = """
     WITH err AS (
         SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS et
         FROM events WHERE event_type = 'error'
@@ -2990,7 +2928,7 @@ STAGED_ORACLES["unresolved_errors"] = """
     FROM unresolved GROUP BY user_id
 """
 
-STAGED_ORACLES["lang_topk_with_other"] = """
+ORACLES["lang_topk_with_other"] = """
     WITH counts AS (
         SELECT source, lang, count(*) AS n_docs
         FROM documents GROUP BY source, lang
@@ -3009,7 +2947,7 @@ STAGED_ORACLES["lang_topk_with_other"] = """
     FROM ranked WHERE rk > 2 GROUP BY source
 """
 
-STAGED_ORACLES["winsorized_order_stats"] = """
+ORACLES["winsorized_order_stats"] = """
     WITH base AS (
         SELECT o_orderpriority,
                CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -3040,12 +2978,6 @@ STAGED_ORACLES["winsorized_order_stats"] = """
     FROM ranked r JOIN bounds b ON r.o_orderpriority = b.o_orderpriority
     GROUP BY r.o_orderpriority
 """
-
-
-# r10 promotion: the 8 staged oracles join the registry (their queries take
-# window slots 1-8; staged-green at sf0.001 + sf0.01 re-verified this round).
-ORACLES.update(STAGED_ORACLES)
-STAGED_ORACLES = {}
 
 
 # ---------------------------------------------------------------------------
@@ -3203,12 +3135,12 @@ ORACLES["cusum_changepoint"] = """
 
 
 # ---------------------------------------------------------------------------
-# r11 staged oracles (r12 window candidates): exact-integer-moment twins.
-# The double chains are written with the SAME op order as the Spark side
-# and avoid pow() (not correctly rounded across libms) — only sqrt/mul/div.
+# Exact-integer-moment twins. The double chains are written with the SAME op
+# order as the Spark side and avoid pow() (not correctly rounded across libms)
+# — only sqrt/mul/div.
 # ---------------------------------------------------------------------------
 
-STAGED_ORACLES["graph_assortativity"] = """
+ORACLES["graph_assortativity"] = """
     WITH edges AS (
         SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
         FROM lineitem a JOIN lineitem b
@@ -3239,7 +3171,7 @@ STAGED_ORACLES["graph_assortativity"] = """
     FROM m
 """
 
-STAGED_ORACLES["moment_profile"] = """
+ORACLES["moment_profile"] = """
     WITH base AS (
         SELECT l_returnflag,
                CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
@@ -3287,7 +3219,7 @@ STAGED_ORACLES["moment_profile"] = """
     FROM m
 """
 
-STAGED_ORACLES["basket_triples"] = """
+ORACLES["basket_triples"] = """
     -- chained pair->triple joins, NOT a 3-way a/b/c form: in the 3-way
     -- form b and c relate only through the inequality b.p < c.p, and the
     -- optimizer may join b x c first as a nested-loop cross (measured:
@@ -3306,7 +3238,7 @@ STAGED_ORACLES["basket_triples"] = """
     SELECT p1, p2, p3, support FROM triples WHERE support >= 2
 """
 
-STAGED_ORACLES["dispersion_index"] = """
+ORACLES["dispersion_index"] = """
     WITH per AS (
         SELECT event_type, CAST(ts AS DATE) AS d,
                CAST(extract(hour FROM ts) AS INTEGER) AS h,
@@ -3329,7 +3261,7 @@ STAGED_ORACLES["dispersion_index"] = """
     FROM m
 """
 
-STAGED_ORACLES["anova_weekday_revenue"] = """
+ORACLES["anova_weekday_revenue"] = """
     WITH day AS (
         SELECT CAST(o_orderdate AS DATE) AS day,
                CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100)
@@ -3361,21 +3293,15 @@ STAGED_ORACLES["anova_weekday_revenue"] = """
     FROM tot
 """
 
-# r12 promotion: the five staged analytics oracles above join the registry
-# (rotation contract — staged at r11 close, hash-green at sf0.001 + sf0.01
-# via check_queries --staged, promoted into the r12 window head).
-ORACLES.update(STAGED_ORACLES)
-
 
 # ---------------------------------------------------------------------------
-# r12 staged oracles (r13 window candidates): rank-test / independence /
-# order-statistic twins. Doubled tied ranks (2R always integer), per-cell
-# integer-division chi-square ppm, k-th-smallest quantiles — HUGEINT exact
-# everywhere; the one double chain (Spearman) uses the same op order as the
-# Spark side, mul/div/sqrt only.
+# Rank-test / independence / order-statistic twins. Doubled tied ranks (2R
+# always integer), per-cell integer-division chi-square ppm, k-th-smallest
+# quantiles — HUGEINT exact everywhere; the one double chain (Spearman) uses
+# the same op order as the Spark side, mul/div/sqrt only.
 # ---------------------------------------------------------------------------
 
-STAGED_ORACLES["mannwhitney_price_priority"] = """
+ORACLES["mannwhitney_price_priority"] = """
     WITH base AS (
         SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
                    AS price_c,
@@ -3411,7 +3337,7 @@ STAGED_ORACLES["mannwhitney_price_priority"] = """
     FROM agg
 """
 
-STAGED_ORACLES["spearman_qty_price"] = """
+ORACLES["spearman_qty_price"] = """
     WITH li AS (
         SELECT CAST(l_quantity AS BIGINT) AS q,
                CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -3449,7 +3375,7 @@ STAGED_ORACLES["spearman_qty_price"] = """
     FROM m
 """
 
-STAGED_ORACLES["chi2_brand_returnflag"] = """
+ORACLES["chi2_brand_returnflag"] = """
     WITH cells AS (
         SELECT p_brand, l_returnflag, count(*) AS o
         FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -3479,7 +3405,7 @@ STAGED_ORACLES["chi2_brand_returnflag"] = """
     FROM j
 """
 
-STAGED_ORACLES["p90_interarrival_exact"] = """
+ORACLES["p90_interarrival_exact"] = """
     WITH g AS (
         SELECT event_type,
                CAST(epoch_us(ts)
@@ -3509,7 +3435,7 @@ STAGED_ORACLES["p90_interarrival_exact"] = """
     GROUP BY event_type
 """
 
-STAGED_ORACLES["runs_test_daily_revenue"] = """
+ORACLES["runs_test_daily_revenue"] = """
     WITH day AS (
         SELECT CAST(date_diff('day', DATE '1990-01-01',
                               CAST(o_orderdate AS DATE)) AS BIGINT) AS di,
@@ -3539,20 +3465,14 @@ STAGED_ORACLES["runs_test_daily_revenue"] = """
     FROM pairs
 """
 
-# r12 continuation promotion: the five staged rank/stats oracles above join
-# the registry (rotation contract — staged at r12 close, re-verified
-# hash-green at sf0.001 + sf0.01 via check_queries --staged before
-# promotion into the r12 continuation window head).
-ORACLES.update(STAGED_ORACLES)
 
 # ---------------------------------------------------------------------------
-# r12-continuation staged batch (r13 candidates) — mirrors of the five
-# STAGED_QUERIES appended at the end of queries.py. HUGEINT everywhere the
-# Spark side holds DECIMAL(38,0); each double chain copies the Spark
-# expression tree verbatim (same parenthesization, one round(..., 6)).
+# Kendall / Mann-Kendall / Gini / cross-correlation / z-test twins. HUGEINT
+# everywhere the Spark side holds DECIMAL(38,0); each double chain copies the
+# Spark expression tree verbatim (same parenthesization, one round(..., 6)).
 # ---------------------------------------------------------------------------
 
-STAGED_ORACLES["kendall_tau_qty_size"] = """
+ORACLES["kendall_tau_qty_size"] = """
     WITH cells AS (
         SELECT CAST(l_quantity AS BIGINT) AS q,
                CAST(p_size AS BIGINT) AS s,
@@ -3587,7 +3507,7 @@ STAGED_ORACLES["kendall_tau_qty_size"] = """
     FROM cd, tq, ts
 """
 
-STAGED_ORACLES["mann_kendall_daily_revenue"] = """
+ORACLES["mann_kendall_daily_revenue"] = """
     WITH day AS (
         SELECT CAST(datediff('day', DATE '1990-01-01',
                              CAST(o_orderdate AS DATE)) AS BIGINT) AS di,
@@ -3617,7 +3537,7 @@ STAGED_ORACLES["mann_kendall_daily_revenue"] = """
     FROM s, ties
 """
 
-STAGED_ORACLES["gini_by_nation"] = """
+ORACLES["gini_by_nation"] = """
     WITH cust AS (
         SELECT o_custkey,
                CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -3646,7 +3566,7 @@ STAGED_ORACLES["gini_by_nation"] = """
     FROM per JOIN nation ON nk = n_nationkey
 """
 
-STAGED_ORACLES["xcorr_segments_lag7"] = """
+ORACLES["xcorr_segments_lag7"] = """
     WITH day AS (
         SELECT CAST(datediff('day', DATE '1990-01-01',
                              CAST(o_orderdate AS DATE)) AS BIGINT) AS di,
@@ -3678,7 +3598,7 @@ STAGED_ORACLES["xcorr_segments_lag7"] = """
     FROM mo
 """
 
-STAGED_ORACLES["ztest_promo_return_rate"] = """
+ORACLES["ztest_promo_return_rate"] = """
     WITH m AS (
         SELECT CAST(sum(g) AS BIGINT) AS n1,
                CAST(sum(g * r) AS BIGINT) AS x1,
@@ -3705,13 +3625,13 @@ STAGED_ORACLES["ztest_promo_return_rate"] = """
 """
 
 # ---------------------------------------------------------------------------
-# r12-continuation staged batch #2 (r13/r14 candidates) — mirrors of the six
-# STAGED_QUERIES at the end of queries.py. HUGEINT everywhere the Spark side
-# holds DECIMAL(38,0); every double chain copies the Spark expression tree
-# verbatim (same parenthesization, one round(..., 6) per emitted double).
+# Theil-Sen / kappa / divergence / Zipf / PSI / entropy twins. HUGEINT
+# everywhere the Spark side holds DECIMAL(38,0); every double chain copies the
+# Spark expression tree verbatim (same parenthesization, one round(..., 6) per
+# emitted double).
 # ---------------------------------------------------------------------------
 
-STAGED_ORACLES["theilsen_daily_revenue"] = """
+ORACLES["theilsen_daily_revenue"] = """
     WITH daily AS (
         SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1995-01-01' AS BIGINT)
                    AS t,
@@ -3733,7 +3653,7 @@ STAGED_ORACLES["theilsen_daily_revenue"] = """
     FROM m
 """
 
-STAGED_ORACLES["kappa_priority_return"] = """
+ORACLES["kappa_priority_return"] = """
     WITH j AS (
         SELECT CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                     THEN 1 ELSE 0 END AS x,
@@ -3769,7 +3689,7 @@ STAGED_ORACLES["kappa_priority_return"] = """
     FROM m
 """
 
-STAGED_ORACLES["js_divergence_sources"] = """
+ORACLES["js_divergence_sources"] = """
     WITH c AS (
         SELECT source, lang, CAST(count(*) AS BIGINT) AS cnt
         FROM documents GROUP BY source, lang
@@ -3801,7 +3721,7 @@ STAGED_ORACLES["js_divergence_sources"] = """
     GROUP BY a.source, b.source
 """
 
-STAGED_ORACLES["zipf_slope_vocab"] = """
+ORACLES["zipf_slope_vocab"] = """
     WITH tok AS (
         SELECT unnest(string_split(text, ' ')) AS token FROM documents
     ), cnt AS (
@@ -3828,7 +3748,7 @@ STAGED_ORACLES["zipf_slope_vocab"] = """
     FROM m
 """
 
-STAGED_ORACLES["psi_price_drift"] = """
+ORACLES["psi_price_drift"] = """
     WITH o AS (
         SELECT year(o_orderdate) AS yr,
                CAST(length(bin(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -3856,7 +3776,7 @@ STAGED_ORACLES["psi_price_drift"] = """
     FROM census CROSS JOIN tot
 """
 
-STAGED_ORACLES["entropy_by_source"] = """
+ORACLES["entropy_by_source"] = """
     WITH c AS (
         SELECT source, lang, CAST(count(*) AS BIGINT) AS k
         FROM documents GROUP BY source, lang
@@ -3875,10 +3795,3 @@ STAGED_ORACLES["entropy_by_source"] = """
     FROM c JOIN ns ON c.source = ns.source
     GROUP BY c.source
 """
-
-
-# r13 promotion: the staged rank/stats/divergence batch registers with the
-# r13 window head (queries.py tail); the staged dict resets for the next
-# batch.
-ORACLES.update(STAGED_ORACLES)
-STAGED_ORACLES = {}

@@ -149,25 +149,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     if cache_on:
         stale = _TABLE_MEMO.get((sf_dir, name))
-        if os.environ.get("SPARK_GRAFT_CACHE_MODE", "persist") == "ckpt":
-            # Opt-in localCheckpoint memo (r13's default, REVERTED r14):
-            # a LogicalRDD leaf canonicalizes stably where InMemoryRelation
-            # breaks Catalyst exchange reuse (measured r13: ReusedExchange
-            # 5 -> 0 under persist on cusum_changepoint; suite jobs
-            # 1006 -> 754). But the job-count win never showed up in the
-            # driver's walls, and the r13 driver run measured the ckpt
-            # memo's row-oriented deserialized blocks as the common device
-            # under a 32-core anti-scaling family (khop_trade_graph
-            # 3.8 -> 28.8 s, brand_supplier_counts 1.1 -> 9.1 s on a
-            # contended host; the SAME code read 2.6 s / 0.9 s at 8
-            # cores). A cold-JVM load-16 A/B on the builder host
-            # (tools/coldq_cachemode_load16.json) measured the two modes
-            # as a wash, so the columnar persist — driver-healthy for two
-            # consecutive rounds — is the default again; ckpt stays as an
-            # opt-in for single-process job-floor studies.
-            df = df.localCheckpoint(eager=True)
-        else:
-            df = df.persist()
+        # Columnar persist, not localCheckpoint: the r13 ckpt memo kept
+        # Catalyst exchange reuse but its row-oriented blocks were the common
+        # device under a 32-core anti-scaling family, and a cold-JVM load-16
+        # A/B (tools/coldq_cachemode_load16.json) measured the two as a wash.
+        df = df.persist()
         _TABLE_MEMO[(sf_dir, name)] = (spark, df)
         if stale is not None and stale[0] is not spark:
             # overwrite from a NEWER session: release the old session's

@@ -219,12 +219,9 @@ def test_cluster_conf_checkpoint_dir():
     assert conf["spark.numaflow_spark.checkpoint.dir"] == "hdfs://nn/ckpt"
 
 
-def test_cooccurrence_pairs_matches_self_join(spark, monkeypatch):
-    """BOTH edge-build formulations (self-join default and set-expansion
-    via SPARK_GRAFT_COOC_IMPL=set) are pair-for-pair identical to the raw
-    reference self-join, including multi-line duplicate collapse — the
-    invariant that lets the default flip on measurement alone (see the
-    operator docstring's sf0.1/sf1 A/B table)."""
+def test_cooccurrence_pairs_matches_self_join(spark):
+    """The edge build is pair-for-pair identical to the raw reference
+    self-join, including multi-line duplicate collapse."""
     from numaflow_spark.operators.graph import cooccurrence_pairs
 
     rows = [
@@ -234,15 +231,9 @@ def test_cooccurrence_pairs_matches_self_join(spark, monkeypatch):
         (4, 7), (4, 3),                        # unsorted input
     ]
     df = spark.createDataFrame(rows, "g long, item long")
-    got_by_impl = {}
-    for impl in ("join", "set"):
-        monkeypatch.setenv("SPARK_GRAFT_COOC_IMPL", impl)
-        got_by_impl[impl] = sorted(
-            tuple(r) for r in cooccurrence_pairs(df, "g", "item").collect()
-        )
-    monkeypatch.delenv("SPARK_GRAFT_COOC_IMPL")
-    assert got_by_impl["join"] == got_by_impl["set"]
-    got = got_by_impl["join"]
+    got = sorted(
+        tuple(r) for r in cooccurrence_pairs(df, "g", "item").collect()
+    )
     a, b = df.alias("a"), df.alias("b")
     want = sorted(
         tuple(r)

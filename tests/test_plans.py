@@ -486,21 +486,10 @@ def test_khop_frontier_rounds_no_collect_no_cartesian(spark, monkeypatch):
     assert {r.node: r.dist for r in df.collect()} == {1: 0, 2: 1, 3: 2}
 
 
-def staged_plan_of(spark, name: str) -> str:
-    # staged queries promote into QUERIES once certified; resolve either way
-    from numaflow_spark.queries import STAGED_QUERIES
-
-    fn = STAGED_QUERIES.get(name) or QUERIES[name]
-    with lazy_plans():
-        df = fn(spark, SF)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return df._jdf.queryExecution().explainString(mode)
-
-
 def test_chunk_documents_shuffle_free_jvm_only(spark):
     """Chunking must be a free rider on the ingest scan: zero exchanges,
     zero Python stages — pure row-local array math in codegen."""
-    plan = staged_plan_of(spark, "chunk_documents")
+    plan = plan_of(spark, "chunk_documents")
     assert nodes(plan, "Exchange") == 0
     assert not re.search(r"EvalPython|MapInPandas", plan)
 
@@ -508,16 +497,16 @@ def test_chunk_documents_shuffle_free_jvm_only(spark):
 def test_session_islands_single_exchange(spark):
     """lag + running sum + session groupBy all ride ONE user_id hash
     partitioning: exactly one exchange in the whole plan."""
-    plan = staged_plan_of(spark, "session_islands")
+    plan = plan_of(spark, "session_islands")
     assert nodes(plan, "Exchange") == 1, plan
 
 
 def test_triangle_count_no_cartesian_no_python(spark):
     """r8: the co-purchase edge build is back to the self-join formulation
-    (the sf1 A/B in tools/ab_cooc.py measured it 25-30% faster at x10 than
-    the r7 set-expansion, wash at sf0.1) — sort-merge joins are expected;
+    (an sf1 A/B measured it 25-30% faster at x10 than the r7
+    set-expansion, wash at sf0.1) — sort-merge joins are expected;
     what must NEVER appear is a cartesian product or a Python stage."""
-    plan = staged_plan_of(spark, "triangle_count")
+    plan = plan_of(spark, "triangle_count")
     assert nodes(plan, "CartesianProduct") == 0
     assert not re.search(r"EvalPython|MapInPandas", plan)
 
@@ -527,7 +516,7 @@ def test_basket_pairs_edge_build_bounded(spark):
     — the measured price of the formulation that wins at x10 (see
     cooccurrence_pairs docstring). Pin what scale depends on: bounded
     scans, no cartesian product, no Python stage."""
-    plan = staged_plan_of(spark, "basket_pairs")
+    plan = plan_of(spark, "basket_pairs")
     assert len(re.findall(r"\(\d+\) Scan ", plan)) <= 2
     assert nodes(plan, "CartesianProduct") == 0
     assert not re.search(r"EvalPython|MapInPandas", plan)
@@ -536,14 +525,14 @@ def test_basket_pairs_edge_build_bounded(spark):
 def test_weighted_sample_is_heap_take(spark):
     """Bottom-k by rank must be TakeOrderedAndProject (distributed heap),
     never a global sort."""
-    plan = staged_plan_of(spark, "weighted_sample")
+    plan = plan_of(spark, "weighted_sample")
     assert nodes(plan, "TakeOrderedAndProject") == 1
     assert nodes(plan, "Exchange") <= 1  # the take's singlePartition gather
     assert not re.search(r"\(\d+\) Sort\b", plan) or True  # heap take subsumes
 
 
 def test_gap_fill_locf_no_python_no_cartesian(spark):
-    plan = staged_plan_of(spark, "gap_fill_locf")
+    plan = plan_of(spark, "gap_fill_locf")
     assert nodes(plan, "CartesianProduct") == 0
     assert not re.search(r"EvalPython|MapInPandas", plan)
 
@@ -552,7 +541,7 @@ def test_gap_fill_locf_single_rollup_no_calendar_join(spark):
     """r13 wave-6: LOCF is generated by lead()+sequence() explode — the
     calendar left-join is gone, so the daily rollup is planned ONCE (one
     lineitem scan) and no join beyond the two dim broadcasts remains."""
-    plan = staged_plan_of(spark, "gap_fill_locf")
+    plan = plan_of(spark, "gap_fill_locf")
     # exactly lineitem + the two dim scans — the rollup is not re-planned
     assert nodes(plan, "Scan parquet") == 3
     assert nodes(plan, "SortMergeJoin") == 0
@@ -579,7 +568,7 @@ def test_min_cost_supplier_single_cost_subtree(spark):
 def test_event_transitions_single_exchange(spark):
     """lag window + 5x5 transition groupBy: the window's user_id hash
     partitioning is the only exchange before the tiny final agg gather."""
-    plan = staged_plan_of(spark, "event_transitions")
+    plan = plan_of(spark, "event_transitions")
     assert nodes(plan, "CartesianProduct") == 0
     assert not re.search(r"EvalPython|MapInPandas", plan)
     assert nodes(plan, "HashAggregate") >= 2  # partial + final on transitions
@@ -588,7 +577,7 @@ def test_event_transitions_single_exchange(spark):
 def test_top_event_paths_heap_take(spark):
     """The top-50 must be a distributed heap take, and the row_number
     window + per-user path groupBy share one user_id partitioning."""
-    plan = staged_plan_of(spark, "top_event_paths")
+    plan = plan_of(spark, "top_event_paths")
     assert nodes(plan, "TakeOrderedAndProject") == 1
     assert not re.search(r"EvalPython|MapInPandas", plan)
 
@@ -600,7 +589,7 @@ def test_vocab_coverage_window_on_collapsed_vocab(spark):
     id (no single-partition sort); the 1-row total joins as broadcast."""
     from tools.window_audit import unpartitioned_windows
 
-    plan = staged_plan_of(spark, "vocab_coverage")
+    plan = plan_of(spark, "vocab_coverage")
     assert nodes(plan, "Window") >= 1
     assert unpartitioned_windows(plan) == 0
     assert plan.index("Window") < plan.index("Generate")  # tree op order
@@ -613,7 +602,7 @@ def test_ohlc_daily_one_shuffle_window_shares_partitioning(spark):
     """Candlestick downsample: the open/close window and the final
     aggregate share ONE (type, day) hash partitioning — exactly one
     exchange, no packed tiebreak keys, no Python."""
-    plan = staged_plan_of(spark, "ohlc_daily")
+    plan = plan_of(spark, "ohlc_daily")
     assert nodes(plan, "Exchange") == 1
     assert nodes(plan, "Window") == 1
     assert not re.search(r"EvalPython|MapInPandas", plan)
@@ -622,7 +611,7 @@ def test_ohlc_daily_one_shuffle_window_shares_partitioning(spark):
 def test_source_length_histogram_rowlocal(spark):
     """Power-of-two bucketing is row-local codegen: one exchange for the
     (source, bucket) groupBy, no Python, no join."""
-    plan = staged_plan_of(spark, "source_length_histogram")
+    plan = plan_of(spark, "source_length_histogram")
     assert nodes(plan, "Exchange") == 1
     assert nodes(plan, "SortMergeJoin") + nodes(plan, "BroadcastHashJoin") == 0
     assert not re.search(r"EvalPython|MapInPandas", plan)
@@ -631,7 +620,7 @@ def test_source_length_histogram_rowlocal(spark):
 def test_lang_confusion_rowlocal_case_ladder(spark):
     """The marker CASE ladder stays in codegen: one exchange for the 5x5
     confusion groupBy, zero Python stages."""
-    plan = staged_plan_of(spark, "lang_confusion")
+    plan = plan_of(spark, "lang_confusion")
     assert nodes(plan, "Exchange") == 1
     assert not re.search(r"EvalPython|MapInPandas", plan)
 
@@ -643,7 +632,7 @@ def test_customer_rfm_windows_on_collapsed_customers(spark):
     and total-count join as 1-row broadcasts, no Python."""
     from tools.window_audit import unpartitioned_windows
 
-    plan = staged_plan_of(spark, "customer_rfm")
+    plan = plan_of(spark, "customer_rfm")
     assert nodes(plan, "Window") == 3
     assert unpartitioned_windows(plan) == 0
     assert nodes(plan, "BroadcastNestedLoopJoin") >= 1
@@ -653,7 +642,7 @@ def test_customer_rfm_windows_on_collapsed_customers(spark):
 def test_user_streaks_islands_share_partitioning(spark):
     """distinct (user, day) is the only corpus-sized shuffle; the island
     window and both per-user aggregates ride the same user_id hash."""
-    plan = staged_plan_of(spark, "user_streaks")
+    plan = plan_of(spark, "user_streaks")
     assert nodes(plan, "CartesianProduct") == 0
     assert not re.search(r"EvalPython|MapInPandas", plan)
     assert nodes(plan, "Exchange") <= 3
@@ -662,7 +651,7 @@ def test_user_streaks_islands_share_partitioning(spark):
 def test_order_fill_latency_pruned_join(spark):
     """Both join sides pre-project to two columns: the scans read only
     orderkey/priority/dates, and the census agg is partial+final."""
-    plan = staged_plan_of(spark, "order_fill_latency")
+    plan = plan_of(spark, "order_fill_latency")
     assert "o_totalprice" not in plan and "l_extendedprice" not in plan
     assert nodes(plan, "HashAggregate") == 2
     assert not re.search(r"EvalPython|MapInPandas", plan)
@@ -672,7 +661,7 @@ def test_copurchase_lift_broadcast_enrich_heap_take(spark):
     """The singles/n_orders enrichment joins broadcast; the top-50 is a
     distributed heap take, never a global sort; no cartesian beyond the
     1-row n_orders broadcast."""
-    plan = staged_plan_of(spark, "copurchase_lift")
+    plan = plan_of(spark, "copurchase_lift")
     assert nodes(plan, "BroadcastHashJoin") >= 2
     assert nodes(plan, "TakeOrderedAndProject") == 1
     assert nodes(plan, "CartesianProduct") == 0
@@ -682,7 +671,7 @@ def test_copurchase_lift_broadcast_enrich_heap_take(spark):
 def test_first_touch_attribution_single_user_exchange(spark):
     """The carried-forward click window and the purchase filter ride one
     user_id partitioning; histogram agg is partial+final; no Python."""
-    plan = staged_plan_of(spark, "first_touch_attribution")
+    plan = plan_of(spark, "first_touch_attribution")
     assert nodes(plan, "Window") == 1
     assert nodes(plan, "HashAggregate") == 2
     assert not re.search(r"EvalPython|MapInPandas", plan)
@@ -696,7 +685,7 @@ def test_pareto_parts_no_self_join(spark):
     or cartesian; the only joins are the tiny broadcast prefixes)."""
     from tools.window_audit import unpartitioned_windows
 
-    plan = staged_plan_of(spark, "pareto_parts")
+    plan = plan_of(spark, "pareto_parts")
     assert nodes(plan, "Window") == 1
     assert unpartitioned_windows(plan) == 0
     for j in ("SortMergeJoin", "CartesianProduct", "ShuffledHashJoin"):
@@ -707,7 +696,7 @@ def test_pareto_parts_no_self_join(spark):
 def test_brand_mode_broadcast_dim(spark):
     """The part dimension broadcasts into the fact scan; the rank window
     runs on the tiny (brand, mode) census."""
-    plan = staged_plan_of(spark, "brand_mode_returnflag")
+    plan = plan_of(spark, "brand_mode_returnflag")
     assert nodes(plan, "BroadcastHashJoin") == 1
     assert nodes(plan, "Window") == 1
     assert not re.search(r"EvalPython|MapInPandas", plan)
@@ -716,7 +705,7 @@ def test_brand_mode_broadcast_dim(spark):
 def test_median_order_value_one_partitioning(spark):
     """Both windows (rank + group size) share the priority partitioning:
     one exchange, one sort, no join, no Python."""
-    plan = staged_plan_of(spark, "median_order_value")
+    plan = plan_of(spark, "median_order_value")
     assert nodes(plan, "Window") <= 2
     assert nodes(plan, "Exchange") == 1
     assert not re.search(r"EvalPython|MapInPandas", plan)
@@ -725,7 +714,7 @@ def test_median_order_value_one_partitioning(spark):
 def test_label_source_matrix_keyed_join(spark):
     """Cross-modality join is a keyed equi-join (no cartesian, no
     Python); the count matrix agg is partial+final."""
-    plan = staged_plan_of(spark, "label_source_matrix")
+    plan = plan_of(spark, "label_source_matrix")
     assert nodes(plan, "CartesianProduct") == 0
     assert nodes(plan, "HashAggregate") == 2
     assert not re.search(r"EvalPython|MapInPandas", plan)
@@ -734,7 +723,7 @@ def test_label_source_matrix_keyed_join(spark):
 def test_seasonal_index_broadcast_year_totals(spark):
     """Year totals join back as a broadcast; the month rollup is the
     only fact-sized shuffle."""
-    plan = staged_plan_of(spark, "seasonal_index")
+    plan = plan_of(spark, "seasonal_index")
     assert nodes(plan, "BroadcastHashJoin") == 1
     assert nodes(plan, "CartesianProduct") == 0
     assert not re.search(r"EvalPython|MapInPandas", plan)
@@ -743,14 +732,14 @@ def test_seasonal_index_broadcast_year_totals(spark):
 def test_error_rate_hours_single_groupby(spark):
     """Rate alert = one conditional-sum groupBy over hour bins: one
     exchange, partial+final agg, row-local ppm filter."""
-    plan = staged_plan_of(spark, "error_rate_hours")
+    plan = plan_of(spark, "error_rate_hours")
     assert nodes(plan, "Exchange") == 1
     assert nodes(plan, "HashAggregate") == 2
     assert not re.search(r"EvalPython|MapInPandas", plan)
 
 
 def test_degree_distribution_no_cartesian(spark):
-    plan = staged_plan_of(spark, "degree_distribution")
+    plan = plan_of(spark, "degree_distribution")
     assert nodes(plan, "CartesianProduct") == 0
     assert nodes(plan, "SortMergeJoin") == 0  # r7 cooccurrence edge build
     assert not re.search(r"EvalPython|MapInPandas", plan)
@@ -760,31 +749,20 @@ def test_gini_rank_window_on_collapsed_customers(spark):
     """r10/r12: the rank is the two-phase distributed form — the local
     row_number window is PARTITIONED (by the range-partition id, never a
     single-partition sort) and no cartesian or Python stage appears. The
-    prefix offsets are literal map lookups by default (r12 job-floor
-    lever: zero joins); under SPARK_GRAFT_LITERAL_OFFSETS=0 the
-    broadcast-triangle path must still plan its offsets join."""
-    import os
-
+    prefix offsets are literal map lookups (r12 job-floor lever)."""
     from tools.window_audit import unpartitioned_windows
 
-    plan = staged_plan_of(spark, "gini_orders")
+    plan = plan_of(spark, "gini_orders")
     assert nodes(plan, "Window") >= 1
     assert unpartitioned_windows(plan) == 0
     assert nodes(plan, "CartesianProduct") == 0
     assert not re.search(r"EvalPython|MapInPandas", plan)
-    os.environ["SPARK_GRAFT_LITERAL_OFFSETS"] = "0"
-    try:
-        tri = staged_plan_of(spark, "gini_orders")
-    finally:
-        os.environ.pop("SPARK_GRAFT_LITERAL_OFFSETS")
-    assert nodes(tri, "BroadcastHashJoin") >= 1  # prefix offsets (triangle)
-    assert unpartitioned_windows(tri) == 0
 
 
 def test_interarrival_histogram_single_user_exchange(spark):
     """lag window + (type, bucket) census: the user_id hash is the only
     fact-sized exchange; census agg is partial+final."""
-    plan = staged_plan_of(spark, "interarrival_histogram")
+    plan = plan_of(spark, "interarrival_histogram")
     assert nodes(plan, "Window") == 1
     assert nodes(plan, "HashAggregate") == 2
     assert not re.search(r"EvalPython|MapInPandas", plan)
@@ -796,7 +774,7 @@ def test_revenue_pareto_window_on_collapsed_customers(spark):
     prefix sums; the 1-row total joins as broadcast."""
     from tools.window_audit import unpartitioned_windows
 
-    plan = staged_plan_of(spark, "revenue_pareto_customers")
+    plan = plan_of(spark, "revenue_pareto_customers")
     assert nodes(plan, "Window") == 1
     assert unpartitioned_windows(plan) == 0
     # 1-row total + the <=P-row prefix triangle (a "<" join) both BNLJ
@@ -805,7 +783,7 @@ def test_revenue_pareto_window_on_collapsed_customers(spark):
 
 
 def test_segment_status_matrix_broadcast_dim(spark):
-    plan = staged_plan_of(spark, "segment_status_matrix")
+    plan = plan_of(spark, "segment_status_matrix")
     assert nodes(plan, "BroadcastHashJoin") == 1
     assert nodes(plan, "HashAggregate") == 2
     assert not re.search(r"EvalPython|MapInPandas", plan)
@@ -814,7 +792,7 @@ def test_segment_status_matrix_broadcast_dim(spark):
 def test_negative_balance_filters_reach_scans(spark):
     """Both predicates (acctbal < 0, status = 'O') push to their parquet
     scans; the dim joins broadcast."""
-    plan = staged_plan_of(spark, "negative_balance_exposure")
+    plan = plan_of(spark, "negative_balance_exposure")
     pushed = plan.split("PushedFilters:")
     joined = "|".join(p.split("\n")[0] for p in pushed[1:])
     assert "c_acctbal" in joined and "o_orderstatus" in joined
@@ -825,14 +803,14 @@ def test_negative_balance_filters_reach_scans(spark):
 def test_dow_hour_heatmap_rowlocal_census(spark):
     """Integer dow/hour bucketing is row-local codegen feeding one tiny
     7x24 groupBy: one exchange, partial+final agg, no Python."""
-    plan = staged_plan_of(spark, "dow_hour_heatmap")
+    plan = plan_of(spark, "dow_hour_heatmap")
     assert nodes(plan, "Exchange") == 1
     assert nodes(plan, "HashAggregate") == 2
     assert not re.search(r"EvalPython|MapInPandas", plan)
 
 
 def test_first_event_census_single_user_exchange(spark):
-    plan = staged_plan_of(spark, "first_event_census")
+    plan = plan_of(spark, "first_event_census")
     assert nodes(plan, "Window") == 1
     assert not re.search(r"EvalPython|MapInPandas", plan)
 
@@ -840,13 +818,13 @@ def test_first_event_census_single_user_exchange(spark):
 def test_wau_dau_day_keyed_join(spark):
     """Both sides collapse to per-day aggregates before the join: no
     cartesian, no Python, the join keys on day."""
-    plan = staged_plan_of(spark, "wau_dau_stickiness")
+    plan = plan_of(spark, "wau_dau_stickiness")
     assert nodes(plan, "CartesianProduct") == 0
     assert not re.search(r"EvalPython|MapInPandas", plan)
 
 
 def test_dedup_rate_one_fingerprint_shuffle(spark):
-    plan = staged_plan_of(spark, "dedup_rate_by_source")
+    plan = plan_of(spark, "dedup_rate_by_source")
     assert nodes(plan, "CartesianProduct") == 0
     assert not re.search(r"EvalPython|MapInPandas", plan)
 
@@ -854,7 +832,7 @@ def test_dedup_rate_one_fingerprint_shuffle(spark):
 def test_lead_time_stats_partial_moments(spark):
     """The moment sums (n, s1, s2) combine map-side: partial+final agg
     above the orderkey join, no Python, no cartesian."""
-    plan = staged_plan_of(spark, "supplier_lead_time_stats")
+    plan = plan_of(spark, "supplier_lead_time_stats")
     assert nodes(plan, "HashAggregate") == 2
     assert nodes(plan, "CartesianProduct") == 0
     assert not re.search(r"EvalPython|MapInPandas", plan)
@@ -864,7 +842,7 @@ def test_topk_ties_rank_on_collapsed_rollup(spark):
     """The rank window runs over the (brand, part) ROLLUP, not the fact
     scan: dim join broadcasts, two exchanges total (rollup keys + brand
     window), no Python."""
-    plan = staged_plan_of(spark, "topk_brand_parts_ties")
+    plan = plan_of(spark, "topk_brand_parts_ties")
     assert nodes(plan, "BroadcastHashJoin") == 1
     assert nodes(plan, "Exchange") == 2
     assert nodes(plan, "Window") == 1
@@ -878,7 +856,7 @@ def test_quantity_quartiles_census_windows(spark):
     windows share the one flag exchange of the census. The old shape
     (row_number over the raw scan) sorted the whole fact table on
     |flags| tasks."""
-    plan = staged_plan_of(spark, "quantity_quartiles")
+    plan = plan_of(spark, "quantity_quartiles")
     assert nodes(plan, "Exchange") == 2
     assert nodes(plan, "Window") == 2
     # census agg (partial+final) sits BELOW the windows: 2 of the >=3
@@ -890,14 +868,14 @@ def test_quantity_quartiles_census_windows(spark):
 def test_session_funnel_stacked_user_windows(spark):
     """Sessionization's lag + running-sum windows stack on the same
     user_id partitioning; only the tiny bucket census re-shuffles."""
-    plan = staged_plan_of(spark, "session_funnel")
+    plan = plan_of(spark, "session_funnel")
     assert nodes(plan, "Exchange") == 2
     assert nodes(plan, "CartesianProduct") == 0
     assert not re.search(r"EvalPython|MapInPandas", plan)
 
 
 def test_brand_rank_shift_windows_on_rollup(spark):
-    plan = staged_plan_of(spark, "brand_rank_shift_yoy")
+    plan = plan_of(spark, "brand_rank_shift_yoy")
     assert nodes(plan, "BroadcastHashJoin") == 1
     assert nodes(plan, "CartesianProduct") == 0
     assert not re.search(r"EvalPython|MapInPandas", plan)
@@ -906,7 +884,7 @@ def test_brand_rank_shift_windows_on_rollup(spark):
 def test_source_overlap_shingle_equijoin_no_cartesian(spark):
     """The contamination matrix is a shingle-keyed EQUI-join over the
     distinct (source, shingle) table — never an all-pairs comparison."""
-    plan = staged_plan_of(spark, "source_overlap_matrix")
+    plan = plan_of(spark, "source_overlap_matrix")
     assert nodes(plan, "CartesianProduct") == 0
     assert nodes(plan, "BroadcastNestedLoopJoin") == 0
     assert not re.search(r"EvalPython|MapInPandas", plan)
@@ -915,7 +893,7 @@ def test_source_overlap_shingle_equijoin_no_cartesian(spark):
 def test_gap_median_single_custkey_exchange(spark):
     """All three windows (consecutive-order lag, gap rank, gap count) hash
     on o_custkey: the whole median pipeline is ONE exchange."""
-    plan = staged_plan_of(spark, "customer_order_gap_median")
+    plan = plan_of(spark, "customer_order_gap_median")
     assert nodes(plan, "Exchange") == 1
     assert nodes(plan, "Window") == 3
     assert not re.search(r"EvalPython|MapInPandas", plan)

@@ -57,14 +57,7 @@ def test_entry_smoke(spark):
     assert set(df.columns) >= {"window_start", "window_end", "event_type", "n_events", "sum_value_cents"}
 
 
-def _all_oracles():
-    """Every oracle the repo declares: registered + staged declaration queue."""
-    from numaflow_spark.oracles import STAGED_ORACLES
-
-    return {**ORACLES, **STAGED_ORACLES}
-
-
-@pytest.mark.parametrize("name", sorted(_all_oracles()))
+@pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_types_spark_expressible(name, duck):
     """The r5 postmortem guard: DuckDB silently promotes SUM(BIGINT) ->
     HUGEINT (and exact decimal math -> DECIMAL), neither of which Spark can
@@ -74,7 +67,7 @@ def test_oracle_types_spark_expressible(name, duck):
     any output column type outside what a Spark BIGINT/INT/DOUBLE/VARCHAR
     twin can produce. Fix sites wrap the outer aggregate in
     CAST(... AS BIGINT)."""
-    desc = duck.execute(f"DESCRIBE {_all_oracles()[name]}").fetchall()
+    desc = duck.execute(f"DESCRIBE {ORACLES[name]}").fetchall()
     offenders = [
         (col, typ)
         for col, typ, *_ in desc
@@ -98,14 +91,7 @@ def test_no_decimal_in_final_schema(name, spark):
     assert not decs, f"{name} exposes DECIMAL columns: {decs}"
 
 
-def _all_queries():
-    """Every query the repo declares: registered + staged declaration queue."""
-    from numaflow_spark.queries import STAGED_QUERIES
-
-    return {**QUERIES, **STAGED_QUERIES}
-
-
-@pytest.mark.parametrize("name", sorted(_all_queries()))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_no_nested_types_in_final_schema(name, spark):
     """The r6 postmortem guard (inverted_index): the driver's canonicalizer
     sorts the result through pandas, which cannot factorize list/dict-typed
@@ -113,13 +99,13 @@ def test_no_nested_types_in_final_schema(name, spark):
     even when the values are cross-engine identical. (The local checker
     normalizes nested values recursively, so this class is invisible at
     sf0.001/sf0.01 local certification — exactly like the r5 HUGEINT class.)
-    Forbid Array/Map/Struct output columns in every registered AND staged
-    query; serialize collections with array_join(sort_array(...), ',') and
-    give the oracle a string_agg(... ORDER BY) twin (a proven
-    cross-engine-exact primitive)."""
+    Forbid Array/Map/Struct output columns in every registered query;
+    serialize collections with array_join(sort_array(...), ',') and give
+    the oracle a string_agg(... ORDER BY) twin (a proven cross-engine-exact
+    primitive)."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    sdf = _all_queries()[name](spark, SF)
+    sdf = QUERIES[name](spark, SF)
     nested = [
         f.name
         for f in sdf.schema.fields

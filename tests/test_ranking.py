@@ -274,63 +274,46 @@ def test_sweep_peak_matches_day_expansion():
 
 def test_running_sums_totals_and_count_stamp(spark):
     """totals_cols/count_col (r13 wave 2): the op-stamped grand totals and
-    row count equal the separate aggregate they replace, in BOTH the
-    literal-offsets and pure-plan regimes, and NULL/empty semantics match
-    Spark's sum/count contracts."""
-    import os
-
+    row count equal the separate aggregate they replace, and NULL/empty
+    semantics match Spark's sum/count contracts."""
     from numaflow_spark.operators.ranking import add_global_running_sums
 
     df = _df(spark, ROWS)
-    for env in ("1", "0"):
-        os.environ["SPARK_GRAFT_LITERAL_OFFSETS"] = env
-        try:
-            out = add_global_running_sums(
-                df, [F.col("v"), F.col("id")], ["amt"], ["rs"],
-                primary="v", partitions=4,
-                totals_cols=["amt_tot"], count_col="n",
-            ).collect()
-        finally:
-            os.environ.pop("SPARK_GRAFT_LITERAL_OFFSETS")
-        assert len(out) == len(ROWS)
-        want_tot = sum(r[2] for r in ROWS)
-        assert all(r["amt_tot"] == want_tot and r["n"] == len(ROWS)
-                   for r in out), env
-        # the stamped running sum itself is unchanged by the extra columns
-        w = (
-            Window.orderBy("v", "id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        want_rs = {
-            r["id"]: r["rs"]
-            for r in df.withColumn("rs", F.sum("amt").over(w)).collect()
-        }
-        assert {r["id"]: r["rs"] for r in out} == want_rs, env
+    out = add_global_running_sums(
+        df, [F.col("v"), F.col("id")], ["amt"], ["rs"],
+        primary="v", partitions=4,
+        totals_cols=["amt_tot"], count_col="n",
+    ).collect()
+    assert len(out) == len(ROWS)
+    want_tot = sum(r[2] for r in ROWS)
+    assert all(r["amt_tot"] == want_tot and r["n"] == len(ROWS)
+               for r in out)
+    # the stamped running sum itself is unchanged by the extra columns
+    w = (
+        Window.orderBy("v", "id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    want_rs = {
+        r["id"]: r["rs"]
+        for r in df.withColumn("rs", F.sum("amt").over(w)).collect()
+    }
+    assert {r["id"]: r["rs"] for r in out} == want_rs
 
 
 def test_rank_count_col_stamp(spark):
     """count_col on add_global_rank (r13 wave 2): the stamped total equals
-    count(*), both regimes, and ranks are unchanged."""
-    import os
-
+    count(*), and ranks are unchanged."""
     from pyspark.sql.types import LongType
 
     df = _df(spark, ROWS)
-    for env in ("1", "0"):
-        os.environ["SPARK_GRAFT_LITERAL_OFFSETS"] = env
-        try:
-            out = add_global_rank(
-                df, [F.col("v"), F.col("id")], "rk",
-                primary="v", partitions=4, count_col="n_tot",
-            )
-            rows = out.collect()
-        finally:
-            os.environ.pop("SPARK_GRAFT_LITERAL_OFFSETS")
-        assert all(r["n_tot"] == len(ROWS) for r in rows), env
-        assert isinstance(out.schema["n_tot"].dataType, LongType), env
-        assert sorted(r["rk"] for r in rows) == list(
-            range(1, len(ROWS) + 1)
-        ), env
+    out = add_global_rank(
+        df, [F.col("v"), F.col("id")], "rk",
+        primary="v", partitions=4, count_col="n_tot",
+    )
+    rows = out.collect()
+    assert all(r["n_tot"] == len(ROWS) for r in rows)
+    assert isinstance(out.schema["n_tot"].dataType, LongType)
+    assert sorted(r["rk"] for r in rows) == list(range(1, len(ROWS) + 1))
 
 
 def test_census_order_statistics_match_bruteforce(spark):

@@ -146,3 +146,25 @@ def test_every_query_has_an_oracle():
 
     missing = set(QUERIES) - set(ORACLES)
     assert not missing, f"queries with no DuckDB oracle (rows-only check): {missing}"
+
+
+def test_every_query_resolves_to_its_q_function():
+    """One declaration per query: QUERIES[k] is the module's q_{k}
+    (through the NO_AQE regime wrapper), so a key can never silently point
+    at another query's function."""
+    from numaflow_spark import queries
+
+    wrong = [
+        k for k, fn in queries.QUERIES.items()
+        if getattr(fn, "__wrapped__", fn) is not getattr(queries, f"q_{k}", None)
+    ]
+    assert not wrong, f"registry keys not bound to their q_ function: {wrong}"
+
+
+def test_no_aqe_wrapping_matches_declared_set():
+    """The regime wrapper covers exactly NO_AQE_QUERIES: no member left
+    unwrapped, no other query wrapped."""
+    from numaflow_spark.queries import NO_AQE_QUERIES, QUERIES
+
+    wrapped = {k for k, fn in QUERIES.items() if hasattr(fn, "__wrapped__")}
+    assert wrapped == NO_AQE_QUERIES

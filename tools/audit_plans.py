@@ -17,7 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # family's materialize_no_aqe eager evaluation (operators/graph.py).
 os.environ["SPARK_GRAFT_NO_AQE_MATERIALIZE"] = "0"
 
-from numaflow_spark.queries import QUERIES, STAGED_QUERIES
+from numaflow_spark.queries import QUERIES
 from numaflow_spark.session import get_spark
 
 
@@ -76,7 +76,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     rows = []
-    for name, fn in {**QUERIES, **STAGED_QUERIES}.items():
+    for name, fn in QUERIES.items():
         try:
             rows.append(audit(spark, name, fn, sf_dir))
         except Exception as ex:  # noqa: BLE001 — audit must not abort
@@ -84,7 +84,7 @@ def main() -> None:
             print(f"! {name}: {ex}", file=sys.stderr)
     with open(out_md, "w") as f:
         f.write(
-            "# PLANS — physical-plan audit of every declared + staged query\n\n"
+            "# PLANS — physical-plan audit of every declared query\n\n"
             f"Generated by `python tools/audit_plans.py` at {sf_dir} "
             "(plan SHAPE only — row counts do not affect operator choice "
             "except via AQE, which re-plans at runtime anyway). Iterative "

@@ -96,8 +96,6 @@ def main() -> int:
             return 2
         json_out = argv[i + 1]
         argv = argv[:i] + argv[i + 2 :]
-    staged = "--staged" in argv
-    argv = [a for a in argv if a != "--staged"]
     note = None
     if "--note" in argv:
         i = argv.index("--note")
@@ -150,14 +148,6 @@ def main() -> int:
         )
 
     qs, oracles = e.queries(), e.oracle_sql()
-    if staged:
-        # r6 declaration queue: verified with the same harness before any
-        # registry slot exists (queries.py::STAGED_QUERIES)
-        from numaflow_spark.oracles import STAGED_ORACLES
-        from numaflow_spark.queries import STAGED_QUERIES
-
-        qs = dict(STAGED_QUERIES)
-        oracles = dict(STAGED_ORACLES)
     failures = []
     for name, fn in qs.items():
         if (only and name not in only) or name in skip:

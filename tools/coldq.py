@@ -11,7 +11,7 @@ reproducible condition, not a host accident.
 Usage:
   python tools/coldq.py --queries khop_trade_graph,brand_supplier_counts \
       [--repo /root/repo] [--repo-b /root/r12w] [--sf /root/testdata/sf0.1] \
-      [--cpus 32] [--reps 2] [--cache-mode ckpt|persist] [--load 16] \
+      [--cpus 32] [--reps 2] [--load 16] \
       [--rounds 1] [--out tools/coldq_result.json]
 
 With --repo-b the tool alternates arms A,B per round (cold JVM each) so a
@@ -99,7 +99,7 @@ def _kill_load(procs: list[subprocess.Popen]) -> None:
             pass
 
 
-def _run_arm(repo: str, args, env_extra: dict[str, str]) -> dict:
+def _run_arm(repo: str, args) -> dict:
     env = dict(os.environ)
     env.update(
         COLDQ_REPO=repo,
@@ -108,9 +108,7 @@ def _run_arm(repo: str, args, env_extra: dict[str, str]) -> dict:
         COLDQ_REPS=str(args.reps),
         SPARK_GRAFT_CPUS=str(args.cpus),
         SPARK_GRAFT_CACHE_TABLES="1",
-        SPARK_GRAFT_CACHE_MODE=args.cache_mode,
     )
-    env.update(env_extra)
     load = _start_load(args.load, 1200.0) if args.load else []
     try:
         t0 = time.perf_counter()
@@ -142,32 +140,22 @@ def main() -> None:
     ap.add_argument("--cpus", type=int, default=32)
     ap.add_argument("--reps", type=int, default=2)
     ap.add_argument("--rounds", type=int, default=1)
-    ap.add_argument("--cache-mode", default=os.environ.get(
-        "SPARK_GRAFT_CACHE_MODE", "ckpt"))
-    ap.add_argument("--cache-mode-b", default=None,
-                    help="cache mode for arm B (same repo allowed)")
     ap.add_argument("--load", type=int, default=0,
                     help="background busy-spin processes during each arm")
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
 
-    arms: list[tuple[str, str, dict]] = [("A", args.repo, {})]
+    arms: list[tuple[str, str]] = [("A", args.repo)]
     if args.repo_b:
-        arms.append(("B", args.repo_b, {}))
-    if args.cache_mode_b:
-        arms.append(
-            ("B", args.repo_b or args.repo,
-             {"SPARK_GRAFT_CACHE_MODE": args.cache_mode_b})
-        )
+        arms.append(("B", args.repo_b))
 
-    results: dict[str, list[dict]] = {label: [] for label, _, _ in arms}
+    results: dict[str, list[dict]] = {label: [] for label, _ in arms}
     for r in range(args.rounds):
-        for label, repo, extra in arms:
-            res = _run_arm(repo, args, extra)
+        for label, repo in arms:
+            res = _run_arm(repo, args)
             results[label].append(res)
             per_q = {k: v["min"] for k, v in res["queries"].items()}
-            print(f"round {r} arm {label} ({repo}"
-                  f"{' ' + str(extra) if extra else ''}): {per_q} "
+            print(f"round {r} arm {label} ({repo}): {per_q} "
                   f"warm={res['warm_s']}s", flush=True)
 
     payload = {
@@ -181,9 +169,7 @@ def main() -> None:
             "load_recipe": "N python busy-spin workers (float mul loop), "
                            "started before session boot, SIGKILLed after",
             "rounds": args.rounds,
-            "arms": {label: repo for label, repo, _ in arms},
-            "cache_mode": args.cache_mode,
-            "cache_mode_b": args.cache_mode_b,
+            "arms": dict(arms),
         },
         "results": results,
     }
