@@ -59,16 +59,13 @@ def train_bpe(
     n_merges: int,
     word_col: str = "word",
     freq_col: str = "freq",
-    *,
-    checkpoint_dir: str | None = None,
 ) -> tuple[list[tuple[str, str]], DataFrame]:
     """Learn ``n_merges`` BPE merges from a (word, freq) table. Returns the
     ordered merge list and the final symbolized vocab (word, freq, syms).
-    Lineage is cut each round so the plan stays flat; pass
-    ``checkpoint_dir`` (or set
-    ``spark.numaflow_spark.checkpoint.dir``) to make the cut
-    durable at cluster scale (operators/graph.py::cut_lineage)."""
-    from numaflow_spark.operators.graph import aqe_off, cut_lineage
+    Lineage is cut each round so the plan stays flat; set
+    ``spark.numaflow_spark.checkpoint.dir`` to make the cut durable at
+    cluster scale (operators/graph.py::cut_lineage)."""
+    from numaflow_spark.operators.graph import AQE, cut_lineage, scoped_conf
 
     # EAGER checkpoints (r14 revert of the r13 lazy probe-fusion variant):
     # lazy rounds saved ~8 jobs/query on an idle host, but the driver
@@ -84,14 +81,14 @@ def train_bpe(
             F.split(F.col(word_col), "(?s)(?!^)(?=.)").alias("syms"),  # chars;
             # the lookahead keeps Spark's trailing-empty split artifact out
         ),
-        checkpoint_dir,
         eager=True,
     )
     merges: list[tuple[str, str]] = []
-    # The merge rounds are the iterative-loop AQE regime (graph.py::aqe_off
-    # rationale): per-round inputs are materialized RDDs, adaptive re-plans
-    # are pure job floor (18 -> 9 jobs, 2.10 -> 1.89 s at sf0.1).
-    with aqe_off(vocab.sparkSession):
+    # The merge rounds are the iterative-loop AQE regime
+    # (graph.py::sized_loop_conf rationale): per-round inputs are
+    # materialized RDDs, adaptive re-plans are pure job floor (18 -> 9
+    # jobs, 2.10 -> 1.89 s at sf0.1).
+    with scoped_conf(vocab.sparkSession, {AQE: "false"}):
         for _ in range(n_merges):
             pairs = (
                 syms.filter(F.size("syms") >= 2)  # sequence(1,0) = [1,0]
@@ -118,7 +115,6 @@ def train_bpe(
             merges.append((a, b))
             syms = cut_lineage(
                 syms.withColumn("syms", F.expr(_merge_expr("syms", a, b))),
-                checkpoint_dir,
                 eager=True,
             )
     return merges, syms

@@ -21,7 +21,6 @@ storage to also bound recovery).
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, functions as F
@@ -29,33 +28,49 @@ from pyspark.sql import DataFrame, functions as F
 __all__ = ["connected_components", "cut_lineage", "dedup_survivors", "fuzzy_dedup"]
 
 
+AQE = "spark.sql.adaptive.enabled"
+
+
 @contextmanager
-def aqe_off(spark):
-    """Disable adaptive execution for an ITERATIVE loop's eager
-    materializations. AQE runs each exchange as its own job — measured at
-    sf0.1: pagerank 53 jobs, CC families ~40 — and on checkpoint-per-round
-    loops the re-plan adds pure scheduling floor (~96 ms/job) with nothing
-    to adapt: round inputs are already materialized RDDs with known tiny
-    sizes. Measured min-of-2 walls: pagerank_bipartite 7.97 -> 4.99 s
-    (53 -> 5 jobs), triangle_count 9.68 -> 3.86 s. Scope discipline: enter
-    AFTER the entry checkpoint materializes the (possibly expensive)
-    upstream pipeline — plans that genuinely benefit from AQE coalescing
-    (the LSH builds; embedding_clusters read 4.87 -> 8.05 s under a
-    blanket off) stay under AQE. Restores the previous value on exit, so
-    a shared session (bench suite, driver) is never left mutated."""
-    old = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+def scoped_conf(spark, confs: dict[str, str]):
+    """Set the SQL ``confs`` on ``spark`` for the block, then restore each
+    key on exit — an exception included; a key that was unset before is
+    unset again (the shape of PySpark's own ``sql_conf`` test helper). This
+    is the engine's only session-conf mutation: the iterative loops'
+    width/AQE regime (``sized_loop_conf``), the AQE-off cut
+    (``materialize(aqe=False)``), the bpe merge loop and ranking's bounded
+    pulls all go through it.
+
+    CONCURRENCY CONTRACT (ADVICE r12): these are SESSION-GLOBAL SQL confs
+    — while the block is open, any query run concurrently on the same
+    SparkSession inherits them (AQE off, a shrunken shuffle width, no
+    broadcast joins). Every caller in this repo (the iterative operators,
+    the bench/driver harnesses) runs queries sequentially on its session,
+    which is the assumption these levers are built on. A concurrent
+    deployment must either serialize access to the session for the block's
+    duration or give that work a dedicated session
+    (``SparkSession.newSession()`` shares the context but isolates SQL
+    conf)."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
-@contextmanager
 def sized_loop_conf(spark, n_rows: int, *, rows_per_partition: int = 500_000):
     """AQE off + shuffle partitions sized from a MEASURED row count, for
-    iterative loops whose per-round input is already materialized. The r10
-    loop-scoped aqe_off experiment made CC *slower* because it kept the
+    iterative loops whose per-round input is already materialized. AQE
+    runs each exchange as its own job and, on checkpoint-per-round loops,
+    the re-plan is pure scheduling floor (~96 ms/job) with nothing to
+    adapt — measured pagerank_bipartite 53 -> 5 jobs. But the r10
+    loop-scoped AQE-off experiment made CC *slower* because it kept the
     session's 32 shuffle partitions: 6 exchanges/round × 32 near-empty
     tasks out-costs the AQE jobs it removes. The missing half of that
     lever is the partition count: with partitions = ceil(2·n/target)
@@ -64,93 +79,93 @@ def sized_loop_conf(spark, n_rows: int, *, rows_per_partition: int = 500_000):
     right-sized tasks. At cluster scale a 10¹⁰-edge loop hits the session
     cap and keeps its full width — the sizing never *reduces* scale-out
     below what the data needs, it only stops billing empty tasks at the
-    small end. Restores all three confs on exit.
-
-    CONCURRENCY CONTRACT (ADVICE r12): these are SESSION-GLOBAL SQL confs
-    — while the context is open, any query run concurrently on the same
-    SparkSession inherits AQE-off, a shrunken shuffle width, and disabled
-    broadcast joins. Every caller in this repo (the iterative operators,
-    the bench/driver harnesses) runs queries sequentially on its session,
-    which is the assumption this lever is built on. A concurrent
-    deployment must either serialize access to the session for the loop's
-    duration or give loop work a dedicated session
-    (``SparkSession.newSession()`` shares the context but isolates SQL
-    conf). The same contract covers ``aqe_off`` and ranking's
-    ``_collect_no_aqe``."""
+    small end. Enter AFTER the loop's entry checkpoint, so the (possibly
+    expensive) upstream pipeline still runs under AQE. A ``scoped_conf``
+    block: all three confs are restored on exit."""
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     parts = max(2, min(cap, (2 * max(n_rows, 1)) // rows_per_partition + 1))
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
     # Broadcast joins each run a build-side collect JOB even without AQE
-    # (measured: a CC round's two star joins kept it at 4-6 jobs after
-    # aqe_off). In-loop the join inputs are the already-materialized,
+    # (measured: a CC round's two star joins kept it at 4-6 jobs with AQE
+    # off). In-loop the join inputs are the already-materialized,
     # right-partitioned round state — a shuffle join over `parts`
     # partitions is one stage of the SAME job, so the round collapses to
     # a single action. At cluster scale the round's join sides are edge-
     # and node-sized (never broadcastable anyway), so nothing is lost.
-    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
+    return scoped_conf(spark, {
+        AQE: "false",
+        "spark.sql.shuffle.partitions": str(parts),
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    })
 
 
-def cut_lineage(
-    df: DataFrame, checkpoint_dir: str | None = None, *, eager: bool = True
-) -> DataFrame:
+def cut_lineage(df: DataFrame, *, eager: bool = True) -> DataFrame:
     """Flat-plan discipline for iterative operators (CC / PageRank / BFS /
     BPE): cut the lineage every round so the plan doesn't deepen.
 
     Default is ``localCheckpoint`` — blocks live on executor memory/disk,
     which is fast but NOT fault-tolerant: losing an executor mid-iteration
-    fails the whole chain. At cluster scale pass ``checkpoint_dir`` (or set
-    ``spark.numaflow_spark.checkpoint.dir`` in the session conf — a
+    fails the whole chain. At cluster scale set
+    ``spark.numaflow_spark.checkpoint.dir`` in the session conf (a
     runtime-settable app key; scale.py::cluster_conf sets it) to switch to
-    a durable ``checkpoint()`` on shared storage, which
-    also bounds recovery: a retry re-reads the last round's checkpoint
-    instead of recomputing from round 0.
+    a durable ``checkpoint()`` on shared storage, which also bounds
+    recovery: a retry re-reads the last round's checkpoint instead of
+    recomputing from round 0.
     """
-    if checkpoint_dir is None:
-        try:
-            checkpoint_dir = df.sparkSession.conf.get(
-                "spark.numaflow_spark.checkpoint.dir", None
-            )
-        except Exception:  # pragma: no cover — conf surface unavailable
-            checkpoint_dir = None
-    if checkpoint_dir is None:
+    durable = df.sparkSession.conf.get("spark.numaflow_spark.checkpoint.dir", None)
+    if durable is None:
         return df.localCheckpoint(eager=eager)
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is None:
-        sc.setCheckpointDir(checkpoint_dir)
+        sc.setCheckpointDir(durable)
     return df.checkpoint(eager=eager)
 
 
-def materialize_no_aqe(
-    df: DataFrame, checkpoint_dir: str | None = None
-) -> DataFrame:
-    """Evaluate ``df`` NOW with adaptive execution disabled and return the
-    materialized result (cut_lineage). For CPU-bound pair-expansion plans —
-    the cooccurrence family — where AQE's advisory-size coalescing packs
-    the expansion stage onto too few cores: the per-partition work is
-    pair-quadratic in basket size, so an "8 MB" reduce partition is minutes
-    of CPU, and the stage runs serial. Measured min-of-2, same session,
-    identical outputs — sf0.1 / x10:
+_lazy = False
+
+
+@contextmanager
+def lazy_plans():
+    """Plan audits (the plan tests and the audit/dump tools) inspect the
+    UNDERLYING plan: inside this block ``materialize`` returns its input
+    unchanged, so a query builds its full lazy plan instead of a
+    checkpointed-RDD scan. Loop cuts inside the iterative operators stay
+    eager. Restores the previous mode on exit."""
+    global _lazy
+    old, _lazy = _lazy, True
+    try:
+        yield
+    finally:
+        _lazy = old
+
+
+def materialize(df: DataFrame, *, eager: bool = True, aqe: bool = True) -> DataFrame:
+    """Cut a query's shared or expensive intermediate once (cut_lineage), so
+    every consumer branch re-reads the blocks instead of re-evaluating the
+    upstream plan; a no-op inside ``lazy_plans()``.
+
+    ``eager=False`` cuts lazily: the consumer's first full-scan action
+    computes every partition and persists it inside that job instead of
+    paying a separate materialization job (the r13 probe-fusion device).
+
+    ``aqe=False`` evaluates the (eager) cut with adaptive execution off —
+    the regime of the registry's NO_AQE_QUERIES, CPU-bound pair-expansion
+    plans (the cooccurrence family) where AQE's advisory-size coalescing
+    packs the expansion stage onto too few cores: the per-partition work
+    is pair-quadratic in basket size, so an "8 MB" reduce partition is
+    minutes of CPU, and the stage runs serial. Measured min-of-2, same
+    session, identical outputs — sf0.1 / x10:
       triangle_count        13.3 -> 4.9 s  /  32.1 -> 18.7 s
       degree_distribution    4.0 -> 2.0 s  /  15.9 ->  7.0 s
       basket_pairs           3.8 -> 1.6 s  /   4.4 ->  1.8 s
       copurchase_lift        3.8 -> 2.4 s  /   4.4 ->  2.6 s
-    CC/LSH stay under AQE (measured loss there — see aqe_off docstring).
-    Set SPARK_GRAFT_NO_AQE_MATERIALIZE=0 to return the lazy plan unchanged
-    (plan-inspection tests pin the underlying plan shape that way)."""
-    if os.environ.get("SPARK_GRAFT_NO_AQE_MATERIALIZE", "1") in ("0", "false"):
+    CC/LSH stay under AQE (measured loss there — see connected_components
+    and sized_loop_conf)."""
+    if _lazy:
         return df
-    with aqe_off(df.sparkSession):
-        return cut_lineage(df, checkpoint_dir, eager=True)
+    if aqe:
+        return cut_lineage(df, eager=eager)
+    with scoped_conf(df.sparkSession, {AQE: "false"}):
+        return cut_lineage(df, eager=eager)
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -208,7 +223,6 @@ def connected_components(
     dst: str = "v",
     *,
     max_iter: int = 30,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(node, component) for every node in ``edges``; component = the
     minimum node id reachable from it. Isolated nodes (absent from the edge
@@ -231,7 +245,7 @@ def connected_components(
     # scaling ratios 0.43-0.58) — a cold-JVM load-16 A/B
     # (tools/coldq_device_revert.json) adjudicated the revert; eager was
     # the r11/r12 form the driver measured healthy twice.
-    # NOTE on AQE in the rounds: the r10 aqe_off experiment (blanket AND
+    # NOTE on AQE in the rounds: the r10 AQE-off experiment (blanket AND
     # loop-scoped) made CC *slower* here — embedding_clusters 4.87 -> 8.0 s,
     # neardup_clusters 5.1 -> 6.0 s at sf0.1 — because each round is a
     # ~6-exchange DAG whose coalesced reduce stages AQE compacts; the job
@@ -240,7 +254,6 @@ def connected_components(
     # right-sized partitions are the missing half (see its docstring).
     e = cut_lineage(
         _canon(edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))),
-        checkpoint_dir,
         eager=True,
     )
     # One count over the just-checkpointed blocks sizes the whole loop
@@ -261,7 +274,7 @@ def connected_components(
             )
             if flags.filter((F.col("o") == 1) & (F.col("i") == 1)).isEmpty():
                 break
-            e = cut_lineage(_round(e), checkpoint_dir, eager=True)
+            e = cut_lineage(_round(e), eager=True)
         else:  # pragma: no cover - max_iter tuned far above O(log² n) bound
             raise RuntimeError(
                 f"connected_components: no convergence in {max_iter} rounds"
@@ -280,7 +293,6 @@ def dedup_survivors(
     *,
     pair_cols: tuple[str, str] = ("d1", "d2"),
     components: DataFrame | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Corpus after fuzzy dedup: one survivor (minimum id) per near-dup
     component, everything un-paired kept as-is.
@@ -298,9 +310,7 @@ def dedup_survivors(
     if components is None:
         if pairs is None:
             raise ValueError("dedup_survivors needs pairs or precomputed components")
-        components = connected_components(
-            pairs, *pair_cols, checkpoint_dir=checkpoint_dir
-        )
+        components = connected_components(pairs, *pair_cols)
     losers = components.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
@@ -313,7 +323,6 @@ def fuzzy_dedup(
     id_col: str,
     *,
     pair_cols: tuple[str, str] = ("d1", "d2"),
-    checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """(clusters, survivors) from ONE pair table and ONE CC run — the
     composed form of the neardup_clusters / neardup_survivors queries.
@@ -323,8 +332,7 @@ def fuzzy_dedup(
     component table. Clusters: (node, component); survivors: ``df`` minus
     non-root members."""
     comp = cut_lineage(
-        connected_components(pairs, *pair_cols, checkpoint_dir=checkpoint_dir),
-        checkpoint_dir,
+        connected_components(pairs, *pair_cols),
         eager=False,
     )
     survivors = dedup_survivors(df, None, id_col, components=comp)
@@ -471,8 +479,6 @@ def pagerank(
     scale: int = 1_000_000_000,
     src: str = "src",
     dst: str = "dst",
-    *,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Integer-exact PageRank over a directed edge list: ranks carry
     ``scale`` as a BIGINT factor, per-edge contribution is rank div
@@ -499,17 +505,16 @@ def pagerank(
     # per checkpoint (the r10 first cut did, and read 8.7 s / 30 jobs).
     edges = cut_lineage(
         edges.select(F.col(src).alias(src), F.col(dst).alias(dst)),
-        checkpoint_dir,
         eager=True,
     )
     deg = edges.groupBy(src).agg(F.count("*").alias("deg"))
     # The rounds run under sized_loop_conf with EAGER round checkpoints —
     # lazy rounds re-planned under AQE measured 53 jobs / 7.97 s for the
     # 5-iteration bipartite query vs 5 jobs / ~5 s without; r14 adds the
-    # data-sized loop width (was: aqe_off at session width — 32-wide task
+    # data-sized loop width (was: AQE off at session width — 32-wide task
     # storms per round, part of the driver-measured contended-host
     # anti-scaling family, pagerank_bipartite scaling ratio 0.63).
-    e = cut_lineage(edges.join(deg, src), checkpoint_dir, eager=True)
+    e = cut_lineage(edges.join(deg, src), eager=True)
     n_e = e.count()
     nodes = (
         edges.select(F.col(src).alias("node"))
@@ -518,7 +523,7 @@ def pagerank(
     )
     n_nodes = nodes.agg(F.count("*").alias("n"))
     nodes_n = cut_lineage(
-        nodes.crossJoin(F.broadcast(n_nodes)), checkpoint_dir, eager=True
+        nodes.crossJoin(F.broadcast(n_nodes)), eager=True
     )
     ranks = nodes_n.select(
         "node", "n", F.expr(f"cast({scale} as bigint) div n").alias("rank")
@@ -543,7 +548,7 @@ def pagerank(
                     ).alias("rank"),
                 )
             )
-            ranks = cut_lineage(ranks, checkpoint_dir, eager=True)
+            ranks = cut_lineage(ranks, eager=True)
     return ranks.select("node", "rank")
 
 
@@ -554,7 +559,6 @@ def k_hop_distances(
     src: str = "src",
     dst: str = "dst",
     node_col: str = "node",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Minimum hop distance (0..k) from a seed set for every node
     reachable within k hops — frontier-based BFS as k rounds of join +
@@ -571,17 +575,16 @@ def k_hop_distances(
     # the rounds with eager checkpoints under sized_loop_conf: per-round
     # inputs are tiny known RDDs where adaptive re-planning is pure job
     # floor (25 -> 8 jobs at sf0.1, wall unchanged). r14: the r13 form ran
-    # the rounds aqe_off at SESSION shuffle width — 32-wide task storms
+    # the rounds AQE-off at SESSION shuffle width — 32-wide task storms
     # per round that the driver measured anti-scaling under host
     # contention (khop_trade_graph 28.8 s at 32 cores vs 2.6 s at 8, the
     # worst ratio of the round). sized_loop_conf derives the width from
     # the measured edge count instead (the CC loop's contract: capped at
     # the session width, so a 10^10-edge graph keeps full scale-out).
-    e = cut_lineage(edges, checkpoint_dir, eager=True)
+    e = cut_lineage(edges, eager=True)
     n0 = e.count()
     dist = cut_lineage(
         seeds.select(F.col(node_col).alias("node"), F.lit(0).alias("dist")).distinct(),
-        checkpoint_dir,
         eager=True,
     )
     frontier = dist
@@ -596,7 +599,6 @@ def k_hop_distances(
                 dist.unionByName(nxt).groupBy("node").agg(
                     F.min("dist").alias("dist")
                 ),
-                checkpoint_dir,
                 eager=True,
             )
             frontier = dist.filter(F.col("dist") == h)

@@ -68,6 +68,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from numaflow_spark.operators import graph
+
 
 def _collect_no_aqe(df: DataFrame):
     """collect() with AQE disabled for the module's bounded aggregate
@@ -76,12 +78,9 @@ def _collect_no_aqe(df: DataFrame):
     materialize job plus a result job; the non-adaptive plan is ONE job
     over the same two-stage shuffle (the CC probe device, graph.py) —
     measured 2 -> 1 jobs per pull, and the ranking ops make 1-3 pulls
-    per call. Session-global conf for the pull's duration — see
-    graph.py::sized_loop_conf's concurrency contract (single-threaded
-    session assumed; concurrent use needs a dedicated newSession())."""
-    from numaflow_spark.operators.graph import aqe_off
-
-    with aqe_off(df.sparkSession):
+    per call. A graph.py::scoped_conf block (see its concurrency
+    contract)."""
+    with graph.scoped_conf(df.sparkSession, {graph.AQE: "false"}):
         return df.collect()
 
 
@@ -115,29 +114,6 @@ _LO = "__rk_lo"
 _HI = "__rk_hi"
 
 
-def materialize_ranking_input(df: DataFrame, *, eager: bool = True) -> DataFrame:
-    """Materialize a shared ranking input ONCE so several ranking
-    ops (or one op's stats/local/counts branches) re-read a checkpointed
-    table instead of re-evaluating the upstream rollup per branch
-    (VERDICT r10 #3: customer_rfm paid the per-op eager cut 3x on the SAME
-    per-customer rollup). Callers pass ``materialize=False`` to the add_*
-    ops afterwards. ``eager=False`` (r13, the CC probe-fusion device) cuts
-    the lineage LAZILY: the consumer's first full-scan action — the
-    ranking op's stats aggregate or bounded counts pull — computes every
-    partition, so the checkpoint persists inside that job instead of
-    paying a separate materialization job; later branches read the same
-    blocks, so the bucket-determinism contract is unchanged. No-op under
-    SPARK_GRAFT_NO_AQE_MATERIALIZE=0 so plan audits see the real
-    structure."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_AQE_MATERIALIZE", "1") in ("0", "false"):
-        return df
-    from numaflow_spark.operators.graph import cut_lineage
-
-    return cut_lineage(df, eager=eager)
-
-
 def _bucket_expr(primary: str, lo: str, hi: str, partitions: int,
                  descending: bool):
     """The order-respecting deterministic bucket id (module docstring),
@@ -163,8 +139,6 @@ def _bucketed(df: DataFrame, primary: str, descending: bool,
     docstring). The (min, max) aggregate broadcasts as one row; both are
     order-insensitive, so every independent evaluation of this subtree
     yields identical buckets."""
-    import os
-
     stats = df.agg(
         F.min(F.col(primary).cast("bigint")).alias(_LO),
         F.max(F.col(primary).cast("bigint")).alias(_HI),
@@ -187,17 +161,11 @@ def _bucketed(df: DataFrame, primary: str, descending: bool,
     # per branch and CHAINED rankings compound it 2^k-fold — customer_rfm
     # (3 chained ntiles) measured 18 s at x10 lazy vs ~3 s with the input
     # materialized once per call. Callers that already ran
-    # materialize_ranking_input on the shared input pass
-    # ``materialize=False`` and skip the per-op cut (VERDICT r10 #3). Same
-    # plan-audit escape hatch as materialize_no_aqe:
-    # SPARK_GRAFT_NO_AQE_MATERIALIZE=0 keeps the lazy plan so the pin
-    # tests see the real window/join structure.
-    if materialize and os.environ.get(
-        "SPARK_GRAFT_NO_AQE_MATERIALIZE", "1"
-    ) not in ("0", "false"):
-        from numaflow_spark.operators.graph import cut_lineage
-
-        part = cut_lineage(part, eager=True)
+    # graph.materialize on the shared input pass ``materialize=False`` and
+    # skip the per-op cut (VERDICT r10 #3). Inside graph.lazy_plans() the
+    # cut is skipped so the pin tests see the real window/join structure.
+    if materialize:
+        part = graph.materialize(part)
     return part
 
 
@@ -238,7 +206,7 @@ def add_global_rank(df: DataFrame, order_cols: list[Column], out_col: str,
     key is the integer column `primary` (sorted DESC when `descending`) —
     same determinism contract as the window it replaces. Pass
     ``materialize=False`` when `df` was already run through
-    materialize_ranking_input (skips the per-op eager cut).
+    graph.materialize (skips the per-op eager cut).
 
     ``count_col`` (r13 wave 2, the add_global_ranks device): also stamp
     the TOTAL row count — the sum of the already-collected per-bucket
@@ -278,8 +246,6 @@ def add_global_ranks(df: DataFrame,
     column: the sum of the already-collected per-bucket counts — a free
     literal, saving the consumer's separate count aggregate + broadcast
     (ntile consumers all need n)."""
-    import os
-
     aggs = []
     for i, (_oc, _out, primary, _desc) in enumerate(specs):
         aggs += [
@@ -295,12 +261,8 @@ def add_global_ranks(df: DataFrame,
         )
     part = part.drop(*[c for i in range(len(specs))
                        for c in (f"{_LO}{i}", f"{_HI}{i}")])
-    if materialize and os.environ.get(
-        "SPARK_GRAFT_NO_AQE_MATERIALIZE", "1"
-    ) not in ("0", "false"):
-        from numaflow_spark.operators.graph import cut_lineage
-
-        part = cut_lineage(part, eager=True)
+    if materialize:
+        part = graph.materialize(part)
     grouped_cnts = None
     total_rows: int | None = None
     if len(specs) > 1:
@@ -368,7 +330,7 @@ def add_grouped_global_ntile(
     already parallelize there."""
     part = df
     if materialize:
-        part = materialize_ranking_input(part)
+        part = graph.materialize(part)
     stats_rows = _collect_no_aqe(part.groupBy(group_col).agg(
         F.min(F.col(primary).cast("bigint")).alias("lo"),
         F.max(F.col(primary).cast("bigint")).alias("hi"),

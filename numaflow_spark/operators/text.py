@@ -52,12 +52,6 @@ def stopword_ratio(text: Column, words: tuple[str, ...] = EN_STOPWORDS) -> Colum
     return stopword_count(text, words) / token_count(text)
 
 
-def avg_token_len(text: Column) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(F.transform(toks, F.length), F.lit(0), lambda acc, x: acc + x)
-    return total / F.size(toks)
-
-
 def quality_score(text: Column) -> Column:
     """Composite quality heuristic (length band + stopword presence), the
     shape of C4/Gopher-style document filters: deterministic integer logic."""

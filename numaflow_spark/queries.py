@@ -19,7 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from numaflow_spark.operators import map_ops, reduce_ops, routing
+from numaflow_spark.operators import reduce_ops, routing
+from numaflow_spark.operators.graph import materialize
 from numaflow_spark.session import load_table
 
 DEC = "decimal(18,2)"
@@ -832,14 +833,7 @@ def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 wave 2: tf feeds the df broadcast AND the scoring probe —
     # lazily cut it so the tokenize + (doc, term) rollup runs once (the
     # df broadcast build materializes the blocks inside its own job).
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_NO_AQE_MATERIALIZE", "1") not in (
-        "0", "false",
-    ):
-        from numaflow_spark.operators.graph import cut_lineage
-
-        tf = cut_lineage(tf, eager=False)
+    tf = materialize(tf, eager=False)
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
     scored = tf.join(F.broadcast(df_), "term").withColumn(
         "tfidf", F.round(F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 6)
@@ -1636,23 +1630,14 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # text window shuffle + tokenize + filters) once per consumer (r11,
     # VERDICT r10 task 8: measured 6.1 -> 3.7 s min-of-3 at x10,
     # interleaved arms, medians 10.6 -> 4.0, identical 5378-row output).
-    # Materialize the pruned survivor projection once; the
-    # audit env (SPARK_GRAFT_NO_AQE_MATERIALIZE=0) keeps plan tests lazy.
-    import os as _os
-
+    # Materialize the pruned survivor projection once.
     qual = qual.select("doc_id", "text", "lang", "source", "n_words")
-    if _os.environ.get("SPARK_GRAFT_NO_AQE_MATERIALIZE", "1") not in (
-        "0", "false",
-    ):
-        from numaflow_spark.operators.graph import cut_lineage
-
-        # r13 wave 2: lazy cut — the flagged-docs broadcast build (the
-        # survivor shingle probe) materializes the survivor set inside
-        # its own job; the anti-join's probe side then reads the same
-        # blocks. The standalone checkpoint job is gone (survivors are a
-        # deterministic window pick, so concurrent first-evaluation is
-        # benign).
-        qual = cut_lineage(qual, eager=False)
+    # r13 wave 2: lazy cut — the flagged-docs broadcast build (the
+    # survivor shingle probe) materializes the survivor set inside its own
+    # job; the anti-join's probe side then reads the same blocks. The
+    # standalone checkpoint job is gone (survivors are a deterministic
+    # window pick, so concurrent first-evaluation is benign).
+    qual = materialize(qual, eager=False)
 
     # 3. decontaminate: drop any survivor sharing a 5-gram with the src0
     # benchmark (broadcast the benchmark's distinct shingles)
@@ -2284,19 +2269,13 @@ def q_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_pair = li_f.groupBy("l_orderkey", "l_suppkey").agg(
         F.max(F.when(late, 1).otherwise(0)).alias("is_late")
     )
-    from numaflow_spark.operators.graph import cut_lineage
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_NO_AQE_MATERIALIZE", "1") not in (
-        "0", "false"
-    ):
-        # r13 wave 2: lazy cut — the first consumer stage (the per-order
-        # rollup's exchange) materializes the pair table inside its own
-        # job; the late-supplier branch then reads the same blocks. The
-        # standalone checkpoint job is gone (the CC probe-fusion device;
-        # per_pair is a deterministic grouped aggregate, so concurrent
-        # first-evaluation is benign).
-        per_pair = cut_lineage(per_pair, eager=False)
+    # r13 wave 2: lazy cut — the first consumer stage (the per-order
+    # rollup's exchange) materializes the pair table inside its own job;
+    # the late-supplier branch then reads the same blocks. The standalone
+    # checkpoint job is gone (the CC probe-fusion device; per_pair is a
+    # deterministic grouped aggregate, so concurrent first-evaluation is
+    # benign).
+    per_pair = materialize(per_pair, eager=False)
     per_order = per_pair.groupBy("l_orderkey").agg(
         F.count("*").alias("n_supp"),
         F.sum("is_late").alias("n_late"),
@@ -2352,7 +2331,7 @@ def q_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~7 in TPC-H), never corpus-quadratic, and the set-agg collapses
     multi-line duplicates. Heap take (TakeOrderedAndProject) with a full
     deterministic tie-break. Materialized via
-    operators/graph.py::materialize_no_aqe — the cooccurrence family's
+    operators/graph.py::materialize(aqe=False) — the cooccurrence family's
     CPU-bound pair expansion measured 3.8 -> 1.6 s (sf0.1) / 4.4 -> 1.8 s
     (x10) with AQE's advisory coalescing out of the expansion stage."""
     from numaflow_spark.operators.graph import cooccurrence_pairs
@@ -2410,7 +2389,6 @@ def q_clv_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     survives |customers| in the billions (VERDICT r9 #5)."""
     from numaflow_spark.operators.ranking import (
         add_global_rank,
-        materialize_ranking_input,
         ntile_from_rank,
     )
 
@@ -2423,7 +2401,7 @@ def q_clv_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # op from the same collected per-bucket counts — the separate count
     # aggregate + crossJoin broadcast job is gone (VERDICT r10 #3, then
     # the count_col device).
-    per_cust = materialize_ranking_input(per_cust, eager=False)
+    per_cust = materialize(per_cust, eager=False)
     ranked = add_global_rank(
         per_cust, [F.col("ltv_c").desc(), F.col("o_custkey")], "rk",
         primary="ltv_c", descending=True, materialize=False,
@@ -2848,7 +2826,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join (orientation choice never changes the count). Edge build via
     cooccurrence_pairs (one orderkey shuffle + row-local pair expansion —
     r7 rewrite of the orderkey self-join that shuffled lineitem twice).
-    Materialized via materialize_no_aqe: 13.3 -> 4.9 s (sf0.1) /
+    Materialized via materialize(aqe=False): 13.3 -> 4.9 s (sf0.1) /
     32.1 -> 18.7 s (x10), same-session min-of-2, identical count.
 
     r14: the query-level ``.distinct()`` on the pair stream is GONE —
@@ -3002,10 +2980,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself huge (web-scale corpora; VERDICT r9 #5). The coverage test is
     integer cross-multiplication ((cum - n) * 10 < total * 9) against the
     broadcast 1-row total, so no float crosses engines."""
-    from numaflow_spark.operators.ranking import (
-        add_global_running_sum,
-        materialize_ranking_input,
-    )
+    from numaflow_spark.operators.ranking import add_global_running_sum
 
     docs = load_table(spark, sf_dir, "documents")
     counts = (
@@ -3019,7 +2994,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stamped by the op from the same collected per-bucket sums — the
     # separate total aggregate + crossJoin broadcast job is gone
     # (VERDICT r10 #3, then the totals_cols device).
-    counts = materialize_ranking_input(counts, eager=False)
+    counts = materialize(counts, eager=False)
     cum = add_global_running_sum(
         counts, [F.desc("n"), F.col("term")], "n", "cum",
         primary="n", descending=True, materialize=False,
@@ -3125,7 +3100,6 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides as a broadcast 1-row aggregate. Integer day/cent math only."""
     from numaflow_spark.operators.ranking import (
         add_global_ranks,
-        materialize_ranking_input,
         ntile_from_rank,
     )
 
@@ -3149,7 +3123,7 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n_tot row reads the same checkpoint instead of re-rolling the fact
     # table. Lazy cut (r13): the ranking op's stats aggregate is the
     # action that materializes the rollup — no separate checkpoint job.
-    base = materialize_ranking_input(base, eager=False)
+    base = materialize(base, eager=False)
     # count_col (r13): n_tot is the sum of the already-collected bucket
     # counts under the literal-offsets regime — no separate count
     # aggregate + broadcast over the rollup.
@@ -3228,7 +3202,7 @@ def q_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows); n_orders rides as a 1-row broadcast; the top-50 is a heap take.
     All-integer lift via bigint floor division. Pairs below support 5 are
     cut before the joins, the standard a-priori prune. Materialized via
-    materialize_no_aqe (cooccurrence-family regime, registry wrapper).
+    materialize(aqe=False) (cooccurrence-family regime, registry wrapper).
 
     r12 shared-dedup rewrite: the singles table, the n_orders scalar, and
     BOTH sides of the pair self-join now hang off ONE repartition(order)
@@ -3494,7 +3468,7 @@ def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     they hit the wire, and the union is a projection — measured A/B at
     x10 (min-of-2, identical 3-row output): 7.39 s -> 5.41 s; the
     repartition(u)+dropDuplicates orientation split read 5.61 s.
-    Materialized via materialize_no_aqe (cooccurrence-family regime):
+    Materialized via materialize(aqe=False) (cooccurrence-family regime):
     4.0 -> 2.0 s at sf0.1 / 15.9 -> 7.0 s at x10, same session."""
     from numaflow_spark.operators.graph import cooccurrence_pairs
 
@@ -3591,10 +3565,7 @@ def q_revenue_pareto_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cross-multiplication against the broadcast 1-row total; the
     final reduce emits one row (n_top, n_customers, top_rev_c,
     total_rev_c)."""
-    from numaflow_spark.operators.ranking import (
-        add_global_running_sum,
-        materialize_ranking_input,
-    )
+    from numaflow_spark.operators.ranking import add_global_running_sum
 
     orders = load_table(spark, sf_dir, "orders")
     per_cust = orders.groupBy("o_custkey").agg(
@@ -3605,7 +3576,7 @@ def q_revenue_pareto_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stamped by the op from the same collected per-bucket sums/counts —
     # the separate totals aggregate + crossJoin broadcast job is gone
     # (VERDICT r10 #3, then the totals_cols/count_col device).
-    per_cust = materialize_ranking_input(per_cust, eager=False)
+    per_cust = materialize(per_cust, eager=False)
     cum = add_global_running_sum(
         per_cust, [F.desc("rev_c"), F.col("o_custkey")], "rev_c", "cum_c",
         primary="rev_c", descending=True, materialize=False,
@@ -4483,10 +4454,7 @@ def q_clv_decile_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     inversion, VERDICT r9 #5, wearing a costume); instead each year's
     decile is the TWO-PHASE distributed ntile (operators/ranking.py) on
     its filtered half. The only fact-table pass is the first aggregate."""
-    from numaflow_spark.operators.ranking import (
-        add_grouped_global_ntile,
-        materialize_ranking_input,
-    )
+    from numaflow_spark.operators.ranking import add_grouped_global_ntile
 
     orders = load_table(spark, sf_dir, "orders")
     per = (
@@ -4511,7 +4479,7 @@ def q_clv_decile_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (VERDICT r10 #3: the per-op eager cut ran the rollup twice). Lazy
     # cut (r13): the grouped ntile's per-group stats pull materializes
     # the rollup inside its own job — no separate checkpoint job.
-    per = materialize_ranking_input(per, eager=False)
+    per = materialize(per, eager=False)
     # BOTH years' deciles in one grouped two-phase pass (r12: the per-year
     # add_global_rank pair cost 26 sf0.1 jobs; one window over (yr, bucket)
     # + one counts pass costs ~8) — group domain is exactly 2 years.
@@ -4897,10 +4865,7 @@ def q_ks_priority_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 near SF10 — and ks_num*1e6 likewise, so BOTH the D comparison
     and the ppm run in DECIMAL(38,0) while the stored columns stay bigint
     (exact; DuckDB's HUGEINT twin matches bit-for-bit)."""
-    from numaflow_spark.operators.ranking import (
-        add_global_running_sums,
-        materialize_ranking_input,
-    )
+    from numaflow_spark.operators.ranking import add_global_running_sums
 
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
@@ -4923,7 +4888,7 @@ def q_ks_priority_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     # op from the already-collected per-bucket sums — the separate
     # sum(c1)/sum(c2) aggregate + crossJoin broadcast job is gone; n1/n2
     # are the identical exact bigint folds of the same per-bucket values.
-    per = materialize_ranking_input(per, eager=False)
+    per = materialize(per, eager=False)
     per = add_global_running_sums(
         per, [F.col("price_c")], ["c1", "c2"], ["cum1", "cum2"],
         primary="price_c", materialize=False, totals_cols=["n1", "n2"],
@@ -5105,21 +5070,13 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One materialization of the distinct edge set: deg and the s(u) join
     # both read it, and lazily each branch would re-run the full
     # cooccurrence pipeline (explode + self-join) — the same shared-input
-    # rule as materialize_ranking_input. Plain AQE cut_lineage, NOT
-    # materialize_no_aqe: unlike degree_distribution, the expensive side
-    # here is the DISTINCT after the explode (a real shuffle AQE sizes
-    # well), and the interleaved x10 A/B (tools/ab_assort_sf1.json)
-    # measured no-AQE 10.01 s vs AQE 5.59 s min-of-3 — the no-AQE regime
-    # was 1.8x slower for this shape (r12 VERDICT What's-wrong #1).
-    # Plan audits (SPARK_GRAFT_NO_AQE_MATERIALIZE=0) see the lazy shape.
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_NO_AQE_MATERIALIZE", "1") not in (
-        "0", "false",
-    ):
-        from numaflow_spark.operators.graph import cut_lineage
-
-        pairs = cut_lineage(pairs, eager=True)
+    # rule as the ranking inputs. Under AQE, NOT materialize(aqe=False):
+    # unlike degree_distribution, the expensive side here is the DISTINCT
+    # after the explode (a real shuffle AQE sizes well), and the
+    # interleaved x10 A/B (tools/ab_assort_sf1.json) measured no-AQE
+    # 10.01 s vs AQE 5.59 s min-of-3 — the no-AQE regime was 1.8x slower
+    # for this shape (r12 VERDICT What's-wrong #1).
+    pairs = materialize(pairs)
     und = pairs.unionByName(
         pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -5370,10 +5327,7 @@ def q_mannwhitney_price_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie term Σ(t³−t) the variance formula needs — all DECIMAL(38,0), zero
     floats, bit-equal across engines at any SF. The location-shift test a
     corpus pipeline runs between two sources' length/score distributions."""
-    from numaflow_spark.operators.ranking import (
-        add_global_running_sums,
-        materialize_ranking_input,
-    )
+    from numaflow_spark.operators.ranking import add_global_running_sums
 
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
@@ -5394,7 +5348,7 @@ def q_mannwhitney_price_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 wave 2: lazy census cut — the running-sum op's bounded sums
     # pull materializes the rollup inside its own job (the ks twin's
     # device; the standalone checkpoint job is gone).
-    per = materialize_ranking_input(per, eager=False)
+    per = materialize(per, eager=False)
     per = add_global_running_sums(
         per, [F.col("price_c")], ["c1", "c2"], ["cum1", "cum2"],
         primary="price_c", materialize=False,
@@ -5494,9 +5448,8 @@ def q_spearman_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Lazy shared-input cut (the r13 probe-fusion device): the running-sum
     # op's first bounded pull materializes the census inside its own job —
     # the eager per-op cut paid the census shuffle twice (stats + cut).
-    from numaflow_spark.operators.ranking import materialize_ranking_input
 
-    pc = materialize_ranking_input(pc, eager=False)
+    pc = materialize(pc, eager=False)
     pr = add_global_running_sum(
         pc, [F.col("p")], "cp", "cump", primary="p", materialize=False,
     ).withColumn("rp2", F.expr("2 * (cump - cp) + cp + 1"))
@@ -6490,9 +6443,9 @@ QUERIES = {
 # arms, identical outputs) shows adaptive OFF winning >15% and >0.15 s at
 # sf0.1 AND confirming at x10 — e.g. ngram_jaccard 13.0 -> 5.7 s,
 # simhash_neardup 14.0 -> 7.6, winsorized_order_stats 14.1 -> 8.8,
-# triangle_count 43.1 -> 31.1 at x10. Each is materialized eagerly under
-# operators/graph.py::materialize_no_aqe (SPARK_GRAFT_NO_AQE_MATERIALIZE=0
-# restores the lazy plan for plan tests/audits). Queries that lost or tied
+# triangle_count 43.1 -> 31.1 at x10. Each is materialized eagerly by
+# operators/graph.py::materialize(aqe=False) (lazy_plans() keeps the lazy
+# plan for plan tests/audits). Queries that lost or tied
 # in either arm (the CC/LSH families, corpus_curation, quantity_quartiles,
 # winnow_dups) stay under AQE. At cluster scale with real data volumes the
 # crossover moves — re-measure with a cold A/B (tools/coldq.py) per
@@ -6516,9 +6469,7 @@ def _wrap_no_aqe(fn):
 
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from numaflow_spark.operators.graph import materialize_no_aqe
-
-        return materialize_no_aqe(fn(spark, sf_dir))
+        return materialize(fn(spark, sf_dir), aqe=False)
 
     return wrapped
 

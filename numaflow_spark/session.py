@@ -1,7 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Defaults are sized for the local[32]/128GiB test harness but every knob is
-chosen to also be the right *shape* at cluster scale: AQE on (runtime
+Defaults are sized for a local run (local[N], N = SPARK_GRAFT_CPUS or else
+the cores this process may run on) but every knob is chosen to also be
+the right *shape* at cluster scale: AQE on (runtime
 re-planning, skew-join splitting, partition coalescing), shuffle partitions
 sized to cores locally (on a real cluster this is overridden to ~2-3x total
 cores or left to AQE), UTC session timezone so event-time semantics match the
@@ -19,7 +20,7 @@ from pyspark.sql import SparkSession
 # callers should set spark.sql.shuffle.partitions (or rely on AQE coalescing
 # from a high initial value); everything in this repo keys off the session
 # config rather than hard-coding partition counts.
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -108,13 +109,19 @@ def cache_tables_enabled() -> bool:
     """ONE shared truthiness for SPARK_GRAFT_CACHE_TABLES (ADVICE r9 #3:
     session.py parsed == "1" while bench.py/duckdb_standalone.py parsed
     != "0", so a value like "true" cached the DuckDB baseline but not
-    Spark — a silently asymmetric ratio). On iff set to anything but
-    0/false/empty; unset stays OFF so tests and the driver's correctness
-    pass keep plain scans with observable pushdown. bench.py and
-    tools/duckdb_standalone.py setdefault it to "1" at entry, so both
-    engines always share one basis inside a benchmark run."""
-    return os.environ.get("SPARK_GRAFT_CACHE_TABLES", "0").strip().lower() \
-        not in ("0", "", "false")
+    Spark — a silently asymmetric ratio). 1/true turn it on, unset/empty/
+    0/false leave it off (any case); anything else raises, so a typo such
+    as "off" cannot silently cache. Unset stays OFF so tests and the
+    driver's correctness pass keep plain scans with observable pushdown.
+    bench.py and tools/duckdb_standalone.py setdefault it to "1" at entry,
+    so both engines always share one basis inside a benchmark run."""
+    raw = os.environ.get("SPARK_GRAFT_CACHE_TABLES", "")
+    val = raw.strip().lower()
+    if val not in ("", "0", "false", "1", "true"):
+        raise ValueError(
+            f"SPARK_GRAFT_CACHE_TABLES={raw!r}: expected 1/true or 0/false"
+        )
+    return val in ("1", "true")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):

@@ -1,4 +1,4 @@
-"""File sources: batch parquet scan + streaming replay.
+"""File source: streaming replay of a parquet directory.
 
 The replay source is the test-harness analogue of the reference's e2e input
 pumps (SURVEY.md §5): a directory of parquet part-files consumed
@@ -11,12 +11,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-
-from numaflow_spark.session import load_table
-
-
-def batch_source(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return load_table(spark, sf_dir, table)
 
 
 def replay_stream(

@@ -990,10 +990,6 @@ def encode_subscription(
     return out
 
 
-def decode_subscription(buf: bytes) -> list[str]:
-    return decode_subscription_owned(buf)[0]
-
-
 def decode_subscription_owned(
     buf: bytes,
 ) -> tuple[list[str], dict[str, list[int]]]:

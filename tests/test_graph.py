@@ -164,11 +164,12 @@ def test_pagerank_keeps_no_inflow_and_dangling_nodes(spark):
 
 
 def test_durable_checkpoint_path(spark, tmp_path):
-    """cut_lineage with a checkpoint_dir (param or spark.checkpoint.dir
-    conf) must produce identical results to the localCheckpoint default
-    AND actually write durable checkpoint data under the directory —
-    the 100 TB fault-tolerance knob (scale.py::cluster_conf wires the
-    conf)."""
+    """With ``spark.numaflow_spark.checkpoint.dir`` set (what
+    scale.py::cluster_conf wires), cut_lineage must produce identical
+    results to the localCheckpoint default AND actually write durable
+    checkpoint data under the directory — the 100 TB fault-tolerance knob.
+    CC's and BPE's per-round cuts both go durable with zero per-call
+    plumbing."""
     import os
 
     from numaflow_spark.operators.bpe import train_bpe
@@ -176,37 +177,27 @@ def test_durable_checkpoint_path(spark, tmp_path):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (9, 9)], ["u", "v"]
     )
-    base = {
-        tuple(r) for r in connected_components(edges).collect()
-    }
-
-    ckpt = str(tmp_path / "ckpt")
-    durable = {
-        tuple(r)
-        for r in connected_components(edges, checkpoint_dir=ckpt).collect()
-    }
-    assert durable == base
-    written = [
-        os.path.join(r, f) for r, _d, fs in os.walk(ckpt) for f in fs
-    ]
-    assert written, "durable checkpoint dir is empty — checkpoint() not used"
-
-    # conf-driven path (what cluster_conf sets): BPE's per-round cut also
-    # goes durable with zero per-call plumbing
     vocab = spark.createDataFrame(
         [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)],
         ["word", "freq"],
     )
+    base = {tuple(r) for r in connected_components(edges).collect()}
     merges_local, _ = train_bpe(vocab, 3)
+
+    ckpt = str(tmp_path / "ckpt")
+
+    def n_written():
+        return sum(len(fs) for _r, _d, fs in os.walk(ckpt))
+
     spark.conf.set("spark.numaflow_spark.checkpoint.dir", ckpt)
     try:
-        n_before = len(written)
+        durable = {tuple(r) for r in connected_components(edges).collect()}
+        assert durable == base
+        n_cc = n_written()
+        assert n_cc, "durable checkpoint dir is empty — checkpoint() not used"
         merges_durable, _ = train_bpe(vocab, 3)
         assert merges_durable == merges_local
-        written_after = [
-            os.path.join(r, f) for r, _d, fs in os.walk(ckpt) for f in fs
-        ]
-        assert len(written_after) > n_before
+        assert n_written() > n_cc
     finally:
         spark.conf.unset("spark.numaflow_spark.checkpoint.dir")
 
@@ -263,21 +254,24 @@ def test_cooccurrence_pairs_drops_null_group(spark):
 
 
 def test_sized_loop_conf_restores_confs(spark):
-    """sized_loop_conf sizes shuffle width from the measured row count and
-    restores AQE, partition, and broadcast confs on exit — including on
-    exception (a shared bench/driver session must never stay mutated)."""
-    from numaflow_spark.operators.graph import sized_loop_conf
+    """sized_loop_conf sizes shuffle width from the measured row count;
+    it and every scoped_conf block restore their confs on exit — including
+    on exception, and a key that was unset before is unset again (a shared
+    bench/driver session must never stay mutated)."""
+    from numaflow_spark.operators.graph import AQE, scoped_conf, sized_loop_conf
 
     before = {
         k: spark.conf.get(k)
         for k in (
-            "spark.sql.adaptive.enabled",
+            AQE,
             "spark.sql.shuffle.partitions",
             "spark.sql.autoBroadcastJoinThreshold",
         )
     }
+    unset = "spark.numaflow_spark.test.scoped"
+    assert spark.conf.get(unset, None) is None
     with sized_loop_conf(spark, 909):
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+        assert spark.conf.get(AQE) == "false"
         assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
         assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1"
     for k, v in before.items():
@@ -287,8 +281,65 @@ def test_sized_loop_conf_restores_confs(spark):
             # 2e9/5e5 rows -> capped at the session's configured width
             cap = int(before["spark.sql.shuffle.partitions"])
             assert int(spark.conf.get("spark.sql.shuffle.partitions")) == cap
-            raise RuntimeError("boom")
+            with scoped_conf(spark, {unset: "x", AQE: "true"}):
+                assert spark.conf.get(unset) == "x"
+                raise RuntimeError("boom")
     except RuntimeError:
         pass
     for k, v in before.items():
         assert spark.conf.get(k) == v
+    assert spark.conf.get(unset, None) is None
+
+
+def test_materialize_is_identity_under_lazy_plans(spark):
+    """Inside lazy_plans() materialize hands back the very same DataFrame
+    (plan audits see the query's lazy plan); on exit the flag is restored,
+    so the cut happens again."""
+    from numaflow_spark.operators.graph import AQE, lazy_plans, materialize
+
+    df = spark.range(5)
+    aqe = spark.conf.get(AQE)
+    with lazy_plans():
+        with lazy_plans():
+            assert materialize(df) is df
+        assert materialize(df, eager=False) is df  # nested exit keeps it lazy
+        assert materialize(df, aqe=False) is df
+    cut = materialize(df, aqe=False)
+    assert cut is not df
+    assert sorted(r.id for r in cut.collect()) == [0, 1, 2, 3, 4]
+    assert spark.conf.get(AQE) == aqe
+
+
+def test_conf_mutation_lives_in_scoped_conf():
+    """Static, Spark-free: inside operators/ the only ``spark.conf.set``
+    calls are the set/restore pair in graph.scoped_conf, and no source file
+    names the retired plan-audit env switch (graph.lazy_plans replaced
+    it)."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+
+    def conf_sets(node, fn=None):
+        for child in ast.iter_child_nodes(node):
+            if (isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr == "set"
+                    and isinstance(child.func.value, ast.Attribute)
+                    and child.func.value.attr == "conf"):
+                yield fn
+            inner = child.name if isinstance(child, ast.FunctionDef) else fn
+            yield from conf_sets(child, inner)
+
+    sites = [
+        (path.name, fn)
+        for path in sorted((root / "numaflow_spark" / "operators").glob("*.py"))
+        for fn in conf_sets(ast.parse(path.read_text()))
+    ]
+    assert sites == [("graph.py", "scoped_conf")] * 2, sites
+
+    knob = "SPARK_GRAFT_NO_AQE_" + "MATERIALIZE"  # split: not named here
+    sources = [*root.glob("*.py"),
+               *(p for d in ("numaflow_spark", "tools", "tests")
+                 for p in (root / d).rglob("*.py"))]
+    assert not [str(p) for p in sources if knob in p.read_text()]

@@ -6,32 +6,14 @@ degrades the 100 TB plan fails CI, not the cluster."""
 
 from __future__ import annotations
 
-import contextlib
-import os
 import re
 
 import pytest
 
+from numaflow_spark.operators.graph import lazy_plans
 from numaflow_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
-
-
-@contextlib.contextmanager
-def lazy_plans():
-    """Plan tests pin the UNDERLYING plan shape: disable the
-    materialize_no_aqe eager evaluation (graph.py) so queries in the
-    cooccurrence family return their lazy plan instead of a checkpointed
-    RDD scan."""
-    old = os.environ.get("SPARK_GRAFT_NO_AQE_MATERIALIZE")
-    os.environ["SPARK_GRAFT_NO_AQE_MATERIALIZE"] = "0"
-    try:
-        yield
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_NO_AQE_MATERIALIZE", None)
-        else:
-            os.environ["SPARK_GRAFT_NO_AQE_MATERIALIZE"] = old
 
 
 def plan_of(spark, name: str) -> str:

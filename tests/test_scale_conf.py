@@ -1,7 +1,10 @@
 """Cluster-scale preset: sizing math and config invariants, and the preset
-actually applies to a session builder (keys are all valid Spark confs)."""
+actually applies to a session builder (keys are all valid Spark confs); the
+session's SPARK_GRAFT_CACHE_TABLES flag parses strictly."""
 
 from __future__ import annotations
+
+import pytest
 
 from numaflow_spark.scale import cluster_conf, partitions_for
 
@@ -54,3 +57,27 @@ def test_streaming_state_partitions_rule():
     # floor 2 keeps the multi-partition contract even on tiny hosts
     assert streaming_state_partitions(1, 2) == 2
     assert streaming_state_partitions(8, 1) == 2
+
+
+@pytest.mark.parametrize("raw, on", [
+    (None, False), ("", False), ("0", False), ("false", False),
+    ("FALSE", False), (" 1 ", True), ("true", True), ("True", True),
+])
+def test_cache_tables_flag_values(monkeypatch, raw, on):
+    from numaflow_spark.session import cache_tables_enabled
+
+    if raw is None:
+        monkeypatch.delenv("SPARK_GRAFT_CACHE_TABLES", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_CACHE_TABLES", raw)
+    assert cache_tables_enabled() is on
+
+
+@pytest.mark.parametrize("raw", ["off", "yes", "2", "on"])
+def test_cache_tables_flag_rejects_typos(monkeypatch, raw):
+    """A value outside 1/true/0/false must not silently turn the memo on."""
+    from numaflow_spark.session import cache_tables_enabled
+
+    monkeypatch.setenv("SPARK_GRAFT_CACHE_TABLES", raw)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CACHE_TABLES"):
+        cache_tables_enabled()

@@ -13,10 +13,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Plan audits inspect the UNDERLYING plan: disable the cooccurrence
-# family's materialize_no_aqe eager evaluation (operators/graph.py).
-os.environ["SPARK_GRAFT_NO_AQE_MATERIALIZE"] = "0"
-
+from numaflow_spark.operators.graph import lazy_plans
 from numaflow_spark.queries import QUERIES
 from numaflow_spark.session import get_spark
 
@@ -76,12 +73,14 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     rows = []
-    for name, fn in QUERIES.items():
-        try:
-            rows.append(audit(spark, name, fn, sf_dir))
-        except Exception as ex:  # noqa: BLE001 — audit must not abort
-            rows.append({"query": name, "error": f"{type(ex).__name__}"})
-            print(f"! {name}: {ex}", file=sys.stderr)
+    # Plan audits inspect the UNDERLYING plan, not a materialized stub.
+    with lazy_plans():
+        for name, fn in QUERIES.items():
+            try:
+                rows.append(audit(spark, name, fn, sf_dir))
+            except Exception as ex:  # noqa: BLE001 — audit must not abort
+                rows.append({"query": name, "error": f"{type(ex).__name__}"})
+                print(f"! {name}: {ex}", file=sys.stderr)
     with open(out_md, "w") as f:
         f.write(
             "# PLANS — physical-plan audit of every declared query\n\n"

@@ -11,11 +11,13 @@ reproducible condition, not a host accident.
 Usage:
   python tools/coldq.py --queries khop_trade_graph,brand_supplier_counts \
       [--repo /root/repo] [--repo-b /root/r12w] [--sf /root/testdata/sf0.1] \
-      [--cpus 32] [--reps 2] [--load 16] \
+      [--cpus N] [--reps 2] [--load 16] \
       [--rounds 1] [--out tools/coldq_result.json]
 
 With --repo-b the tool alternates arms A,B per round (cold JVM each) so a
-host drift hits both arms symmetrically. The load recipe is recorded in the
+host drift hits both arms symmetrically. --cpus defaults to the engine's
+own default width (session.DEFAULT_CPUS: SPARK_GRAFT_CPUS, else the cores
+this process may use). The load recipe is recorded in the
 output JSON (`_meta.load_procs` busy-spin workers, started before and killed
 after each arm).
 """
@@ -29,6 +31,10 @@ import signal
 import subprocess
 import sys
 import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from numaflow_spark.session import DEFAULT_CPUS  # noqa: E402
 
 _CHILD = r"""
 import json, os, sys, time
@@ -137,7 +143,7 @@ def main() -> None:
     ap.add_argument("--repo-b", default=None,
                     help="second arm (e.g. a worktree at another commit)")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=DEFAULT_CPUS)
     ap.add_argument("--reps", type=int, default=2)
     ap.add_argument("--rounds", type=int, default=1)
     ap.add_argument("--load", type=int, default=0,

@@ -18,10 +18,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Inspect the underlying lazy plan: disable eager materialization devices so
-# the dumped plan is the full query shape, not a post-materialization stub.
-os.environ.setdefault("SPARK_GRAFT_NO_AQE_MATERIALIZE", "0")
-
 
 def main() -> int:
     out_dir = sys.argv[1]
@@ -29,6 +25,7 @@ def main() -> int:
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.01"
     names = sys.argv[4:]
 
+    from numaflow_spark.operators.graph import lazy_plans
     from numaflow_spark.queries import QUERIES
     from numaflow_spark.session import get_spark
 
@@ -44,7 +41,9 @@ def main() -> int:
             print(f"{name}: NOT REGISTERED (skipped)")
             continue
         try:
-            df = fn(spark, sf_dir)
+            # the full lazy query shape, not a post-materialization stub
+            with lazy_plans():
+                df = fn(spark, sf_dir)
             plan = df._jdf.queryExecution().explainString(mode)
         except Exception as ex:  # noqa: BLE001 — dump what we can, loudly
             plan = f"PLAN FAILED: {type(ex).__name__}: {ex}"

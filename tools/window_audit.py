@@ -15,10 +15,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Plan audits inspect the UNDERLYING plan: disable the cooccurrence
-# family's materialize_no_aqe eager evaluation (operators/graph.py).
-os.environ["SPARK_GRAFT_NO_AQE_MATERIALIZE"] = "0"
-
 
 def parse_tree(plan: str) -> list[tuple[int, str, int]]:
     """(indent_depth, op_name, node_id) per tree line of a formatted
@@ -101,6 +97,7 @@ def unpartitioned_windows(plan: str) -> int:
 def main() -> None:
     from pyspark.sql.session import SparkSession
 
+    from numaflow_spark.operators.graph import lazy_plans
     from numaflow_spark.queries import QUERIES
     from numaflow_spark.session import get_spark
 
@@ -109,17 +106,19 @@ def main() -> None:
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted")
     flagged = {}
-    for name, fn in QUERIES.items():
-        try:
-            df = fn(spark, sf)
-            plan = df._jdf.queryExecution().explainString(mode)
-            n = unpartitioned_windows(plan)
-        except Exception as ex:  # noqa: BLE001 — report, keep sweeping
-            print(f"ERR {name}: {ex}")
-            continue
-        if n:
-            flagged[name] = n
-            print(f"FLAG {name}: {n} single-partition window(s)")
+    # Plan audits inspect the UNDERLYING plan, not a materialized stub.
+    with lazy_plans():
+        for name, fn in QUERIES.items():
+            try:
+                df = fn(spark, sf)
+                plan = df._jdf.queryExecution().explainString(mode)
+                n = unpartitioned_windows(plan)
+            except Exception as ex:  # noqa: BLE001 — report, keep sweeping
+                print(f"ERR {name}: {ex}")
+                continue
+            if n:
+                flagged[name] = n
+                print(f"FLAG {name}: {n} single-partition window(s)")
     print(f"\n{len(flagged)} queries flagged of {len(QUERIES)}")
     print(sorted(flagged))
 
