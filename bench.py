@@ -384,6 +384,7 @@ def _streaming_throughput(
     from pyspark.sql import functions as F
 
     from numaflow_spark.message import drop_filter
+    from numaflow_spark.operators.graph import scoped_conf
     from numaflow_spark.sources.generator import generator_stream
 
     # Stateful-stream sizing is the ENGINE's rule, not the harness's
@@ -400,46 +401,47 @@ def _streaming_throughput(
         from numaflow_spark.scale import streaming_state_partitions
 
         state_partitions = streaming_state_partitions(key_count, DEFAULT_CPUS)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     ckpt = tempfile.mkdtemp(prefix="bench_stream_")
-    src = generator_stream(spark, rows_per_batch=rows_per_batch, key_count=key_count)
-    mapped = drop_filter(src).select(
-        "keys", "event_time", F.col("value").cast("string").cast("long").alias("v")
-    )
-    agg = (
-        mapped.withWatermark("event_time", "0 seconds")
-        .groupBy(F.window("event_time", "10 seconds"), "keys")
-        .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("bench_stream_sink")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
     try:
-        t0 = time.perf_counter()
-        rows = 0
-        # drain a fixed event budget; rate-micro-batch emits one batch per
-        # trigger so wall time is compute-bound, not tick-bound
-        while rows < n_batches * rows_per_batch and time.perf_counter() - t0 < 120:
-            rows = sum(int(p.get("numInputRows", 0)) for p in q.recentProgress)
-            time.sleep(0.2)
-        dt = time.perf_counter() - t0
-        return round(rows / dt, 1) if dt > 0 else 0.0
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(state_partitions)}):
+            src = generator_stream(spark, rows_per_batch=rows_per_batch, key_count=key_count)
+            mapped = drop_filter(src).select(
+                "keys", "event_time", F.col("value").cast("string").cast("long").alias("v")
+            )
+            agg = (
+                mapped.withWatermark("event_time", "0 seconds")
+                .groupBy(F.window("event_time", "10 seconds"), "keys")
+                .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
+            )
+            q = (
+                agg.writeStream.format("memory")
+                .queryName("bench_stream_sink")
+                .outputMode("update")
+                .option("checkpointLocation", ckpt)
+                .trigger(processingTime="0 seconds")
+                .start()
+            )
+            try:
+                t0 = time.perf_counter()
+                rows = 0
+                # drain a fixed event budget; rate-micro-batch emits one
+                # batch per trigger so wall time is compute-bound, not
+                # tick-bound
+                while rows < n_batches * rows_per_batch and time.perf_counter() - t0 < 120:
+                    rows = sum(int(p.get("numInputRows", 0)) for p in q.recentProgress)
+                    time.sleep(0.2)
+                dt = time.perf_counter() - t0
+                return round(rows / dt, 1) if dt > 0 else 0.0
+            finally:
+                try:
+                    # stopping mid-epoch aborts the in-flight micro-batch;
+                    # the interrupt surfaces as a (benign) commit error
+                    # from stop()
+                    q.stop()
+                except Exception:
+                    pass
     finally:
-        try:
-            # stopping mid-epoch aborts the in-flight micro-batch; the
-            # interrupt surfaces as a (benign) commit error from stop()
-            q.stop()
-        except Exception:
-            pass
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(ckpt, ignore_errors=True)
-
 
 if __name__ == "__main__":
     main()

@@ -7,11 +7,18 @@ Scale design (this is the 100 TB story):
   * exact n-gram Jaccard — candidate pairs via a shingle equi-join. Correct
     but O(sum over shingles of group²) — the *oracle/ground-truth* path, not
     the scale path.
-  * MinHash+LSH — the scale path: per-doc signature (k min-hashes, one pass,
-    no shuffle beyond the doc-level agg), banding (b bands × r rows), then a
-    self-join on (band, band-hash) buckets. Shuffle volume is #docs × b
-    band keys, independent of shingle cardinality; skewed buckets split by
-    AQE. Candidates are verified with exact Jaccard so precision is 1.
+  * MinHash+LSH — the scale path: ONE doc-level aggregate (cut once)
+    emits each doc's k min-hashes and its sorted shingle-hash set;
+    banding (b bands × r rows) feeds a self-join on (band, band-hash)
+    buckets. Shuffle volume is #docs × b band keys, independent of
+    shingle cardinality; skewed buckets split by AQE. Candidates are
+    verified with exact Jaccard — ``size(array_intersect(hs1, hs2))``
+    against that same aggregate — so precision is 1. History: until r16
+    verification re-joined the shingle table per candidate pair on
+    (d1, d2, h) and aggregated a separate size table (100k docs /
+    210k candidates: 9 s for that form, 144 s when one candidates ×
+    shingles side was broadcast instead); at sf0.01 it cost 13 of
+    minhash_neardup's jobs, now 6-7.
   * SimHash — 64-bit signature per doc from token-hash bit votes; near-dup
     candidates join on 16-bit chunks (Hamming ≤ 3 guarantees a matching
     chunk by pigeonhole) and verify with bit_count(xor).
@@ -28,6 +35,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from numaflow_spark.operators.graph import materialize
 from numaflow_spark.operators.text import fingerprint_md5, tokens
 
 # MinHash universe: permutations h_i(x) = (a_i * x + b_i) mod P over the
@@ -230,47 +238,34 @@ def jaccard_pairs(
     )
 
 
-def _pair_intersections(sh: DataFrame) -> DataFrame:
-    """(d1, d2, n_common) for every doc pair sharing ≥1 shingle hash —
-    the self-join whose cost is Σ_sh |group|²; bounded corpora only."""
-    a, b = sh.alias("a"), sh.alias("b")
-    return (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("d1"), F.col("b.doc").alias("d2"))
-        .agg(F.count("*").alias("n_common"))
-    )
-
-
-def _verify_jaccard(
-    pairs: DataFrame, sh: DataFrame, threshold: float, *, broadcast_pairs: bool
-) -> DataFrame:
-    """Attach set sizes and filter by exact Jaccard; `pairs` carries
-    (d1, d2, n_common).
-
-    Broadcast strategy by caller: the LSH path has a *small* candidate set
-    against a corpus-sized size table -> broadcast the pairs; the exact
-    all-pairs path has a *large* pair table (Σ|group|²) against a size
-    table bounded by #docs -> broadcast the sizes (the exact path is the
-    bounded-corpus ground-truth route anyway)."""
-    sizes = sh.groupBy("doc").agg(F.count("*").alias("sz"))
-    sa = sizes.select(F.col("doc").alias("d1"), F.col("sz").alias("sz1"))
-    sb = sizes.select(F.col("doc").alias("d2"), F.col("sz").alias("sz2"))
-    jac = F.col("n_common") / (F.col("sz1") + F.col("sz2") - F.col("n_common"))
-    if broadcast_pairs:
-        j1 = sa.join(F.broadcast(pairs), "d1")
-        j2 = sb.join(F.broadcast(j1), "d2")
-    else:
-        j2 = pairs.join(F.broadcast(sa), "d1").join(F.broadcast(sb), "d2")
-    return (
-        j2.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("d1", "d2", "n_common", "sz1", "sz2", "jaccard")
-    )
-
-
 def _minhash_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
     rnd = random.Random(seed)
     return [(rnd.randrange(1, _MINHASH_P), rnd.randrange(0, _MINHASH_P)) for _ in range(k)]
+
+
+def _minhash_aggs(k: int) -> list[Column]:
+    """The k permutation mins ``mh_i`` over the shingle hash ``h``, each
+    built as ONE SQL expression string: h is reduced into [0, P) with pmod
+    (non-negative) before the affine map. Building the same expression
+    from Column objects costs ~6 py4j calls per hash — 0.37-0.45 s of pure
+    driver time per plan at k=64 — for identical Catalyst expressions."""
+    hp = f"pmod(h, {_MINHASH_P})"
+    return [
+        F.expr(f"min(({ai} * {hp} + {bi}) % {_MINHASH_P})").alias(f"mh_{i}")
+        for i, (ai, bi) in enumerate(_minhash_params(k))
+    ]
+
+
+def band_hashes(k: int, bands: int) -> Column:
+    """array<int> of the ``bands`` LSH band keys over columns mh_0..mh_{k-1}:
+    band b is the murmur3 ``hash`` of its k/bands consecutive mins. One
+    SQL expression string (one py4j call) for the whole array."""
+    rows = k // bands
+    keys = ", ".join(
+        "hash(" + ", ".join(f"mh_{b * rows + r}" for r in range(rows)) + ")"
+        for b in range(bands)
+    )
+    return F.expr(f"array({keys})")
 
 
 def minhash_signatures(
@@ -282,14 +277,7 @@ def minhash_signatures(
     over the shingle hash (partial-aggregated map-side). Pass ``shingles``
     (from shingle_hashes) to share the scan with other stages."""
     sh = shingles if shingles is not None else shingle_hashes(df, id_col, text_col, n)
-    # reduce the 64-bit shingle hash into [0, P) before the affine map;
-    # pmod keeps it non-negative
-    hashed = sh.select("doc", F.pmod(F.col("h"), F.lit(_MINHASH_P)).alias("hp"))
-    aggs = [
-        F.min((F.lit(ai) * F.col("hp") + F.lit(bi)) % F.lit(_MINHASH_P)).alias(f"mh_{i}")
-        for i, (ai, bi) in enumerate(_minhash_params(k))
-    ]
-    return hashed.groupBy("doc").agg(*aggs)
+    return sh.groupBy("doc").agg(*_minhash_aggs(k))
 
 
 def minhash_lsh_pairs(
@@ -310,27 +298,34 @@ def minhash_lsh_pairs(
     ≥1-(1-0.8⁴)¹⁶ ≈ 0.9998 per pair. Candidates then get exact-Jaccard
     verification, so precision is exact and the output schema matches
     ``jaccard_pairs``.
+
+    Verification reads the SAME doc-level aggregate as the signature: one
+    ``groupBy(doc)`` emits the k mins and the doc's sorted shingle-hash
+    set ``hs`` and is cut once (``materialize``); a candidate's overlap
+    is ``size(array_intersect(hs1, hs2))`` row-locally in codegen, with
+    the set sizes from ``size(hs)``. The candidate pairs (two longs a
+    row) are broadcast into the doc table for the d1 side; the d2 side
+    joins the doc table on d2, a shuffle that tracks candidates × doc
+    length. No (d1, d2, shingle) expansion, no separate size aggregate.
     """
-    rows = k // bands
-    # The shingle table feeds the signature agg, both verification scans,
-    # and the size agg. It is deliberately NOT materialized: A/B at 100k
-    # docs measured recompute+ReusedExchange at 33s vs 78s localCheckpoint
-    # / 85s persist — the hash-narrow shingle subtree is cheaper to
-    # re-derive inside whole-stage codegen than to serialize and re-read.
-    # The repartition(doc) below IS that ReusedExchange: shingle_hashes
-    # itself is exchange-free (r9 array_distinct), so without an explicit
-    # exchange the tokenize+hash subtree would re-run once PER CONSUMER
-    # (measured 8.7 -> 34.6 s at x10 when the old distinct()'s implicit
-    # exchange disappeared); every consumer groups/windows by doc, so the
-    # one exchange also satisfies all their distributions.
-    sh = shingle_hashes(df, id_col, text_col, n).repartition(F.col("doc"))
-    sig = minhash_signatures(df, id_col, text_col, n=n, k=k, shingles=sh)
+    # The shingle table (docs × shingles rows) is deliberately NOT
+    # materialized: A/B at 100k docs measured recompute+ReusedExchange at
+    # 33s vs 78s localCheckpoint / 85s persist. Its one consumer is the
+    # doc-level aggregate, which IS cut (one row per doc): banding and
+    # both verification sides read it, and relying on exchange reuse for
+    # them fails when the input is a cached table — InMemoryRelation
+    # leaves break exchange canonical-equality, and at sf0.01 the
+    # tokenize+hash exchange then ran four times, once per consumer.
+    docs = materialize(
+        shingle_hashes(df, id_col, text_col, n).groupBy("doc").agg(
+            *_minhash_aggs(k), F.expr("sort_array(collect_list(h))").alias("hs")
+        )
+    )
     # one row per (doc, band): posexplode of the band hashes keeps this a
     # single pass over the signature table instead of `bands` unions
-    band_hashes = F.array(
-        *[F.hash(*[F.col(f"mh_{b * rows + r}") for r in range(rows)]) for b in range(bands)]
+    banded = docs.select(
+        F.col("doc"), F.posexplode(band_hashes(k, bands)).alias("band", "band_hash")
     )
-    banded = sig.select(F.col("doc"), F.posexplode(band_hashes).alias("band", "band_hash"))
     a, bside = banded.alias("a"), banded.alias("b")
     candidates = (
         a.join(
@@ -342,29 +337,29 @@ def minhash_lsh_pairs(
         .select(F.col("a.doc").alias("d1"), F.col("b.doc").alias("d2"))
         .distinct()
     )
-    # Exact-Jaccard verification restricted to the candidate pairs: the
-    # candidate PAIR table is broadcast into two corpus scans, and the two
-    # candidate-bounded (pair, shingle) sides then equi-join on
-    # (d1, d2, h) — a shuffle whose volume tracks candidates × doc length,
-    # never the corpus and never the all-pairs square. (Broadcasting one
-    # expanded side instead — candidates × shingles — was measured at 100k
-    # docs / 210k candidates to cost 144s vs 9s for this form: a
-    # candidate-pair broadcast is bounded, an expanded one is not.)
-    s1 = sh.join(F.broadcast(candidates), sh.doc == candidates.d1).select("d1", "d2", "h")
-    s2 = sh.join(F.broadcast(candidates), sh.doc == candidates.d2).select(
-        F.col("d1").alias("e1"), F.col("d2").alias("e2"), F.col("h").alias("h2")
+    # Candidate-bounded verification. The pair table (not a candidates ×
+    # shingles expansion, which was measured at 100k docs / 210k
+    # candidates to cost 144 s vs 9 s broadcast) is the broadcast side of
+    # the d1 join; the d2 join is left to the planner.
+    sets = docs.select(F.col("doc").alias("d1"), F.col("hs").alias("hs1"))
+    v = sets.join(F.broadcast(candidates), "d1").join(
+        docs.select(F.col("doc").alias("d2"), F.col("hs").alias("hs2")), "d2"
     )
-    inter = (
-        s1.join(
-            s2,
-            (F.col("d1") == F.col("e1"))
-            & (F.col("d2") == F.col("e2"))
-            & (F.col("h") == F.col("h2")),
-        )
-        .groupBy("d1", "d2")
-        .agg(F.count("*").alias("n_common"))
+    # bigint casts: the counting formulation emitted COUNT()-typed
+    # (bigint) columns and the driver's value hash is type-sensitive
+    v = v.select(
+        "d1",
+        "d2",
+        F.size(F.array_intersect("hs1", "hs2")).cast("bigint").alias("n_common"),
+        F.size("hs1").cast("bigint").alias("sz1"),
+        F.size("hs2").cast("bigint").alias("sz2"),
     )
-    return _verify_jaccard(inter, sh, threshold, broadcast_pairs=True)
+    jac = F.col("n_common") / (F.col("sz1") + F.col("sz2") - F.col("n_common"))
+    return (
+        v.withColumn("jaccard", jac)
+        .filter(F.col("jaccard") >= threshold)
+        .select("d1", "d2", "n_common", "sz1", "sz2", "jaccard")
+    )
 
 
 def span_dedup(

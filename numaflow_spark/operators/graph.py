@@ -7,28 +7,49 @@ SimHash / embedding-cosine) are only half of dedup — fuzzy duplicates form
 transitive families, so the corpus-level operation is pairs → connected
 components → one survivor per component.
 
-Algorithm: alternating large-star / small-star (Kiveris et al.,
+Algorithm: the entry edge set is canonicalized, cut eagerly and counted
+once. Up to ``DRIVER_CC_MAX_EDGES`` (2M) edges it is collected via Arrow
+and labelled on the driver (numpy min-label hooking with pointer jumping)
+into a local frame; the near-dup graphs of the declared queries and every
+streaming micro-batch take this path. Measured at local[4] on a 4-core
+15 GB host, random graphs with a giant component (nodes ≈ 0.86 × edges),
+CC plus two counts of its output, driver path vs distributed loop:
+200k edges 2.3 vs 11.8 s, 1M 7.1 vs 32.4 s, 2M 14.0 vs 54.9 s. The numpy
+labelling inside the driver path takes 0.07 / 0.51 / 1.11 s at those
+sizes (a pure-Python union-find 0.43 / 3.71 / 8.27 s, 18.6 s at 4M); the
+rest is the Arrow collect and the local frame. The bound stops there
+because past it the driver holds the whole graph for a gain a cluster's
+loop no longer needs.
+
+Above the bound: alternating large-star / small-star (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC'14). Each round is one
 shuffle keyed on node id with per-group state O(degree); convergence in
 O(log² n) rounds (2 rounds on the star-shaped families typical of near-dup
-graphs). This is the standard web-scale CC: no adjacency matrix, no driver
-state — the driver loop sees only a per-round convergence boolean (an
-empty-probe semi-join checking the star-forest fixpoint shape).
-Lineage is cut every round with ``localCheckpoint`` so the plan stays flat
-across iterations (at cluster scale, swap for ``checkpoint`` on durable
-storage to also bound recovery).
+graphs). This is the standard web-scale CC: no adjacency matrix, and the
+loop's driver sees only a per-round convergence boolean (an empty-probe
+semi-join checking the star-forest fixpoint shape). Lineage is cut every
+round with ``localCheckpoint`` so the plan stays flat across iterations
+(at cluster scale, swap for ``checkpoint`` on durable storage to also
+bound recovery).
 """
 
 from __future__ import annotations
 
 from contextlib import contextmanager
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructField, StructType
 
 __all__ = ["connected_components", "cut_lineage", "dedup_survivors", "fuzzy_dedup"]
 
 
 AQE = "spark.sql.adaptive.enabled"
+
+# Edge count up to which connected_components labels on the driver; the
+# measurement behind it is in the module docstring.
+DRIVER_CC_MAX_EDGES = 2_000_000
 
 
 @contextmanager
@@ -115,7 +136,14 @@ def cut_lineage(df: DataFrame, *, eager: bool = True) -> DataFrame:
     if durable is None:
         return df.localCheckpoint(eager=eager)
     sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
+    # setCheckpointDir creates <dir>/<uuid>, so the context's current dir
+    # follows the conf iff its parent is the conf's (qualified) path; a
+    # conf re-pointed mid-context re-points the context too.
+    current = sc.getCheckpointDir()
+    hpath = sc._jvm.org.apache.hadoop.fs.Path
+    want = hpath(durable)
+    want = want.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(want)
+    if current is None or hpath(current).getParent().toString() != want.toString():
         sc.setCheckpointDir(durable)
     return df.checkpoint(eager=eager)
 
@@ -217,51 +245,42 @@ def _round(edges: DataFrame) -> DataFrame:
     return to_nbrs.union(to_self).filter(F.col("u") != F.col("v")).distinct()
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "u",
-    dst: str = "v",
-    *,
-    max_iter: int = 30,
-) -> DataFrame:
-    """(node, component) for every node in ``edges``; component = the
-    minimum node id reachable from it. Isolated nodes (absent from the edge
-    list) are the caller's to union in — the operator never sees them.
-
-    Convergence = the edge set is a star forest (no target node also has an
-    outgoing edge), the algorithm's unique fixpoint shape — checked with an
-    empty-probe semi-join per round, so no confirm round is wasted re-running
-    the stars. The driver never sees edge data, only the boolean.
-    """
-    # Materialize the canonical edge set before iterating: round 1's plan
-    # references it from several union/join branches, so leaving the
-    # (possibly expensive — e.g. a full LSH pipeline) upstream lazy would
-    # re-evaluate it per branch. EAGER checkpoints (r14): the r13 lazy
-    # probe-fusion variant (rounds checkpoint lazily, the star-forest
-    # probe materializes them as a side effect, 1 job/round instead of 2)
-    # saved ~7 jobs/query on an idle host but the driver measured the
-    # whole CC family ~2x slower at 32 cores under host contention
-    # (neardup_clusters 4.7 -> 9.1 s, embedding_clusters 4.4 -> 12.2 s,
-    # scaling ratios 0.43-0.58) — a cold-JVM load-16 A/B
-    # (tools/coldq_device_revert.json) adjudicated the revert; eager was
-    # the r11/r12 form the driver measured healthy twice.
-    # NOTE on AQE in the rounds: the r10 AQE-off experiment (blanket AND
-    # loop-scoped) made CC *slower* here — embedding_clusters 4.87 -> 8.0 s,
-    # neardup_clusters 5.1 -> 6.0 s at sf0.1 — because each round is a
-    # ~6-exchange DAG whose coalesced reduce stages AQE compacts; the job
-    # floor it adds is cheaper than the uncoalesced task launches it
-    # avoids. CC keeps AQE OUTSIDE the loop; inside, sized_loop_conf's
-    # right-sized partitions are the missing half (see its docstring).
-    e = cut_lineage(
-        _canon(edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))),
-        eager=True,
+def _driver_components(e: DataFrame) -> DataFrame:
+    """(node, component) for a canonical edge set small enough for the
+    driver: one Arrow collect, then min-label hooking with pointer jumping
+    in numpy over dense node indices (np.unique sorts the ids, so the
+    minimum index of a component is its minimum id). Each pass hooks every
+    root to the smallest root it shares an edge with and then jumps every
+    pointer to its root; pointers only ever decrease, so the passes end.
+    The result is a local frame with the loop's column names and types."""
+    t = e.toArrow()
+    u, v = t.column("u").to_numpy(), t.column("v").to_numpy()
+    nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = idx[: len(u)], idx[len(u):]
+    parent = np.arange(len(nodes))
+    while True:
+        ra, rb = parent[a], parent[b]
+        cross = ra != rb
+        if not cross.any():
+            break
+        np.minimum.at(parent, np.maximum(ra, rb)[cross], np.minimum(ra, rb)[cross])
+        while not np.array_equal(jumped := parent[parent], parent):
+            parent = jumped
+    id_type = e.schema["u"].dataType
+    return e.sparkSession.createDataFrame(
+        pa.table({"node": nodes, "component": nodes[parent]}),
+        schema=StructType([StructField("node", id_type), StructField("component", id_type)]),
     )
-    # One count over the just-checkpointed blocks sizes the whole loop
-    # (sized_loop_conf): with AQE off and right-sized shuffle partitions
+
+
+def _star_loop(e: DataFrame, n0: int, *, max_iter: int = 30) -> DataFrame:
+    """Large-star/small-star rounds over a canonical (_canon), already
+    materialized edge set of ``n0`` rows, until the star-forest fixpoint;
+    returns (node, component)."""
+    # With AQE off and right-sized shuffle partitions (sized_loop_conf)
     # each round's eager materialization is ONE job, and the star-forest
     # probe (converged iff no node appears as BOTH a source and a target
     # — one union + one groupBy) reads materialized blocks only.
-    n0 = e.count()
     with sized_loop_conf(e.sparkSession, n0):
         for _ in range(max_iter):
             flags = (
@@ -284,6 +303,59 @@ def connected_components(
     members = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
     roots = e.select(F.col("v").alias("node"), F.col("v").alias("component")).distinct()
     return members.union(roots).distinct()
+
+
+def connected_components(
+    edges: DataFrame,
+    src: str = "u",
+    dst: str = "v",
+    *,
+    max_iter: int = 30,
+) -> DataFrame:
+    """(node, component) for every node in ``edges``; component = the
+    minimum node id reachable from it. Isolated nodes (absent from the edge
+    list) are the caller's to union in — the operator never sees them.
+
+    The canonical edge set is cut eagerly and counted once. Up to
+    DRIVER_CC_MAX_EDGES edges it is labelled on the driver
+    (``_driver_components``); above that the distributed large-star /
+    small-star loop runs (``_star_loop``). Its convergence = the edge set
+    is a star forest (no target node also has an outgoing edge), the
+    algorithm's unique fixpoint shape — checked with an empty-probe
+    semi-join per round, so no confirm round is wasted re-running the
+    stars; the loop's driver sees only that boolean.
+    """
+    # Materialize the canonical edge set before labelling: the loop's
+    # round 1 references it from several union/join branches, so leaving
+    # the (possibly expensive — e.g. a full LSH pipeline) upstream lazy
+    # would re-evaluate it per branch, and the driver path reads it twice
+    # (count, collect). EAGER checkpoints (r14): the r13 lazy
+    # probe-fusion variant (rounds checkpoint lazily, the star-forest
+    # probe materializes them as a side effect, 1 job/round instead of 2)
+    # saved ~7 jobs/query on an idle host but the driver measured the
+    # whole CC family ~2x slower at 32 cores under host contention
+    # (neardup_clusters 4.7 -> 9.1 s, embedding_clusters 4.4 -> 12.2 s,
+    # scaling ratios 0.43-0.58) — a cold-JVM load-16 A/B
+    # (tools/coldq_device_revert.json) adjudicated the revert; eager was
+    # the r11/r12 form the driver measured healthy twice.
+    # NOTE on AQE in the rounds: the r10 AQE-off experiment (blanket AND
+    # loop-scoped) made CC *slower* here — embedding_clusters 4.87 -> 8.0 s,
+    # neardup_clusters 5.1 -> 6.0 s at sf0.1 — because each round is a
+    # ~6-exchange DAG whose coalesced reduce stages AQE compacts; the job
+    # floor it adds is cheaper than the uncoalesced task launches it
+    # avoids. CC keeps AQE OUTSIDE the loop; inside, sized_loop_conf's
+    # right-sized partitions are the missing half (see its docstring).
+    e = cut_lineage(
+        _canon(edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))),
+        eager=True,
+    )
+    # AQE off: a count over checkpointed blocks is one job, not AQE's two
+    # (map stage + result)
+    with scoped_conf(e.sparkSession, {AQE: "false"}):
+        n0 = e.count()
+    if n0 <= DRIVER_CC_MAX_EDGES:
+        return _driver_components(e)
+    return _star_loop(e, n0, max_iter=max_iter)
 
 
 def dedup_survivors(

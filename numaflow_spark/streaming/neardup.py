@@ -53,7 +53,7 @@ import warnings
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from numaflow_spark.operators.dedup import minhash_signatures, shingle_hashes
+from numaflow_spark.operators.dedup import band_hashes, minhash_signatures, shingle_hashes
 
 
 def require_local_store(path: str) -> str:
@@ -90,13 +90,9 @@ def band_table(
     df: DataFrame, id_col: str, text_col: str, *, n: int = 3, k: int = 64, bands: int = 16
 ) -> DataFrame:
     """(doc, band, band_hash) — bands rows per doc, one pass."""
-    rows = k // bands
     sh = shingle_hashes(df, id_col, text_col, n)
     sig = minhash_signatures(df, id_col, text_col, n=n, k=k, shingles=sh)
-    band_hashes = F.array(
-        *[F.hash(*[F.col(f"mh_{b * rows + r}") for r in range(rows)]) for b in range(bands)]
-    )
-    return sig.select(F.col("doc"), F.posexplode(band_hashes).alias("band", "band_hash"))
+    return sig.select(F.col("doc"), F.posexplode(band_hashes(k, bands)).alias("band", "band_hash"))
 
 
 def minhash_sig_table(
@@ -336,14 +332,9 @@ class StreamingNearDup:
         sig_wide = minhash_signatures(
             batch, self.id_col, self.text_col, n=self.n, k=self.k
         ).localCheckpoint(eager=True)
-        rows = self.k // self.bands
-        band_hashes = F.array(
-            *[
-                F.hash(*[F.col(f"mh_{b * rows + r}") for r in range(rows)])
-                for b in range(self.bands)
-            ]
+        bands = sig_wide.select(
+            "doc", F.posexplode(band_hashes(self.k, self.bands)).alias("band", "band_hash")
         )
-        bands = sig_wide.select("doc", F.posexplode(band_hashes).alias("band", "band_hash"))
         sigs = sig_wide.select(
             "doc", F.array(*[F.col(f"mh_{i}") for i in range(self.k)]).alias("sig")
         )

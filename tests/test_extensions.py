@@ -612,12 +612,26 @@ def test_jaccard_pairs_prefix_filter_matches_naive(spark):
     near-dups, several thresholds (prefix length depends on t)."""
     import random as rnd
 
-    from numaflow_spark.operators.dedup import (
-        _pair_intersections,
-        _verify_jaccard,
-        jaccard_pairs,
-        shingle_hashes,
-    )
+    from numaflow_spark.operators.dedup import jaccard_pairs, shingle_hashes
+
+    def naive_pairs(sh, t):
+        """Every doc pair sharing a shingle hash (the Σ_sh |group|²
+        self-join), set sizes attached, filtered by exact Jaccard."""
+        a, b = sh.alias("a"), sh.alias("b")
+        inter = (
+            a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc") < F.col("b.doc")))
+            .groupBy(F.col("a.doc").alias("d1"), F.col("b.doc").alias("d2"))
+            .agg(F.count("*").alias("n_common"))
+        )
+        sizes = sh.groupBy("doc").agg(F.count("*").alias("sz"))
+        jac = F.col("n_common") / (F.col("sz1") + F.col("sz2") - F.col("n_common"))
+        return (
+            inter.join(sizes.select(F.col("doc").alias("d1"), F.col("sz").alias("sz1")), "d1")
+            .join(sizes.select(F.col("doc").alias("d2"), F.col("sz").alias("sz2")), "d2")
+            .withColumn("jaccard", jac)
+            .filter(F.col("jaccard") >= t)
+            .select("d1", "d2", "n_common", "sz1", "sz2", "jaccard")
+        )
 
     r = rnd.Random(1234)
     vocab = [f"w{i}" for i in range(120)]
@@ -640,9 +654,7 @@ def test_jaccard_pairs_prefix_filter_matches_naive(spark):
         sh = shingle_hashes(df, "doc_id", "text", 3)
         want = {
             tuple(x)
-            for x in _verify_jaccard(
-                _pair_intersections(sh), sh, t, broadcast_pairs=False
-            ).collect()
+            for x in naive_pairs(sh, t).collect()
         }
         assert got == want, f"threshold {t}: prefix plan diverged from naive"
         if t == 0.5:

@@ -60,6 +60,120 @@ def test_random_graph_matches_union_find(spark, seed):
     assert cc_dict(spark, edges) == union_find(edges)
 
 
+def _both_paths(df):
+    """(driver labelling, star loop) results for one raw edge frame, each
+    path called directly on the same canonical, materialized edge set."""
+    from numaflow_spark.operators.graph import (
+        _canon,
+        _driver_components,
+        _star_loop,
+        cut_lineage,
+    )
+
+    e = cut_lineage(_canon(df))
+    return _driver_components(e), _star_loop(e, e.count())
+
+
+def _giant_component_edges(rnd, n_nodes, n_edges):
+    """A random graph whose edges mostly fall in one giant component (avg
+    degree > 1), plus a few small side components on disjoint ids."""
+    ids = rnd.sample(range(1, 10**6), n_nodes)
+    edges = [(rnd.choice(ids), rnd.choice(ids)) for _ in range(n_edges)]
+    side = [(2 * 10**6 + i, 2 * 10**6 + i + 1) for i in range(0, 12, 3)]
+    return edges + side
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["giant_3", "giant_29", "chain64", "chain64_reversed", "messy", "empty"],
+)
+@pytest.mark.parametrize("ddl", ["u int, v int", "u bigint, v bigint"])
+def test_driver_labelling_matches_star_loop(spark, case, ddl):
+    """The two CC paths agree row for row and in schema: random graphs with
+    a giant component, the 64-node chain in both id orders, self-loops
+    with duplicate and reversed edges, and empty input — for int and
+    bigint ids, whose type both outputs must keep."""
+    rnd = random.Random(case)
+    edges = {
+        "giant_3": lambda: _giant_component_edges(rnd, 300, 420),
+        "giant_29": lambda: _giant_component_edges(rnd, 150, 260),
+        "chain64": lambda: [(i, i + 1) for i in range(63)],
+        "chain64_reversed": lambda: [(64 - i, 63 - i) for i in range(63)],
+        "messy": lambda: [(1, 2), (2, 1), (1, 2), (3, 3), (4, 4), (4, 5),
+                          (5, 4), (9, 7), (7, 9), (7, 7), (11, 11)],
+        "empty": lambda: [],
+    }[case]()
+    df = spark.createDataFrame(edges, ddl)
+    driver, loop = _both_paths(df)
+    assert driver.schema == loop.schema
+    want_type = df.schema["u"].dataType
+    assert [f.dataType for f in driver.schema] == [want_type, want_type]
+    got = sorted(tuple(r) for r in driver.collect())
+    assert got == sorted(tuple(r) for r in loop.collect())
+    assert dict(got) == union_find([e for e in edges if e[0] != e[1]])
+
+
+def test_graph_above_bound_takes_the_loop(spark, monkeypatch):
+    """Above DRIVER_CC_MAX_EDGES connected_components runs the distributed
+    loop and never the driver path, whose edge-sized collect the loop
+    does not make: its driver traffic stays one-row results."""
+    from pyspark.sql import DataFrame
+
+    from numaflow_spark.operators import graph
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(40)], "u long, v long")
+
+    def no_driver(e):  # pragma: no cover - failure path
+        raise AssertionError("driver labelling above the bound")
+
+    monkeypatch.setattr(graph, "_driver_components", no_driver)
+    monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", 39)
+    real_collect = DataFrame.collect
+
+    def guarded(self):
+        rows = real_collect(self)
+        assert len(rows) <= 1, "the loop collected a multi-row result"
+        return rows
+
+    monkeypatch.setattr(DataFrame, "collect", guarded)
+    out = graph.connected_components(edges)
+    monkeypatch.setattr(DataFrame, "collect", real_collect)
+    assert {(r.node, r.component) for r in out.collect()} == {(i, 0) for i in range(41)}
+
+
+def test_graph_at_bound_takes_the_driver_path(spark, monkeypatch):
+    from numaflow_spark.operators import graph
+
+    def no_loop(e, n0, **kw):  # pragma: no cover - failure path
+        raise AssertionError("distributed loop at the bound")
+
+    monkeypatch.setattr(graph, "_star_loop", no_loop)
+    monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", 3)
+    edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8), (2, 1)], "u long, v long")
+    got = {(r.node, r.component) for r in graph.connected_components(edges).collect()}
+    assert got == {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
+
+
+def test_neardup_clusters_job_budget(spark):
+    """neardup_clusters at sf0.01 launches at most 12 Spark jobs: the LSH
+    pair build reads one cut doc-level aggregate and the pair graph is
+    labelled on the driver. A change that brings back per-consumer
+    re-derivation or the distributed loop on this 25-edge graph fails."""
+    from numaflow_spark.queries import QUERIES
+
+    sc = spark.sparkContext
+    group = "job-budget-neardup-clusters"
+    sc.setJobGroup(group, group)
+    try:
+        rows = QUERIES["neardup_clusters"](spark, "/root/testdata/sf0.01").toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(rows) == 47
+    assert len(jobs) <= 12, f"neardup_clusters ran {len(jobs)} jobs"
+
+
 def test_dedup_survivors_keeps_min_and_isolated(spark):
     docs = spark.range(0, 30).withColumnRenamed("id", "doc_id")
     pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "d1 long, d2 long")
@@ -202,6 +316,28 @@ def test_durable_checkpoint_path(spark, tmp_path):
         spark.conf.unset("spark.numaflow_spark.checkpoint.dir")
 
 
+def test_checkpoint_dir_follows_the_conf(spark, tmp_path):
+    """Re-pointing ``spark.numaflow_spark.checkpoint.dir`` on a live
+    SparkContext re-points the durable checkpoints: conf → a, cut, conf
+    → b, cut leaves checkpoint files under both directories."""
+    import os
+
+    from numaflow_spark.operators.graph import cut_lineage
+
+    def n_files(d):
+        return sum(len(fs) for _r, _d, fs in os.walk(d))
+
+    key = "spark.numaflow_spark.checkpoint.dir"
+    try:
+        for name in ("a", "b"):
+            d = str(tmp_path / name)
+            spark.conf.set(key, d)
+            assert cut_lineage(spark.range(10)).count() == 10
+            assert n_files(d), f"no checkpoint written under {name}"
+    finally:
+        spark.conf.unset(key)
+
+
 def test_cluster_conf_checkpoint_dir():
     from numaflow_spark.scale import cluster_conf
 
@@ -311,8 +447,9 @@ def test_materialize_is_identity_under_lazy_plans(spark):
 
 
 def test_conf_mutation_lives_in_scoped_conf():
-    """Static, Spark-free: inside operators/ the only ``spark.conf.set``
-    calls are the set/restore pair in graph.scoped_conf, and no source file
+    """Static, Spark-free: across operators/, the root-level scripts and
+    tools/, the only ``spark.conf.set`` calls are the set/restore pair in
+    graph.scoped_conf (the explicit allow-list below), and no source file
     names the retired plan-audit env switch (graph.lazy_plans replaced
     it)."""
     import ast
@@ -331,12 +468,15 @@ def test_conf_mutation_lives_in_scoped_conf():
             inner = child.name if isinstance(child, ast.FunctionDef) else fn
             yield from conf_sets(child, inner)
 
+    allowed = [("numaflow_spark/operators/graph.py", "scoped_conf")] * 2
+    scanned = [*(root / "numaflow_spark" / "operators").glob("*.py"),
+               *root.glob("*.py"), *(root / "tools").glob("*.py")]
     sites = [
-        (path.name, fn)
-        for path in sorted((root / "numaflow_spark" / "operators").glob("*.py"))
+        (str(path.relative_to(root)), fn)
+        for path in sorted(scanned)
         for fn in conf_sets(ast.parse(path.read_text()))
     ]
-    assert sites == [("graph.py", "scoped_conf")] * 2, sites
+    assert sites == allowed, sites
 
     knob = "SPARK_GRAFT_NO_AQE_" + "MATERIALIZE"  # split: not named here
     sources = [*root.glob("*.py"),

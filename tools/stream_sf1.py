@@ -25,6 +25,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from numaflow_spark.operators.graph import scoped_conf
 from numaflow_spark.session import get_spark
 
 
@@ -40,99 +41,98 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     # RocksDB state store — the cluster preset's choice (scale.py); the
-    # default HDFS-backed store would hold all state on-heap.
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    # default HDFS-backed store would hold all state on-heap. Both confs
+    # are restored when the run ends, an exception included.
+    confs = {
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider",
+        "spark.sql.shuffle.partitions": "8",
+    }
+    with scoped_conf(spark, confs):
+        # Split the single parquet file into n_files so maxFilesPerTrigger=1
+        # yields real micro-batches (one file = one 1M-row mega-batch).
+        feed = tempfile.mkdtemp(prefix="stream_sf1_feed_")
+        ckpt = tempfile.mkdtemp(prefix="stream_sf1_ckpt_")
+        src_static = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        total_rows = src_static.count()
+        n_users = src_static.select("user_id").distinct().count()
+        src_static.repartition(n_files).write.mode("overwrite").parquet(feed)
 
-    # Split the single parquet file into n_files so maxFilesPerTrigger=1
-    # yields real micro-batches (one file = one 1M-row mega-batch).
-    feed = tempfile.mkdtemp(prefix="stream_sf1_feed_")
-    ckpt = tempfile.mkdtemp(prefix="stream_sf1_ckpt_")
-    src_static = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    total_rows = src_static.count()
-    n_users = src_static.select("user_id").distinct().count()
-    src_static.repartition(n_files).write.mode("overwrite").parquet(feed)
-
-    stream = (
-        spark.readStream.schema(src_static.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-    )
-    # The derived sf1 parquet stores ts as TIMESTAMP_NTZ (written by a
-    # Spark 4 session with NTZ inference); watermarks require TIMESTAMP —
-    # same cast load_table applies on the batch side.
-    mapped = stream.select(
-        "user_id",
-        F.col("ts").cast("timestamp").alias("event_time"),
-        F.col("value").cast("long").alias("v"),
-    )
-    agg = (
-        mapped.withWatermark("event_time", "0 seconds")
-        .groupBy(F.window("event_time", "1 hour"), "user_id")
-        .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("stream_sf1_sink")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        t0 = time.perf_counter()
-        rows = 0
-        while rows < total_rows and time.perf_counter() - t0 < 600:
-            rows = sum(int(p.get("numInputRows", 0)) for p in q.recentProgress)
-            time.sleep(0.25)
-        wall = time.perf_counter() - t0
-        state = {}
-        for p in reversed(q.recentProgress):
-            ops = p.get("stateOperators") or []
-            if ops:
-                state = {
-                    "numRowsTotal": ops[0].get("numRowsTotal"),
-                    "memoryUsedBytes": ops[0].get("memoryUsedBytes"),
-                    "numRowsUpdated": ops[0].get("numRowsUpdated"),
-                }
-                break
-        # sizing rule check: windows span the events table's time range at
-        # 1h grain; state rows must be <= distinct users x distinct windows
-        n_windows = src_static.select(
-            F.window("ts", "1 hour")["start"].alias("w")
-        ).distinct().count()
-        result = {
-            "sf_dir": sf_dir,
-            "rows": rows,
-            "wall_sec": round(wall, 1),
-            "events_per_sec": round(rows / wall, 1) if wall > 0 else 0.0,
-            "micro_batches": n_files,
-            "distinct_users": n_users,
-            "distinct_windows": n_windows,
-            "keys_x_windows_bound": n_users * n_windows,
-            "state": state,
-            "state_store": "rocksdb",
-            "bound_holds": (
-                state.get("numRowsTotal") is not None
-                and state["numRowsTotal"] <= n_users * n_windows
-            ),
-        }
-        with open(out_path, "w") as f:
-            json.dump(result, f, indent=1)
-        print(json.dumps(result))
-    finally:
+        stream = (
+            spark.readStream.schema(src_static.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(feed)
+        )
+        # The derived sf1 parquet stores ts as TIMESTAMP_NTZ (written by a
+        # Spark 4 session with NTZ inference); watermarks require TIMESTAMP —
+        # same cast load_table applies on the batch side.
+        mapped = stream.select(
+            "user_id",
+            F.col("ts").cast("timestamp").alias("event_time"),
+            F.col("value").cast("long").alias("v"),
+        )
+        agg = (
+            mapped.withWatermark("event_time", "0 seconds")
+            .groupBy(F.window("event_time", "1 hour"), "user_id")
+            .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
+        )
+        q = (
+            agg.writeStream.format("memory")
+            .queryName("stream_sf1_sink")
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
         try:
-            q.stop()
-        except Exception:  # noqa: BLE001 — mid-epoch stop is benign
-            pass
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(feed, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+            t0 = time.perf_counter()
+            rows = 0
+            while rows < total_rows and time.perf_counter() - t0 < 600:
+                rows = sum(int(p.get("numInputRows", 0)) for p in q.recentProgress)
+                time.sleep(0.25)
+            wall = time.perf_counter() - t0
+            state = {}
+            for p in reversed(q.recentProgress):
+                ops = p.get("stateOperators") or []
+                if ops:
+                    state = {
+                        "numRowsTotal": ops[0].get("numRowsTotal"),
+                        "memoryUsedBytes": ops[0].get("memoryUsedBytes"),
+                        "numRowsUpdated": ops[0].get("numRowsUpdated"),
+                    }
+                    break
+            # sizing rule check: windows span the events table's time range at
+            # 1h grain; state rows must be <= distinct users x distinct windows
+            n_windows = src_static.select(
+                F.window("ts", "1 hour")["start"].alias("w")
+            ).distinct().count()
+            result = {
+                "sf_dir": sf_dir,
+                "rows": rows,
+                "wall_sec": round(wall, 1),
+                "events_per_sec": round(rows / wall, 1) if wall > 0 else 0.0,
+                "micro_batches": n_files,
+                "distinct_users": n_users,
+                "distinct_windows": n_windows,
+                "keys_x_windows_bound": n_users * n_windows,
+                "state": state,
+                "state_store": "rocksdb",
+                "bound_holds": (
+                    state.get("numRowsTotal") is not None
+                    and state["numRowsTotal"] <= n_users * n_windows
+                ),
+            }
+            with open(out_path, "w") as f:
+                json.dump(result, f, indent=1)
+            print(json.dumps(result))
+        finally:
+            try:
+                q.stop()
+            except Exception:  # noqa: BLE001 — mid-epoch stop is benign
+                pass
+            shutil.rmtree(feed, ignore_errors=True)
+            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 if __name__ == "__main__":
