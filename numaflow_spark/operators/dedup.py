@@ -18,7 +18,8 @@ Scale design (this is the 100 TB story):
     (d1, d2, h) and aggregated a separate size table (100k docs /
     210k candidates: 9 s for that form, 144 s when one candidates ×
     shingles side was broadcast instead); at sf0.01 it cost 13 of
-    minhash_neardup's jobs, now 6-7.
+    minhash_neardup's jobs, now 8 in a plain session and 7 with
+    cached tables.
   * SimHash — 64-bit signature per doc from token-hash bit votes; near-dup
     candidates join on 16-bit chunks (Hamming ≤ 3 guarantees a matching
     chunk by pigeonhole) and verify with bit_count(xor).
@@ -146,9 +147,10 @@ def jaccard_pairs(
                 f"jaccard_pairs is the exact ground-truth path, gated to "
                 f"{max_docs} docs; use minhash_lsh_pairs at scale"
             )
-    # repartition(doc) = the reuse point for the 4 consumers of the
-    # shingle subtree (prefix window, size agg, both verification sides) —
-    # same rationale as minhash_lsh_pairs below, all consumers doc-keyed
+    # repartition(doc) = the reuse point of the shingle subtree: its
+    # consumers (the prefix window, the size aggregate and the doc-set
+    # aggregate behind both verification sides) are all doc-keyed, so
+    # this one doc-hashed exchange feeds every one of them
     sh = shingle_hashes(df, id_col, text_col, n).repartition(F.col("doc"))
     sizes = sh.groupBy("doc").agg(F.count("*").alias("sz"))
     # Candidate filters run in float, and a double product can overshoot
@@ -490,20 +492,25 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # was measured in-suite at sf0.1 and LOST (+1.1s): the extra shuffle
     # costs more than the saved expression work on this corpus. Votes run
     # per token occurrence, map-side partial-aggregated into one doc agg.
+    # The 63 votes and the 63-term fold are SQL expression strings, one
+    # py4j call each (as in _minhash_aggs): building them from Columns made
+    # ~14k py4j calls per plan. Same operands, same left-deep `+`, so the
+    # optimized plan and every value are unchanged.
     hashed = tok.select("doc", _token_poly_hash(F.col("tok")).alias("hv"))
     votes = [
-        F.sum(
-            F.when(((F.col("hv") * a + b) % _SIMHASH_BIT_P) % 2 == 1, 1).otherwise(-1)
-        ).alias(f"v{i}")
+        F.expr(
+            f"sum(CASE WHEN ((hv * {a} + {b}) % {_SIMHASH_BIT_P}) % 2 = 1 "
+            f"THEN 1 ELSE -1 END) AS v{i}"
+        )
         for i, (a, b) in enumerate(_simhash_bit_params())
     ]
     voted = hashed.groupBy("doc").agg(*votes)
-    sim = None
-    for i in range(_SIMHASH_BITS):
-        bit = F.when(F.col(f"v{i}") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = F.shiftleft(bit, i)
-        sim = term if sim is None else sim + term
-    return voted.select("doc", sim.alias("simhash"))
+    sim = " + ".join(
+        f"shiftleft(CASE WHEN v{i} > 0 THEN CAST(1 AS BIGINT) "
+        f"ELSE CAST(0 AS BIGINT) END, {i})"
+        for i in range(_SIMHASH_BITS)
+    )
+    return voted.select("doc", F.expr(f"{sim} AS simhash"))
 
 
 def simhash_oracle_sql(

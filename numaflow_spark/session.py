@@ -23,6 +23,38 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
+def driver_memory(
+    meminfo: str = "/proc/meminfo", cgroup_max: str = "/sys/fs/cgroup/memory.max"
+) -> str:
+    """Driver heap ceiling: ``SPARK_GRAFT_DRIVER_MEM`` when set, otherwise
+    half of the memory this process may use — the smaller of the host's
+    MemTotal and the cgroup v2 ``memory.max`` — in whole GiB, at least 1g
+    and at most 48g. A fixed 48g ceiling on a 16 GB
+    host let the JVM grow until the kernel OOM-killed it (the distributed
+    CC loop at 2M edges reached 16 GB RSS) instead of collecting garbage.
+    A missing or unlimited (``max``) cgroup file leaves MemTotal alone;
+    with neither file readable the ceiling stays 48g."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    limits = []
+    try:
+        with open(meminfo) as f:
+            limits += [int(ln.split()[1]) * 1024 for ln in f if ln.startswith("MemTotal:")]
+    except OSError:
+        pass
+    try:
+        with open(cgroup_max) as f:
+            raw = f.read().strip()
+        if raw.isdigit():
+            limits.append(int(raw))
+    except OSError:
+        pass
+    if not limits:
+        return "48g"
+    gib = min(limits) // 2 // 2**30
+    return f"{max(1, min(48, gib))}g"
+
+
 def get_spark(
     app_name: str = "numaflow_spark",
     cpus: int | None = None,
@@ -31,7 +63,11 @@ def get_spark(
     """Build (or fetch) the tuned SparkSession.
 
     All engine code and tests go through this factory so the oracle-critical
-    configs (UTC timezone, ANSI off, Arrow on) are applied uniformly.
+    configs (UTC timezone, Arrow on) are applied uniformly. ANSI mode is
+    left at Spark's default, which is on: an overflowing bigint raises
+    instead of wrapping.
+
+    The driver heap ceiling comes from :func:`driver_memory`.
     """
     n = cpus or DEFAULT_CPUS
     builder = (
@@ -57,7 +93,7 @@ def get_spark(
         # off). On a real cluster with thousands of cores raise this back
         # toward 64m; like every knob here it keys off session config.
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

@@ -1,6 +1,7 @@
 """Cluster-scale preset: sizing math and config invariants, and the preset
 actually applies to a session builder (keys are all valid Spark confs); the
-session's SPARK_GRAFT_CACHE_TABLES flag parses strictly."""
+session's SPARK_GRAFT_CACHE_TABLES flag parses strictly; the default
+driver heap follows the host's memory."""
 
 from __future__ import annotations
 
@@ -81,3 +82,26 @@ def test_cache_tables_flag_rejects_typos(monkeypatch, raw):
     monkeypatch.setenv("SPARK_GRAFT_CACHE_TABLES", raw)
     with pytest.raises(ValueError, match="SPARK_GRAFT_CACHE_TABLES"):
         cache_tables_enabled()
+
+
+@pytest.mark.parametrize("mem_kb, cgroup, heap", [
+    (16_456_384, None, "7g"),            # this 16 GB host, no cgroup file
+    (16_456_384, "max", "7g"),           # unlimited cgroup: MemTotal rules
+    (16_456_384, str(6 * 2**30), "3g"),  # a tighter cgroup limit wins
+    (512 * 2**20, None, "48g"),          # 512 GiB host: capped at 48g
+    (1_000_000, None, "1g"),             # under 2 GiB: never below 1g
+])
+def test_driver_memory_from_host(monkeypatch, tmp_path, mem_kb, cgroup, heap):
+    """Spark-free: the default heap is half of min(MemTotal, memory.max)
+    in whole GiB, within [1g, 48g]; SPARK_GRAFT_DRIVER_MEM overrides."""
+    from numaflow_spark.session import driver_memory
+
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text(f"MemFree:  123 kB\nMemTotal: {mem_kb} kB\n")
+    cgroup_max = tmp_path / "memory.max"
+    if cgroup is not None:
+        cgroup_max.write_text(cgroup + "\n")
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert driver_memory(str(meminfo), str(cgroup_max)) == heap
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "5g")
+    assert driver_memory(str(meminfo), str(cgroup_max)) == "5g"
