@@ -26,7 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from numaflow_spark.operators import reduce_ops, routing
+from numaflow_spark.operators.graph import scoped_conf
 from numaflow_spark.pipeline import MapUDF, Pipeline, ReduceUDF, Vertex
+from numaflow_spark.scale import streaming_state_partitions
 
 
 def _accumulator_shape(df: DataFrame, ts_col: str) -> DataFrame:
@@ -235,12 +237,29 @@ def compile_streaming(
     sink.proto:30-35 — per-batch status routing/fallback happens inside the
     writer); others go to a named memory sink (the test harness's golden-sink,
     mirroring the reference's Redis check sink, test/fixtures/redis_check.go).
+
+    Every query starts at the state width from
+    ``scale.streaming_state_partitions``: cores are the session's
+    defaultParallelism, and the key limit applies only when every source
+    declares its ``key_count`` (their sum; a map may re-key, but the width
+    is a cost choice, never a correctness one). The width is set only
+    around each ``start`` — a resume after pause included — and the
+    session conf is restored afterwards; the query keeps it because Spark
+    clones the session at start. A query restarted from an existing
+    checkpoint keeps the width recorded in that checkpoint (Spark restores
+    the shuffle width from the offset log).
     """
     p.validate()
     outputs: dict[str, DataFrame] = {}
     started: dict[str, object] = {}
     lifecycles: dict[str, object] = {}
     paused = p.desired_phase == "Paused"
+    declared = [v.source.key_count for v in p.vertices if v.kind == "source"]
+    width = streaming_state_partitions(
+        None if None in declared else sum(declared),
+        spark.sparkContext.defaultParallelism,
+    )
+    state_conf = {"spark.sql.shuffle.partitions": str(width)}
     for name in p.topo_order():
         v = p.vertex(name)
         outputs[name] = _vertex_output(p, v, spark, outputs, streaming=True)
@@ -273,7 +292,11 @@ def compile_streaming(
                 writer = writer.option("checkpointLocation", f"{checkpoint_root}/{name}")
         from numaflow_spark.streaming.lifecycle import Lifecycle
 
-        lifecycles[name] = Lifecycle(start_fn=writer.start)
+        def start(writer=writer):
+            with scoped_conf(spark, state_conf):
+                return writer.start()
+
+        lifecycles[name] = Lifecycle(start_fn=start)
         if not paused:
             started[name] = lifecycles[name].run()
     return StreamingDeployment(started, lifecycles=lifecycles)

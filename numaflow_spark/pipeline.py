@@ -64,6 +64,9 @@ class Source:
 
     reader: Callable[[SparkSession], DataFrame]
     stream_reader: Callable[[SparkSession], DataFrame] | None = None
+    # Declared number of distinct message keys (the generator's keyCount);
+    # None = not declared. compile_streaming sizes state from it.
+    key_count: int | None = None
 
 
 @dataclass

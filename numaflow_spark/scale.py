@@ -97,11 +97,14 @@ def cluster_conf(
     return conf
 
 
-def streaming_state_partitions(key_cardinality: int, cores: int) -> int:
+def streaming_state_partitions(key_cardinality: int | None, cores: int) -> int:
     """Shuffle width for a stateful streaming stage, owned by the ENGINE
     (r13 verdict: the bench harness re-sized its own measured stage 8 -> 4,
     which broke the metric's round-over-round comparability — the sizing
-    rule belongs here, versioned with the engine).
+    rule belongs here, versioned with the engine). compiler.py's
+    ``compile_streaming`` starts every query at this width (cores from the
+    session's defaultParallelism, keys from the sources' declared
+    ``key_count``); bench.py applies it to its own hand-built stage.
 
     Two ceilings, take the smaller: (a) one state partition per 2 cores
     keeps stores mem-resident and amortizes per-batch commit cost
@@ -110,10 +113,14 @@ def streaming_state_partitions(key_cardinality: int, cores: int) -> int:
     and pay pure state-store commit overhead per micro-batch (measured on
     the bench stage, 8 distinct keys: 57K ev/s at 32 partitions, 133K at
     8, 161K at 4; 2-3 plateau with 4 but leave no headroom against hash
-    imbalance). Floor of 2 keeps the multi-partition contract. At cluster
-    scale a high-cardinality key keeps the cores/2 width — the clamp only
-    bites when keys are few, exactly when extra width is pure overhead."""
-    return max(2, min(max(cores, 2) // 2, (key_cardinality + 1) // 2))
+    imbalance). ``key_cardinality=None`` (not declared) drops ceiling (b).
+    Floor of 2 keeps the multi-partition contract. At cluster scale a
+    high-cardinality key keeps the cores/2 width — the clamp only bites
+    when keys are few, exactly when extra width is pure overhead."""
+    width = max(cores, 2) // 2
+    if key_cardinality is not None:
+        width = min(width, (key_cardinality + 1) // 2)
+    return max(2, width)
 
 
 def partitions_for(input_bytes: int, target_partition_bytes: int = 128 * 1024 * 1024) -> int:

@@ -173,9 +173,21 @@ class ReliableSink:
 
 def parquet_sink(path: str) -> Callable[[DataFrame, int], None]:
     """Durable columnar sink (K-series analogue of the kafka/log sinks for
-    the batch-file world)."""
+    the batch-file world).
+
+    An empty micro-batch writes nothing: an append-mode window emits rows
+    only on the trigger that closes it, and appending an empty batch still
+    runs a full write job and commit and leaves a zero-row file. The batch
+    is persisted and counted once, so the stateful step above the sink runs
+    once per batch (a bare ``isEmpty()`` probe would re-run it for every
+    non-empty batch), and the write reads the cached rows."""
 
     def write(df: DataFrame, epoch_id: int) -> None:
-        df.write.mode("append").parquet(path)
+        df.persist()
+        try:
+            if df.count():
+                df.write.mode("append").parquet(path)
+        finally:
+            df.unpersist()
 
     return write

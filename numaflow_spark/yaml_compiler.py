@@ -194,7 +194,7 @@ def _build_source(name: str, spec: Mapping[str, Any], registry: Mapping[str, Any
                 offset=F.col("gen_id"),
             )
 
-        return Source(reader=reader, stream_reader=stream_reader)
+        return Source(reader=reader, stream_reader=stream_reader, key_count=key_count)
 
     if "http" in spec:
         port = int((spec["http"] or {}).get("port", registry.get(f"{name}.port", 18443)))

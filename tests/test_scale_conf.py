@@ -55,6 +55,9 @@ def test_streaming_state_partitions_rule():
     assert streaming_state_partitions(8, 8) == 4
     # key-cardinality clamp only bites when keys are few
     assert streaming_state_partitions(10_000, 32) == 16
+    # undeclared key count: the cores ceiling alone
+    assert streaming_state_partitions(None, 32) == 16
+    assert streaming_state_partitions(None, 4) == 2
     # floor 2 keeps the multi-partition contract even on tiny hosts
     assert streaming_state_partitions(1, 2) == 2
     assert streaming_state_partitions(8, 1) == 2

@@ -3,6 +3,7 @@ assert golden sink contents — SURVEY.md §5) realized as parquet replay →
 compiled streaming query → memory sink, with watermark-driven emission.
 """
 
+import os
 import shutil
 import tempfile
 
@@ -312,3 +313,171 @@ def test_streaming_sliding_window_append(spark, tmpdir):
     got = keyed(emitted, closed_only=False)
     want = keyed(golden, closed_only=True)
     assert got == want and len(got) >= 8, f"sliding mismatch: {got} vs {want}"
+
+
+SHUFFLE = "spark.sql.shuffle.partitions"
+
+WIDTH_YAML = """
+kind: Pipeline
+metadata: {name: width}
+spec:
+  watermark: {maxDelay: 0s}
+  vertices:
+    - name: in
+      source:
+        generator: {rpu: 50, duration: 1s, keyCount: 6}
+    - name: agg
+      udf:
+        container: {image: quay.io/numaio/numaflow-go/reduce-sum:stable}
+        groupBy:
+          window: {fixed: {length: 10s}}
+          keyed: true
+    - name: out
+      sink:
+        udsink:
+          container: {image: example/sink:v1}
+  edges:
+    - {from: in, to: agg}
+    - {from: agg, to: out}
+"""
+
+
+def _state_width(query) -> int:
+    """numShufflePartitions of the query's stateful operator, once a
+    trigger has run."""
+    import time
+
+    deadline = time.monotonic() + 60
+    while query.lastProgress is None or not query.lastProgress["stateOperators"]:
+        assert query.exception() is None, query.exception()
+        assert time.monotonic() < deadline, "no stateful progress within 60 s"
+        time.sleep(0.1)
+    return query.lastProgress["stateOperators"][0]["numShufflePartitions"]
+
+
+def test_compiled_stream_state_width_from_rule(spark, tmpdir):
+    """A compiled stateful YAML stream starts at the engine's width rule
+    (cores from defaultParallelism, keys from the generator's keyCount),
+    also after pause -> resume, and the session's own shuffle width is
+    untouched at every step."""
+    from numaflow_spark.scale import streaming_state_partitions
+    from numaflow_spark.streaming.sinks import parquet_sink
+    from numaflow_spark.yaml_compiler import pipeline_from_yaml
+
+    p = pipeline_from_yaml(WIDTH_YAML, {"out": parquet_sink(f"{tmpdir}/sink")})
+    width = streaming_state_partitions(6, spark.sparkContext.defaultParallelism)
+    session_width = spark.conf.get(SHUFFLE)
+    assert str(width) != session_width  # the check below can tell them apart
+    dep = compile_streaming(p, spark, checkpoint_root=f"{tmpdir}/ckpt")
+    try:
+        assert spark.conf.get(SHUFFLE) == session_width
+        assert _state_width(dep.queries["out"]) == width
+        dep.pause(drain=False)
+        assert spark.conf.get(SHUFFLE) == session_width
+        dep.resume()
+        assert spark.conf.get(SHUFFLE) == session_width
+        assert _state_width(dep.queries["out"]) == width
+    finally:
+        dep.stop()
+    assert spark.conf.get(SHUFFLE) == session_width
+
+
+def _keyed_sum_pipeline(events, data_dir, sink_dir, key_count):
+    from numaflow_spark.streaming.sinks import parquet_sink
+
+    def stream_reader(s):
+        return replay_stream(s, data_dir, schema=events.schema, max_files_per_trigger=1)
+
+    return (
+        Pipeline("restart-width")
+        .add(Vertex("in", source=Source(reader=lambda s: events,
+                                        stream_reader=stream_reader,
+                                        key_count=key_count)))
+        .add(Vertex("agg", udf=ReduceUDF(window={"fixed": "10 minutes"}, keys=("key",),
+                                         aggs=[F.sum("v").alias("s")])))
+        .add(Vertex("out", sink=Sink(writer=parquet_sink(sink_dir))))
+        .connect("in", "agg")
+        .connect("agg", "out")
+    )
+
+
+def test_restart_keeps_checkpoint_state_width(spark, tmpdir, monkeypatch):
+    """A stream restarted from a checkpoint written at width 4 keeps 4
+    (the rule now says 2) and its sink holds the same rows as one
+    uninterrupted run at the rule's width."""
+    import numaflow_spark.compiler as compiler
+
+    events = _event_df(spark)
+    staged = write_replay_batches(events, f"{tmpdir}/staged", batches=4, order_col="id")
+    files = sorted(os.listdir(staged))
+
+    def sink_rows(path):
+        return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+    # reference: one run over all four files at the rule's width (2)
+    ref = _keyed_sum_pipeline(events, staged, f"{tmpdir}/ref_sink", key_count=2)
+    dep = compile_streaming(ref, spark, checkpoint_root=f"{tmpdir}/ref_ckpt")
+    try:
+        dep.process_all_available()
+        assert _state_width(dep.queries["out"]) == 2
+    finally:
+        dep.stop()
+
+    # first half at width 4, then a restart over the rest
+    live = f"{tmpdir}/live"
+    os.makedirs(live)
+    for f in files[:2]:
+        shutil.copy(os.path.join(staged, f), live)
+    p = _keyed_sum_pipeline(events, live, f"{tmpdir}/sink", key_count=2)
+    with monkeypatch.context() as m:
+        m.setattr(compiler, "streaming_state_partitions", lambda keys, cores: 4)
+        dep = compile_streaming(p, spark, checkpoint_root=f"{tmpdir}/ckpt")
+        try:
+            dep.process_all_available()
+            assert _state_width(dep.queries["out"]) == 4
+        finally:
+            dep.stop()
+    for f in files[2:]:
+        shutil.copy(os.path.join(staged, f), live)
+    dep = compile_streaming(p, spark, checkpoint_root=f"{tmpdir}/ckpt")
+    try:
+        dep.process_all_available()
+        assert _state_width(dep.queries["out"]) == 4
+    finally:
+        dep.stop()
+
+    want = sink_rows(f"{tmpdir}/ref_sink")
+    assert len(want) == 4  # two closed 10-minute windows x two keys
+    assert sink_rows(f"{tmpdir}/sink") == want
+
+
+def test_parquet_sink_writes_only_nonempty_batches(spark, tmpdir):
+    """parquet_sink over empty / non-empty / empty batches leaves exactly
+    one parquet file holding the rows once, and evaluates each batch's
+    plan once (a counting UDF stands in for the stateful step)."""
+    from pyspark.sql.types import LongType
+
+    from numaflow_spark.streaming.sinks import parquet_sink
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def step(v):
+        evaluated.add(1)
+        return v
+
+    # nondeterministic: the filter is not pushed below the UDF's projection
+    # (which would evaluate it twice a row), and, reading the UDF's output,
+    # it keeps every action from pruning the UDF away
+    step_udf = F.udf(step, LongType()).asNondeterministic()
+    rows = spark.range(0, 5, 1, 1).select(step_udf("id").alias("id"))
+    batch, empty = rows.filter(F.col("id") >= 0), rows.filter(F.col("id") < 0)
+    path = f"{tmpdir}/sink"
+    write = parquet_sink(path)
+    write(empty, 0)
+    write(batch, 1)
+    write(empty, 2)
+    parts = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert len(parts) == 1, parts
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(5))
+    # each batch ran its plan once: the write reads what the count cached
+    assert evaluated.value == 5 + 5 + 5
