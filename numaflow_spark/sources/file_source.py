@@ -42,19 +42,29 @@ def write_replay_batches(
     pdf = df.orderBy(order_col).toPandas()
     n = len(pdf)
     per = max(1, (n + batches - 1) // batches)
+    import time
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    t0 = time.time_ns()
     for i in range(batches):
         chunk = pdf.iloc[i * per : (i + 1) * per]
         if len(chunk) == 0:
             break
+        path = os.path.join(directory, f"batch-{i:04d}.parquet")
         pq.write_table(
             pa.Table.from_pandas(chunk, preserve_index=False),
-            os.path.join(directory, f"batch-{i:04d}.parquet"),
+            path,
             # micro (not nano) timestamps so the files read back as
             # TimestampType under the engine's nanosAsLong setting
             coerce_timestamps="us",
             allow_truncated_timestamps=True,
         )
+        # The streaming file source replays files in modification-time
+        # order, at millisecond resolution; files written within one
+        # millisecond tie and then replay in directory-listing order.
+        # One-second steps keep the replay in batch order.
+        mtime = t0 + i * 1_000_000_000
+        os.utime(path, ns=(mtime, mtime))
     return directory

@@ -481,3 +481,14 @@ def test_parquet_sink_writes_only_nonempty_batches(spark, tmpdir):
     assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(5))
     # each batch ran its plan once: the write reads what the count cached
     assert evaluated.value == 5 + 5 + 5
+
+
+def test_replay_batches_replay_in_batch_order(spark, tmpdir):
+    """The file source replays in modification-time order at millisecond
+    resolution; replay files written within one millisecond used to tie
+    and replay in directory-listing order. Their mtimes now rise by whole
+    seconds in batch order."""
+    data_dir = write_replay_batches(_event_df(spark), f"{tmpdir}/in", batches=4, order_col="id")
+    files = sorted(os.listdir(data_dir))
+    seconds = [os.stat(os.path.join(data_dir, f)).st_mtime_ns // 10**9 for f in files]
+    assert len(files) == 4 and seconds == sorted(set(seconds)), seconds
