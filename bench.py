@@ -385,6 +385,7 @@ def _streaming_throughput(
 
     from numaflow_spark.message import drop_filter
     from numaflow_spark.operators.graph import scoped_conf
+    from numaflow_spark.scale import streaming_checkpoint_conf
     from numaflow_spark.sources.generator import generator_stream
 
     # Stateful-stream sizing is the ENGINE's rule, not the harness's
@@ -402,8 +403,10 @@ def _streaming_throughput(
 
         state_partitions = streaming_state_partitions(key_count, DEFAULT_CPUS)
     ckpt = tempfile.mkdtemp(prefix="bench_stream_")
+    confs = {"spark.sql.shuffle.partitions": str(state_partitions),
+             **streaming_checkpoint_conf(spark, ckpt)}
     try:
-        with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(state_partitions)}):
+        with scoped_conf(spark, confs):
             src = generator_stream(spark, rows_per_batch=rows_per_batch, key_count=key_count)
             mapped = drop_filter(src).select(
                 "keys", "event_time", F.col("value").cast("string").cast("long").alias("v")

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from numaflow_spark.operators import reduce_ops, routing
 from numaflow_spark.operators.graph import scoped_conf
 from numaflow_spark.pipeline import MapUDF, Pipeline, ReduceUDF, Vertex
-from numaflow_spark.scale import streaming_state_partitions
+from numaflow_spark.scale import streaming_checkpoint_conf, streaming_state_partitions
 
 
 def _accumulator_shape(df: DataFrame, ts_col: str) -> DataFrame:
@@ -248,6 +248,13 @@ def compile_streaming(
     clones the session at start. A query restarted from an existing
     checkpoint keeps the width recorded in that checkpoint (Spark restores
     the shuffle width from the offset log).
+
+    The same block carries ``scale.streaming_checkpoint_conf`` for the
+    sink's checkpoint location (``checkpoint_root/<sink>``, or Spark's
+    temporary one for a memory sink): on the ``file`` scheme the query
+    checkpoints through Spark's FileSystem-based manager, which forks no
+    ``readlink`` per file check; other schemes keep Spark's choice. A
+    checkpoint written under either manager resumes under the other.
     """
     p.validate()
     outputs: dict[str, DataFrame] = {}
@@ -267,6 +274,7 @@ def compile_streaming(
             continue
         df = outputs[name]
         writer = df.writeStream
+        location = f"{checkpoint_root}/{name}"
         if trigger:
             writer = writer.trigger(**trigger)
         if v.sink.writer is not None:
@@ -281,19 +289,21 @@ def compile_streaming(
                 )
             # UDSink: durable, checkpoint-recoverable (WAL analogue of the
             # reference's at-least-once ack chain, message.rs:130-296).
-            writer = writer.foreachBatch(batch_writer).option(
-                "checkpointLocation", f"{checkpoint_root}/{name}"
-            )
+            writer = writer.foreachBatch(batch_writer)
         else:
-            # memory sink = test golden-sink; it cannot recover from a
-            # checkpoint, so it runs checkpoint-free (ephemeral by design).
             writer = writer.format(default_format).queryName(name).outputMode("append")
-            if default_format != "memory":
-                writer = writer.option("checkpointLocation", f"{checkpoint_root}/{name}")
+            if default_format == "memory":
+                # memory sink = test golden-sink; it cannot recover from a
+                # checkpoint, so it runs at Spark's temporary location
+                # (ephemeral by design).
+                location = None
+        if location is not None:
+            writer = writer.option("checkpointLocation", location)
+        start_conf = {**state_conf, **streaming_checkpoint_conf(spark, location)}
         from numaflow_spark.streaming.lifecycle import Lifecycle
 
-        def start(writer=writer):
-            with scoped_conf(spark, state_conf):
+        def start(writer=writer, start_conf=start_conf):
+            with scoped_conf(spark, start_conf):
                 return writer.start()
 
         lifecycles[name] = Lifecycle(start_fn=start)

@@ -123,6 +123,46 @@ def streaming_state_partitions(key_cardinality: int | None, cores: int) -> int:
     return max(2, width)
 
 
+CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+# Spark 4.1 moved the checkpoint managers into the ``checkpointing`` package.
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def streaming_checkpoint_conf(spark, checkpoint_root: str | None) -> dict[str, str]:
+    """Checkpoint-manager conf for a stream whose checkpoint lives at
+    ``checkpoint_root`` (``None``: Spark's own location — the session's
+    ``spark.sql.streaming.checkpointLocation``, else the temporary one a
+    memory sink gets). Every in-repo stream start applies it inside the
+    ``graph.scoped_conf`` block around ``start``; the query keeps it
+    because Spark clones the session at start.
+
+    On the ``file`` scheme it names Spark's FileSystem-based manager.
+    Spark's default, the FileContext manager, checks link status through
+    Hadoop's ``FileUtil.readLink``, which forks a ``readlink`` process:
+    1,952 of the 2,528 process starts in one stream-window run (SCALE.md
+    r19).
+    Nothing is lost on ``file:`` — Hadoop's local FileContext renames with
+    overwrite by the same non-atomic check-then-rename that the FileSystem
+    manager uses, and both write the same checkpoint files. Every other
+    scheme (hdfs, s3a, abfs, ...) and a session that already names a
+    manager keep Spark's choice: ``{}``. The scheme resolves as Spark
+    resolves it, through the session's Hadoop conf, so a scheme-less root
+    follows ``fs.defaultFS``; nothing contacts the filesystem."""
+    if spark.conf.get(CHECKPOINT_MANAGER, None) is not None:
+        return {}
+    location = checkpoint_root or spark.conf.get(
+        "spark.sql.streaming.checkpointLocation", None)
+    hadoop = spark._jvm.org.apache.hadoop.fs
+    scheme = hadoop.Path(location).toUri().getScheme() if location else None
+    if scheme is None:
+        hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+        scheme = hadoop.FileSystem.getDefaultUri(hadoop_conf).getScheme()
+    return {CHECKPOINT_MANAGER: FS_CHECKPOINT_MANAGER} if scheme == "file" else {}
+
+
 def partitions_for(input_bytes: int, target_partition_bytes: int = 128 * 1024 * 1024) -> int:
     """Partition count for a given input volume at the advisory size —
     the number the repartition/bucketing call sites should use instead of

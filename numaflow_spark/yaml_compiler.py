@@ -444,10 +444,17 @@ def _build_udf(name: str, spec: Mapping[str, Any], registry: Mapping[str, Any]):
     return MapUDF(fn)
 
 
+def _discard(df, epoch_id) -> None:
+    """The blackhole sink's batch writer. It consumes the whole micro-batch
+    through Spark's ``noop`` sink: a writer that never reads its batch fails
+    a stateful query on its first trigger (SQLSTATE XXKST, the state store
+    sees its input unconsumed)."""
+    df.write.format("noop").mode("overwrite").save()
+
+
 def _build_sink(name: str, spec: Mapping[str, Any], registry: Mapping[str, Any]) -> Sink:
     if "log" in spec or "blackhole" in spec:
-        discard = "blackhole" in spec
-        return Sink(writer=(lambda df, e: None) if discard else None)
+        return Sink(writer=_discard if "blackhole" in spec else None)
     if "udsink" in spec:
         entry = registry.get(name)
         if entry is None:

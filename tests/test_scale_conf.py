@@ -63,6 +63,32 @@ def test_streaming_state_partitions_rule():
     assert streaming_state_partitions(8, 1) == 2
 
 
+def test_streaming_checkpoint_conf_by_scheme(spark):
+    """The FileSystem checkpoint manager for ``file:`` roots only. A
+    scheme-less root or Spark's own location resolves through
+    ``fs.defaultFS``, as Spark resolves it; other schemes and a session
+    that already names a manager keep Spark's choice."""
+    from numaflow_spark.operators.graph import scoped_conf
+    from numaflow_spark.scale import (CHECKPOINT_MANAGER, FS_CHECKPOINT_MANAGER,
+                                      streaming_checkpoint_conf)
+
+    fs = {CHECKPOINT_MANAGER: FS_CHECKPOINT_MANAGER}
+    assert streaming_checkpoint_conf(spark, "/tmp/ckpt") == fs
+    assert streaming_checkpoint_conf(spark, "file:///tmp/ckpt") == fs
+    assert streaming_checkpoint_conf(spark, None) == fs
+    for root in ("hdfs://nn:8020/ckpt", "s3a://bucket/ckpt",
+                 "abfs://c@acct.dfs.core.windows.net/ckpt"):
+        assert streaming_checkpoint_conf(spark, root) == {}, root
+    with scoped_conf(spark, {"fs.defaultFS": "hdfs://nn:8020"}):
+        assert streaming_checkpoint_conf(spark, "/tmp/ckpt") == {}
+        assert streaming_checkpoint_conf(spark, None) == {}
+        assert streaming_checkpoint_conf(spark, "file:/tmp/ckpt") == fs
+    with scoped_conf(spark, {"spark.sql.streaming.checkpointLocation": "s3a://b/ckpt"}):
+        assert streaming_checkpoint_conf(spark, None) == {}
+    with scoped_conf(spark, {CHECKPOINT_MANAGER: "com.example.Manager"}):
+        assert streaming_checkpoint_conf(spark, "/tmp/ckpt") == {}
+
+
 @pytest.mark.parametrize("raw, on", [
     (None, False), ("", False), ("0", False), ("false", False),
     ("FALSE", False), (" 1 ", True), ("true", True), ("True", True),

@@ -382,6 +382,77 @@ def test_compiled_stream_state_width_from_rule(spark, tmpdir):
     assert spark.conf.get(SHUFFLE) == session_width
 
 
+FS_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
+              "FileSystemBasedCheckpointFileManager")
+FC_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
+              "FileContextBasedCheckpointFileManager")
+MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _log_managers(query) -> set[str]:
+    """Classes of the checkpoint managers behind a running query's offset
+    and commit logs."""
+    jq = query._jsq.streamingQuery()
+    return {log.fileManager().getClass().getName()
+            for log in (jq.offsetLog(), jq.commitLog())}
+
+
+def test_compiled_stream_checkpoints_through_filesystem_manager(spark, tmpdir):
+    """A compiled YAML stream with a local checkpoint root runs on Spark
+    4.1's FileSystem-based checkpoint manager — the cloned session the
+    query runs on names it and its offset and commit logs use it, also
+    after pause -> resume — while the caller's session never carries it.
+    The class name is spelled out: a Spark upgrade that moves it fails
+    here."""
+    from numaflow_spark.streaming.sinks import parquet_sink
+    from numaflow_spark.yaml_compiler import pipeline_from_yaml
+
+    def check(q):
+        cloned = q._jsq.streamingQuery().sparkSessionForStream()
+        assert cloned.conf().get(MANAGER) == FS_MANAGER
+        assert _log_managers(q) == {FS_MANAGER}
+        assert spark.conf.get(MANAGER, None) is None
+
+    p = pipeline_from_yaml(WIDTH_YAML, {"out": parquet_sink(f"{tmpdir}/sink")})
+    assert spark.conf.get(MANAGER, None) is None
+    dep = compile_streaming(p, spark, checkpoint_root=f"{tmpdir}/ckpt")
+    try:
+        check(dep.queries["out"])
+        dep.pause(drain=False)
+        assert spark.conf.get(MANAGER, None) is None
+        dep.resume()
+        check(dep.queries["out"])
+    finally:
+        dep.stop()
+    assert spark.conf.get(MANAGER, None) is None
+
+
+def test_blackhole_sink_runs_stateful_stream(spark, tmpdir):
+    """A YAML keyed fixed-window reduce feeding ``blackhole: {}`` runs
+    trigger after trigger: the discard writer consumes each micro-batch,
+    which a stateful query requires of a foreachBatch writer."""
+    import time
+
+    from numaflow_spark.yaml_compiler import pipeline_from_yaml
+
+    yaml = WIDTH_YAML.replace(
+        "        udsink:\n          container: {image: example/sink:v1}\n",
+        "        blackhole: {}\n")
+    assert "blackhole" in yaml
+    dep = compile_streaming(pipeline_from_yaml(yaml, {}), spark,
+                            checkpoint_root=f"{tmpdir}/ckpt")
+    q = dep.queries["out"]
+    try:
+        deadline = time.monotonic() + 60
+        while q.lastProgress is None or q.lastProgress["batchId"] < 2:
+            assert q.exception() is None, q.exception()
+            assert time.monotonic() < deadline, "fewer than 3 triggers in 60 s"
+            time.sleep(0.1)
+        assert q.exception() is None, q.exception()
+    finally:
+        dep.stop()
+
+
 def _keyed_sum_pipeline(events, data_dir, sink_dir, key_count):
     from numaflow_spark.streaming.sinks import parquet_sink
 
@@ -449,6 +520,115 @@ def test_restart_keeps_checkpoint_state_width(spark, tmpdir, monkeypatch):
     want = sink_rows(f"{tmpdir}/ref_sink")
     assert len(want) == 4  # two closed 10-minute windows x two keys
     assert sink_rows(f"{tmpdir}/sink") == want
+
+
+def _checkpoint_files(root) -> dict[str, set[str]]:
+    return {d: {os.path.relpath(os.path.join(dp, f), root)
+                for dp, _, fs in os.walk(os.path.join(root, d)) for f in fs}
+            for d in ("offsets", "commits", os.path.join("state", "0", "0"))}
+
+
+def test_checkpoint_managers_write_the_same_files(spark, tmpdir, monkeypatch):
+    """Three triggers of a keyed windowed reduce leave the same files
+    under offsets/, commits/ and state/0/0/ — Spark's checksum sidecars
+    and Hadoop's .crc files included — whether the FileContext manager
+    (Spark's default) or the FileSystem manager (the engine's rule on
+    ``file:``) wrote them."""
+    import numaflow_spark.compiler as compiler
+
+    events = _event_df(spark)
+    staged = write_replay_batches(events, f"{tmpdir}/staged", batches=3, order_col="id")
+    files = {}
+    for arm, manager in (("fc", FC_MANAGER), ("fs", FS_MANAGER)):
+        p = _keyed_sum_pipeline(events, staged, f"{tmpdir}/{arm}/sink", key_count=2)
+        with monkeypatch.context() as m:
+            m.setattr(compiler, "streaming_checkpoint_conf",
+                      lambda spark, root, manager=manager: {MANAGER: manager})
+            dep = compile_streaming(p, spark, checkpoint_root=f"{tmpdir}/{arm}/ckpt")
+        try:
+            dep.process_all_available()
+            assert _log_managers(dep.queries["out"]) == {manager}
+            assert dep.queries["out"].lastProgress["batchId"] >= 2
+        finally:
+            dep.stop()
+        files[arm] = _checkpoint_files(f"{tmpdir}/{arm}/ckpt/out")
+    assert all(files["fs"].values()), files["fs"]
+    assert files["fc"] == files["fs"]
+
+
+def test_filecontext_checkpoint_resumes_under_rule(spark, tmpdir, monkeypatch):
+    """A checkpoint written under the FileContext manager (what every
+    local stream used before the rule) resumes under the FileSystem
+    manager, and the sink ends with the rows of one uninterrupted run."""
+    import numaflow_spark.compiler as compiler
+
+    events = _event_df(spark)
+    staged = write_replay_batches(events, f"{tmpdir}/staged", batches=4, order_col="id")
+    files = sorted(os.listdir(staged))
+
+    def sink_rows(path):
+        return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+    ref = _keyed_sum_pipeline(events, staged, f"{tmpdir}/ref_sink", key_count=2)
+    dep = compile_streaming(ref, spark, checkpoint_root=f"{tmpdir}/ref_ckpt")
+    try:
+        dep.process_all_available()
+    finally:
+        dep.stop()
+
+    live = f"{tmpdir}/live"
+    os.makedirs(live)
+    for f in files[:2]:
+        shutil.copy(os.path.join(staged, f), live)
+    p = _keyed_sum_pipeline(events, live, f"{tmpdir}/sink", key_count=2)
+    with monkeypatch.context() as m:
+        m.setattr(compiler, "streaming_checkpoint_conf",
+                  lambda spark, root: {MANAGER: FC_MANAGER})
+        dep = compile_streaming(p, spark, checkpoint_root=f"{tmpdir}/ckpt")
+    try:
+        dep.process_all_available()
+        assert _log_managers(dep.queries["out"]) == {FC_MANAGER}
+    finally:
+        dep.stop()
+    for f in files[2:]:
+        shutil.copy(os.path.join(staged, f), live)
+    dep = compile_streaming(p, spark, checkpoint_root=f"{tmpdir}/ckpt")
+    try:
+        dep.process_all_available()
+        assert _log_managers(dep.queries["out"]) == {FS_MANAGER}
+    finally:
+        dep.stop()
+
+    want = sink_rows(f"{tmpdir}/ref_sink")
+    assert len(want) == 4  # two closed 10-minute windows x two keys
+    assert sink_rows(f"{tmpdir}/sink") == want
+
+
+@pytest.mark.parametrize("manager", [FC_MANAGER, FS_MANAGER])
+def test_create_atomic_refuses_existing_file(spark, tmpdir, manager):
+    """On ``file:``, ``createAtomic(existing, overwriteIfPossible=False)``
+    fails on close with FileAlreadyExistsException under the FileSystem
+    manager exactly as under the FileContext manager, and the existing
+    file keeps its bytes."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    conf.set(MANAGER, manager)
+    path = os.path.join(tmpdir, "0")
+    with open(path, "wb") as f:
+        f.write(b"old")
+    fm = jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(jvm.org.apache.hadoop.fs.Path(tmpdir), conf)
+    assert fm.getClass().getName() == manager
+    out = fm.createAtomic(jvm.org.apache.hadoop.fs.Path(path), False)
+    out.write(bytearray(b"new"))
+    with pytest.raises(Py4JJavaError) as err:
+        out.close()
+    exists = jvm.java.lang.Class.forName("org.apache.hadoop.fs.FileAlreadyExistsException")
+    assert exists.isInstance(err.value.java_exception), err.value.java_exception
+    with open(path, "rb") as f:
+        assert f.read() == b"old"
 
 
 def test_parquet_sink_writes_only_nonempty_batches(spark, tmpdir):

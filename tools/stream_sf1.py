@@ -26,6 +26,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from numaflow_spark.operators.graph import scoped_conf
+from numaflow_spark.scale import streaming_checkpoint_conf
 from numaflow_spark.session import get_spark
 
 
@@ -40,20 +41,22 @@ def main() -> None:
         "stream_sf1", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
     spark.sparkContext.setLogLevel("ERROR")
+    # Split the single parquet file into n_files so maxFilesPerTrigger=1
+    # yields real micro-batches (one file = one 1M-row mega-batch).
+    feed = tempfile.mkdtemp(prefix="stream_sf1_feed_")
+    ckpt = tempfile.mkdtemp(prefix="stream_sf1_ckpt_")
     # RocksDB state store — the cluster preset's choice (scale.py); the
-    # default HDFS-backed store would hold all state on-heap. Both confs
-    # are restored when the run ends, an exception included.
+    # default HDFS-backed store would hold all state on-heap. The confs,
+    # the engine's checkpoint-manager rule included, are restored when the
+    # run ends, an exception included.
     confs = {
         "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
         "spark.sql.shuffle.partitions": "8",
+        **streaming_checkpoint_conf(spark, ckpt),
     }
     with scoped_conf(spark, confs):
-        # Split the single parquet file into n_files so maxFilesPerTrigger=1
-        # yields real micro-batches (one file = one 1M-row mega-batch).
-        feed = tempfile.mkdtemp(prefix="stream_sf1_feed_")
-        ckpt = tempfile.mkdtemp(prefix="stream_sf1_ckpt_")
         src_static = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         total_rows = src_static.count()
         n_users = src_static.select("user_id").distinct().count()
