@@ -30,7 +30,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from numaflow_spark.queries import QUERIES
-from numaflow_spark.session import DEFAULT_CPUS, get_spark, load_table
+from numaflow_spark.session import get_spark, load_table
 
 # Keys in the streaming stage's generator; the state-partition width is
 # derived from it, so main() and _streaming_throughput share one value.
@@ -60,10 +60,11 @@ def main() -> None:
     # measures the plan. Both raw numbers go to stderr.
     from numaflow_spark.scale import streaming_state_partitions
 
-    stream_parts = streaming_state_partitions(KEY_COUNT, DEFAULT_CPUS)
+    stream_parts = streaming_state_partitions(
+        KEY_COUNT, spark.sparkContext.defaultParallelism)
     stream_runs = [
-        _streaming_throughput(spark, n_batches=6, state_partitions=stream_parts),
-        _streaming_throughput(spark, state_partitions=stream_parts),
+        _streaming_throughput(spark, n_batches=6),
+        _streaming_throughput(spark),
     ]
     # The headline is the second (post-warmup, FULL) run — the one that
     # measures the plan. A lucky short warmup must not define the number
@@ -366,13 +367,7 @@ def _arrow_warmup(spark) -> None:
     spark.range(32).mapInPandas(ident, schema="id long").count()
 
 
-def _streaming_throughput(
-    spark,
-    n_batches: int = 20,
-    rows_per_batch: int = 50_000,
-    key_count: int = KEY_COUNT,
-    state_partitions: int | None = None,
-) -> float:
+def _streaming_throughput(spark, n_batches: int = 20) -> float:
     """Drain generator -> map -> keyed tumbling agg -> update-mode memory
     sink and report end-to-end events/s (BASELINE.md streaming target:
     >=10K/s single-partition, 30K/s multi-partition ceiling in the
@@ -383,68 +378,60 @@ def _streaming_throughput(
 
     from pyspark.sql import functions as F
 
+    from numaflow_spark.compiler import start_stream
     from numaflow_spark.message import drop_filter
-    from numaflow_spark.operators.graph import scoped_conf
-    from numaflow_spark.scale import streaming_checkpoint_conf
     from numaflow_spark.sources.generator import generator_stream
 
     # Stateful-stream sizing is the ENGINE's rule, not the harness's
     # (r13 verdict #6: the wave-8 in-bench retune 8 -> 4 broke the
-    # metric's round-over-round comparability): scale.py::
-    # streaming_state_partitions(min(cores/2, ~keys/2), floor 2) encodes
-    # the r13 measurements (8 keys: 57K ev/s at 32 partitions, 133K at 8,
-    # 161K at 4 — tools/ab_stream_partitions_result.json) and yields the
-    # same width (4) at both of the driver's core counts, so the basis is
-    # stable and recorded in the artifact. RocksDB at this state size
-    # loses (~20%) to the default provider — state is ~8 rows/partition,
-    # commit cost is pure overhead.
-    if state_partitions is None:
-        from numaflow_spark.scale import streaming_state_partitions
-
-        state_partitions = streaming_state_partitions(key_count, DEFAULT_CPUS)
+    # metric's round-over-round comparability): start_stream applies
+    # scale.py::streaming_state_partitions(min(cores/2, ~keys/2), floor 2),
+    # which encodes the r13 measurements (8 keys: 57K ev/s at 32
+    # partitions, 133K at 8, 161K at 4 —
+    # tools/ab_stream_partitions_result.json), and the engine's checkpoint
+    # manager rule. RocksDB at this state size loses (~20%) to the default
+    # provider — state is ~8 rows/partition, commit cost is pure overhead.
+    rows_per_batch = 50_000
     ckpt = tempfile.mkdtemp(prefix="bench_stream_")
-    confs = {"spark.sql.shuffle.partitions": str(state_partitions),
-             **streaming_checkpoint_conf(spark, ckpt)}
     try:
-        with scoped_conf(spark, confs):
-            src = generator_stream(spark, rows_per_batch=rows_per_batch, key_count=key_count)
-            mapped = drop_filter(src).select(
-                "keys", "event_time", F.col("value").cast("string").cast("long").alias("v")
-            )
-            agg = (
-                mapped.withWatermark("event_time", "0 seconds")
-                .groupBy(F.window("event_time", "10 seconds"), "keys")
-                .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
-            )
-            q = (
-                agg.writeStream.format("memory")
-                .queryName("bench_stream_sink")
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(processingTime="0 seconds")
-                .start()
-            )
+        src = generator_stream(spark, rows_per_batch=rows_per_batch, key_count=KEY_COUNT)
+        mapped = drop_filter(src).select(
+            "keys", "event_time", F.col("value").cast("string").cast("long").alias("v")
+        )
+        agg = (
+            mapped.withWatermark("event_time", "0 seconds")
+            .groupBy(F.window("event_time", "10 seconds"), "keys")
+            .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
+        )
+        writer = (
+            agg.writeStream.format("memory")
+            .queryName("bench_stream_sink")
+            .outputMode("update")
+            .trigger(processingTime="0 seconds")
+        )
+        q = start_stream(spark, writer, checkpoint=ckpt, key_count=KEY_COUNT)
+        try:
+            t0 = time.perf_counter()
+            rows = 0
+            # drain a fixed event budget; rate-micro-batch emits one
+            # batch per trigger so wall time is compute-bound, not
+            # tick-bound
+            while rows < n_batches * rows_per_batch and time.perf_counter() - t0 < 120:
+                rows = sum(int(p.get("numInputRows", 0)) for p in q.recentProgress)
+                time.sleep(0.2)
+            dt = time.perf_counter() - t0
+            return round(rows / dt, 1) if dt > 0 else 0.0
+        finally:
             try:
-                t0 = time.perf_counter()
-                rows = 0
-                # drain a fixed event budget; rate-micro-batch emits one
-                # batch per trigger so wall time is compute-bound, not
-                # tick-bound
-                while rows < n_batches * rows_per_batch and time.perf_counter() - t0 < 120:
-                    rows = sum(int(p.get("numInputRows", 0)) for p in q.recentProgress)
-                    time.sleep(0.2)
-                dt = time.perf_counter() - t0
-                return round(rows / dt, 1) if dt > 0 else 0.0
-            finally:
-                try:
-                    # stopping mid-epoch aborts the in-flight micro-batch;
-                    # the interrupt surfaces as a (benign) commit error
-                    # from stop()
-                    q.stop()
-                except Exception:
-                    pass
+                # stopping mid-epoch aborts the in-flight micro-batch;
+                # the interrupt surfaces as a (benign) commit error
+                # from stop()
+                q.stop()
+            except Exception:
+                pass
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
+
 
 if __name__ == "__main__":
     main()

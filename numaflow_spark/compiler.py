@@ -20,6 +20,7 @@ buffer and its at-least-once ack machinery (message.rs:130-296).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -29,6 +30,7 @@ from numaflow_spark.operators import reduce_ops, routing
 from numaflow_spark.operators.graph import scoped_conf
 from numaflow_spark.pipeline import MapUDF, Pipeline, ReduceUDF, Vertex
 from numaflow_spark.scale import streaming_checkpoint_conf, streaming_state_partitions
+from numaflow_spark.streaming.lifecycle import Lifecycle
 
 
 def _accumulator_shape(df: DataFrame, ts_col: str) -> DataFrame:
@@ -46,7 +48,6 @@ def _accumulator_shape(df: DataFrame, ts_col: str) -> DataFrame:
 
 
 def _apply_reduce(v: Vertex, df: DataFrame, streaming: bool,
-                  spark: SparkSession | None = None,
                   idle_source: dict | None = None) -> DataFrame:
     udf = v.udf
     assert isinstance(udf, ReduceUDF)
@@ -69,44 +70,31 @@ def _apply_reduce(v: Vertex, df: DataFrame, streaming: bool,
             shaped, ["key"], "event_time", ["value"]
         ).select("key", "event_time", "value", "seq")
     if streaming:
+        # The watermark supplies the window-close signal the reference
+        # derives from propagated WMs (udf.go:101-104 allowedLateness ==
+        # the watermark delay); append mode then emits a window exactly once
+        # when the watermark passes its end (reduce.proto:38-49).
         if idle_source is not None:
             # W3 (spec.watermark.idleSource): union the WMB heartbeat so
-            # the watermark advances while sources idle, assign the
-            # watermark over the union, then use the non-watermarking ops
-            # (exactly ONE EventTimeWatermark node — a second withWatermark
-            # below the WMB filter would never see the heartbeats).
+            # the watermark advances while sources idle and assign the
+            # watermark over the union — exactly ONE EventTimeWatermark
+            # node (a second withWatermark below the WMB filter would never
+            # see the heartbeats).
             from numaflow_spark.streaming.idle import (
                 heartbeat_stream,
                 with_idle_watermark,
             )
 
             hb = heartbeat_stream(
-                spark,
+                df.sparkSession,
                 step_interval_s=idle_source.get("step_interval_s", 1),
                 max_delay=idle_source.get("max_delay", "0 seconds"),
             )
-            w = with_idle_watermark(
+            df = with_idle_watermark(
                 df, hb, ts_col=udf.ts_col, delay=udf.allowed_lateness
             )
-            if wkind == "fixed":
-                return reduce_ops.tumbling(w, udf.ts_col, wargs, udf.keys, udf.aggs)
-            if wkind == "session":
-                return reduce_ops.session(w, udf.ts_col, wargs, udf.keys, udf.aggs)
-            if wkind == "sliding":
-                length, slide = wargs
-                return reduce_ops.sliding(w, udf.ts_col, length, slide, udf.keys, udf.aggs)
-        if wkind == "fixed":
-            return reduce_ops.streaming_tumbling(
-                df, udf.ts_col, wargs, udf.allowed_lateness, udf.keys, udf.aggs
-            )
-        if wkind == "session":
-            return reduce_ops.streaming_session(
-                df, udf.ts_col, wargs, udf.allowed_lateness, udf.keys, udf.aggs
-            )
-        if wkind == "sliding":
-            length, slide = wargs
-            w = df.withWatermark(udf.ts_col, udf.allowed_lateness)
-            return reduce_ops.sliding(w, udf.ts_col, length, slide, udf.keys, udf.aggs)
+        else:
+            df = df.withWatermark(udf.ts_col, udf.allowed_lateness)
     if wkind == "fixed":
         return reduce_ops.tumbling(df, udf.ts_col, wargs, udf.keys, udf.aggs)
     if wkind == "sliding":
@@ -171,7 +159,7 @@ def _vertex_output(p: Pipeline, v: Vertex, spark: SparkSession,
             # writers (with_side_inputs), same split as the operator docs.
             return v.udf.fn(df, {n: p.side_inputs[n] for n in v.side_inputs})
         return v.udf.fn(df)
-    return _apply_reduce(v, df, streaming, spark=spark,
+    return _apply_reduce(v, df, streaming,
                          idle_source=p.idle_source if streaming else None)
 
 
@@ -194,25 +182,23 @@ def compile_batch(p: Pipeline, spark: SparkSession) -> dict[str, DataFrame]:
 class StreamingDeployment:
     """Handle over the started queries (one per sink, §3.1 step 5).
 
-    When the spec declared ``lifecycle.desiredPhase: Paused``
-    (pipeline_types.go:444-493), ``queries`` starts empty and
-    ``lifecycles`` holds one unstarted Lifecycle controller per sink —
+    ``lifecycles`` holds one Lifecycle controller per sink. When the spec
+    declared ``lifecycle.desiredPhase: Paused`` (pipeline_types.go:444-493),
+    ``queries`` starts empty and the controllers are unstarted —
     ``resume()`` brings the pipeline to Running, exactly the reconciler's
     phase flip (W6, streaming/lifecycle.py)."""
 
     queries: dict[str, object]
-    lifecycles: dict[str, object] | None = None
+    lifecycles: dict[str, Lifecycle]
 
     def resume(self) -> None:
-        if self.lifecycles:
-            for name, lc in self.lifecycles.items():
-                self.queries[name] = lc.run()
+        for name, lc in self.lifecycles.items():
+            self.queries[name] = lc.run()
 
     def pause(self, drain: bool = True) -> None:
-        if self.lifecycles:
-            for name, lc in self.lifecycles.items():
-                lc.pause(drain=drain)
-                self.queries.pop(name, None)
+        for name, lc in self.lifecycles.items():
+            lc.pause(drain=drain)
+            self.queries.pop(name, None)
 
     def process_all_available(self) -> None:
         for q in self.queries.values():
@@ -221,6 +207,33 @@ class StreamingDeployment:
     def stop(self) -> None:
         for q in self.queries.values():
             q.stop()
+
+
+def start_stream(spark: SparkSession, writer, *, checkpoint: str | None,
+                 key_count: int | None):
+    """Start the DataStreamWriter ``writer`` on ``spark``: the one place an
+    in-repo stream start decides its confs. Returns the StreamingQuery.
+
+    ``checkpoint`` becomes the ``checkpointLocation`` option; ``None``
+    leaves Spark's own location (a memory sink's temporary dir, or the
+    session's ``spark.sql.streaming.checkpointLocation``). The query starts
+    at the state width ``scale.streaming_state_partitions(key_count,
+    defaultParallelism)`` (``key_count=None``: no key limit) and under
+    ``scale.streaming_checkpoint_conf`` for that location — on ``file:``
+    Spark's FileSystem-based checkpoint manager, which forks no
+    ``readlink`` per file check. Both are set in one ``graph.scoped_conf``
+    around ``writer.start()`` and restored afterwards, so the session's own
+    confs are untouched; the query keeps them because Spark clones the
+    session at start. A query restarted from an existing checkpoint keeps
+    the width recorded there (Spark restores it from the offset log), and
+    a checkpoint written under either manager resumes under the other."""
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    width = streaming_state_partitions(key_count, spark.sparkContext.defaultParallelism)
+    confs = {"spark.sql.shuffle.partitions": str(width),
+             **streaming_checkpoint_conf(spark, checkpoint)}
+    with scoped_conf(spark, confs):
+        return writer.start()
 
 
 def compile_streaming(
@@ -238,35 +251,20 @@ def compile_streaming(
     writer); others go to a named memory sink (the test harness's golden-sink,
     mirroring the reference's Redis check sink, test/fixtures/redis_check.go).
 
-    Every query starts at the state width from
-    ``scale.streaming_state_partitions``: cores are the session's
-    defaultParallelism, and the key limit applies only when every source
-    declares its ``key_count`` (their sum; a map may re-key, but the width
-    is a cost choice, never a correctness one). The width is set only
-    around each ``start`` — a resume after pause included — and the
-    session conf is restored afterwards; the query keeps it because Spark
-    clones the session at start. A query restarted from an existing
-    checkpoint keeps the width recorded in that checkpoint (Spark restores
-    the shuffle width from the offset log).
-
-    The same block carries ``scale.streaming_checkpoint_conf`` for the
-    sink's checkpoint location (``checkpoint_root/<sink>``, or Spark's
-    temporary one for a memory sink): on the ``file`` scheme the query
-    checkpoints through Spark's FileSystem-based manager, which forks no
-    ``readlink`` per file check; other schemes keep Spark's choice. A
-    checkpoint written under either manager resumes under the other.
+    Every start — a resume after pause included — goes through
+    :func:`start_stream` with the sink's checkpoint location
+    (``checkpoint_root/<sink>``, or ``None`` for a memory sink) and a key
+    count that is the sum of the sources' declared ``key_count`` when every
+    source declares one, else ``None`` (a map may re-key, but the width is
+    a cost choice, never a correctness one).
     """
     p.validate()
     outputs: dict[str, DataFrame] = {}
     started: dict[str, object] = {}
-    lifecycles: dict[str, object] = {}
+    lifecycles: dict[str, Lifecycle] = {}
     paused = p.desired_phase == "Paused"
     declared = [v.source.key_count for v in p.vertices if v.kind == "source"]
-    width = streaming_state_partitions(
-        None if None in declared else sum(declared),
-        spark.sparkContext.defaultParallelism,
-    )
-    state_conf = {"spark.sql.shuffle.partitions": str(width)}
+    key_count = None if None in declared else sum(declared)
     for name in p.topo_order():
         v = p.vertex(name)
         outputs[name] = _vertex_output(p, v, spark, outputs, streaming=True)
@@ -297,16 +295,8 @@ def compile_streaming(
                 # checkpoint, so it runs at Spark's temporary location
                 # (ephemeral by design).
                 location = None
-        if location is not None:
-            writer = writer.option("checkpointLocation", location)
-        start_conf = {**state_conf, **streaming_checkpoint_conf(spark, location)}
-        from numaflow_spark.streaming.lifecycle import Lifecycle
-
-        def start(writer=writer, start_conf=start_conf):
-            with scoped_conf(spark, start_conf):
-                return writer.start()
-
-        lifecycles[name] = Lifecycle(start_fn=start)
+        lifecycles[name] = Lifecycle(start_fn=partial(
+            start_stream, spark, writer, checkpoint=location, key_count=key_count))
         if not paused:
             started[name] = lifecycles[name].run()
     return StreamingDeployment(started, lifecycles=lifecycles)

@@ -96,39 +96,3 @@ def session(
         *[c for c in out.columns if c not in ("session_window", *keys)],
     )
 
-
-def streaming_tumbling(
-    df: DataFrame,
-    ts_col: str,
-    length: str,
-    watermark_delay: str,
-    keys: Sequence[str] = (),
-    aggs: Sequence[Column] = (),
-) -> DataFrame:
-    """Streaming variant: watermark supplies the window-close signal the
-    reference derives from propagated WMs (udf.go:101-104 allowedLateness ==
-    the watermark delay here). Append output mode emits a window exactly once
-    when the watermark passes its end — the same contract as the reference's
-    CLOSE -> emit (reduce.proto:38-49)."""
-    w = df.withWatermark(ts_col, watermark_delay)
-    out = w.groupBy(F.window(ts_col, length), *keys).agg(*aggs)
-    return out.select(*_window_bounds_epoch(), *keys, *[c for c in out.columns if c not in ("window", *keys)])
-
-
-def streaming_session(
-    df: DataFrame,
-    ts_col: str,
-    gap: str,
-    watermark_delay: str,
-    keys: Sequence[str] = (),
-    aggs: Sequence[Column] = (),
-) -> DataFrame:
-    """Streaming session windows (sessionreduce.proto:29-57)."""
-    w = df.withWatermark(ts_col, watermark_delay)
-    out = w.groupBy(F.session_window(ts_col, gap), *keys).agg(*aggs)
-    return out.select(
-        F.unix_timestamp(F.col("session_window.start")).alias("window_start"),
-        F.unix_timestamp(F.col("session_window.end")).alias("window_end"),
-        *keys,
-        *[c for c in out.columns if c not in ("session_window", *keys)],
-    )

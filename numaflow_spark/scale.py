@@ -101,10 +101,9 @@ def streaming_state_partitions(key_cardinality: int | None, cores: int) -> int:
     """Shuffle width for a stateful streaming stage, owned by the ENGINE
     (r13 verdict: the bench harness re-sized its own measured stage 8 -> 4,
     which broke the metric's round-over-round comparability — the sizing
-    rule belongs here, versioned with the engine). compiler.py's
-    ``compile_streaming`` starts every query at this width (cores from the
-    session's defaultParallelism, keys from the sources' declared
-    ``key_count``); bench.py applies it to its own hand-built stage.
+    rule belongs here, versioned with the engine). ``compiler.start_stream``
+    starts every in-repo stream at this width (cores from the session's
+    defaultParallelism, keys from the caller's ``key_count``).
 
     Two ceilings, take the smaller: (a) one state partition per 2 cores
     keeps stores mem-resident and amortizes per-batch commit cost
@@ -135,9 +134,9 @@ def streaming_checkpoint_conf(spark, checkpoint_root: str | None) -> dict[str, s
     """Checkpoint-manager conf for a stream whose checkpoint lives at
     ``checkpoint_root`` (``None``: Spark's own location — the session's
     ``spark.sql.streaming.checkpointLocation``, else the temporary one a
-    memory sink gets). Every in-repo stream start applies it inside the
-    ``graph.scoped_conf`` block around ``start``; the query keeps it
-    because Spark clones the session at start.
+    memory sink gets). ``compiler.start_stream`` applies it inside the
+    ``graph.scoped_conf`` block around every in-repo stream start; the
+    query keeps it because Spark clones the session at start.
 
     On the ``file`` scheme it names Spark's FileSystem-based manager.
     Spark's default, the FileContext manager, checks link status through

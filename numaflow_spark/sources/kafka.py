@@ -23,9 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from numaflow_spark.compiler import start_stream
 from numaflow_spark.message import message_id
-from numaflow_spark.operators.graph import scoped_conf
-from numaflow_spark.scale import streaming_checkpoint_conf
 
 
 def kafka_envelope(df: DataFrame, vertex_name: str = "kafka-source") -> DataFrame:
@@ -115,8 +114,8 @@ def kafka_sink_writer(
 ):
     """K3: produce envelope rows to a topic. Key defaults to the first
     entry of ``keys`` (the reference's partition-key behavior); returns the
-    started StreamingQuery, started under the engine's checkpoint-manager
-    rule (``scale.streaming_checkpoint_conf``)."""
+    StreamingQuery, started by ``compiler.start_stream`` (no key limit on
+    the state width)."""
     key = (
         F.col(key_col)
         if key_col
@@ -130,14 +129,12 @@ def kafka_sink_writer(
         out.writeStream.format("kafka")
         .option("kafka.bootstrap.servers", brokers)
         .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
     )
     if trigger:
         writer = writer.trigger(**trigger)
-    spark = df.sparkSession
     try:
-        with scoped_conf(spark, streaming_checkpoint_conf(spark, checkpoint)):
-            return writer.start()
+        return start_stream(df.sparkSession, writer, checkpoint=checkpoint,
+                            key_count=None)
     except Exception as e:  # pragma: no cover - env-dependent
         raise RuntimeError(
             "Kafka connector unavailable — add the spark-sql-kafka-0-10 "

@@ -121,10 +121,15 @@ class Lifecycle:
     phase: str = field(default="Stopped")
 
     def run(self) -> object:
+        """Running: start the query unless it already runs. After a pause
+        this restarts from the checkpoint — unprocessed ranges replay,
+        committed ones don't (WAL-replay semantics)."""
         if self.phase != "Running":
             self.query = self.start_fn()
             self.phase = "Running"
         return self.query
+
+    resume = run
 
     def pause(self, drain: bool = True) -> None:
         """Paused: stop reading; optionally drain buffered work first
@@ -137,12 +142,3 @@ class Lifecycle:
                     pass
             self.query.stop()
         self.phase = "Paused"
-
-    def resume(self) -> object:
-        """Running again: restart from the checkpoint — unprocessed ranges
-        replay, committed ones don't (WAL-replay semantics)."""
-        if self.phase == "Running":
-            return self.query
-        self.query = self.start_fn()
-        self.phase = "Running"
-        return self.query

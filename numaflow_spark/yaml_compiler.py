@@ -157,6 +157,14 @@ def _image_key(image: str) -> str:
     return image.rsplit("/", 1)[-1].split(":", 1)[0]
 
 
+def _no_batch_twin(kind: str):
+    """Batch reader of a stream-only source: raises when a batch compile
+    reads it."""
+    def reader(spark):
+        raise ValueError(f"{kind} source has no batch twin")
+    return reader
+
+
 def _build_source(name: str, spec: Mapping[str, Any], registry: Mapping[str, Any]) -> Source:
     if "generator" in spec:
         g = spec["generator"] or {}
@@ -207,8 +215,7 @@ def _build_source(name: str, spec: Mapping[str, Any], registry: Mapping[str, Any
             s.dataSource.register(make_udsource(HttpSourceHandle, name=fmt))
             return s.readStream.format(fmt).option("port", str(port)).option("vertex", name).load()
 
-        return Source(reader=lambda s: (_ for _ in ()).throw(
-            ValueError("http source has no batch twin")), stream_reader=stream_reader)
+        return Source(reader=_no_batch_twin("http"), stream_reader=stream_reader)
 
     if "kafka" in spec:
         k = spec["kafka"] or {}
@@ -220,8 +227,7 @@ def _build_source(name: str, spec: Mapping[str, Any], registry: Mapping[str, Any
 
             return kafka_source(s, brokers, topic, vertex_name=name)
 
-        return Source(reader=lambda s: (_ for _ in ()).throw(
-            ValueError("kafka source has no batch twin")), stream_reader=stream_reader)
+        return Source(reader=_no_batch_twin("kafka"), stream_reader=stream_reader)
 
     if "serving" in spec:
         # S8 serving source (serving_source.go; rust/serving/src/): requests
@@ -238,12 +244,7 @@ def _build_source(name: str, spec: Mapping[str, Any], registry: Mapping[str, Any
                 )
             return s.readStream.schema("request_id string, value string").json(inbox)
 
-        return Source(
-            reader=lambda s: (_ for _ in ()).throw(
-                ValueError("serving source has no batch twin")
-            ),
-            stream_reader=stream_reader,
-        )
+        return Source(reader=_no_batch_twin("serving"), stream_reader=stream_reader)
 
     if "udsource" in spec:
         entry = registry.get(name)
@@ -275,12 +276,7 @@ def _build_source(name: str, spec: Mapping[str, Any], registry: Mapping[str, Any
                 r = r.option(k, v)
             return r.load()
 
-        return Source(
-            reader=lambda s, kind=kind: (_ for _ in ()).throw(
-                ValueError(f"{kind} source has no batch twin")
-            ),
-            stream_reader=stream_reader,
-        )
+        return Source(reader=_no_batch_twin(kind), stream_reader=stream_reader)
 
     if "sqs" in spec:
         # sqs_source.go / 22-sqs-source-mvtx.yaml: queueName + awsRegion +

@@ -450,38 +450,50 @@ def test_conf_mutation_lives_in_scoped_conf():
     """Static, Spark-free: across every module under numaflow_spark/, the
     root-level scripts and tools/, the only ``spark.conf.set`` calls are
     the set/restore pair in graph.scoped_conf and load_table's two
-    defensive sets (the explicit allow-list below), and no source file
-    names the retired plan-audit env switch (graph.lazy_plans replaced
-    it). load_table's sets stay because a driver may run queries() on a
-    session it built itself: nanosAsLong and the UTC zone are what make
-    the scans oracle-equivalent there, and they must outlive the call —
-    every later query on that session reads the same tables."""
+    defensive sets (the explicit allow-list below), the only
+    ``streaming_checkpoint_conf`` call is compiler.start_stream's (every
+    stream start goes through it), and no source file names the retired
+    plan-audit env switch (graph.lazy_plans replaced it). load_table's
+    sets stay because a driver may run queries() on a session it built
+    itself: nanosAsLong and the UTC zone are what make the scans
+    oracle-equivalent there, and they must outlive the call — every later
+    query on that session reads the same tables."""
     import ast
     import pathlib
 
     root = pathlib.Path(__file__).resolve().parent.parent
 
-    def conf_sets(node, fn=None):
+    def conf_set(call):
+        return (isinstance(call.func, ast.Attribute)
+                and call.func.attr == "set"
+                and isinstance(call.func.value, ast.Attribute)
+                and call.func.value.attr == "conf")
+
+    def checkpoint_conf(call):  # a bare or a module-qualified call
+        name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+        return name == "streaming_checkpoint_conf"
+
+    def calls(node, match, fn=None):
         for child in ast.iter_child_nodes(node):
-            if (isinstance(child, ast.Call)
-                    and isinstance(child.func, ast.Attribute)
-                    and child.func.attr == "set"
-                    and isinstance(child.func.value, ast.Attribute)
-                    and child.func.value.attr == "conf"):
+            if isinstance(child, ast.Call) and match(child):
                 yield fn
             inner = child.name if isinstance(child, ast.FunctionDef) else fn
-            yield from conf_sets(child, inner)
+            yield from calls(child, match, inner)
+
+    scanned = [*(root / "numaflow_spark").rglob("*.py"),
+               *root.glob("*.py"), *(root / "tools").glob("*.py")]
+    trees = {str(path.relative_to(root)): ast.parse(path.read_text())
+             for path in sorted(scanned)}
+
+    def sites(match):
+        return [(path, fn) for path, tree in trees.items()
+                for fn in calls(tree, match)]
 
     allowed = [("numaflow_spark/operators/graph.py", "scoped_conf")] * 2 + [
         ("numaflow_spark/session.py", "load_table")] * 2
-    scanned = [*(root / "numaflow_spark").rglob("*.py"),
-               *root.glob("*.py"), *(root / "tools").glob("*.py")]
-    sites = [
-        (str(path.relative_to(root)), fn)
-        for path in sorted(scanned)
-        for fn in conf_sets(ast.parse(path.read_text()))
-    ]
-    assert sites == allowed, sites
+    assert sites(conf_set) == allowed, sites(conf_set)
+    assert sites(checkpoint_conf) == [
+        ("numaflow_spark/compiler.py", "start_stream")], sites(checkpoint_conf)
 
     knob = "SPARK_GRAFT_NO_AQE_" + "MATERIALIZE"  # split: not named here
     sources = [*root.glob("*.py"),

@@ -25,8 +25,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from numaflow_spark.compiler import start_stream
 from numaflow_spark.operators.graph import scoped_conf
-from numaflow_spark.scale import streaming_checkpoint_conf
 from numaflow_spark.session import get_spark
 
 
@@ -46,17 +46,15 @@ def main() -> None:
     feed = tempfile.mkdtemp(prefix="stream_sf1_feed_")
     ckpt = tempfile.mkdtemp(prefix="stream_sf1_ckpt_")
     # RocksDB state store — the cluster preset's choice (scale.py); the
-    # default HDFS-backed store would hold all state on-heap. The confs,
-    # the engine's checkpoint-manager rule included, are restored when the
-    # run ends, an exception included.
-    confs = {
+    # default HDFS-backed store would hold all state on-heap. The conf is
+    # restored when the run ends, an exception included; start_stream
+    # adds the engine's state width and checkpoint-manager rule.
+    rocksdb = {
         "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
-        "spark.sql.shuffle.partitions": "8",
-        **streaming_checkpoint_conf(spark, ckpt),
     }
-    with scoped_conf(spark, confs):
+    with scoped_conf(spark, rocksdb):
         src_static = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         total_rows = src_static.count()
         n_users = src_static.select("user_id").distinct().count()
@@ -80,14 +78,13 @@ def main() -> None:
             .groupBy(F.window("event_time", "1 hour"), "user_id")
             .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
         )
-        q = (
+        writer = (
             agg.writeStream.format("memory")
             .queryName("stream_sf1_sink")
             .outputMode("update")
-            .option("checkpointLocation", ckpt)
             .trigger(processingTime="0 seconds")
-            .start()
         )
+        q = start_stream(spark, writer, checkpoint=ckpt, key_count=n_users)
         try:
             t0 = time.perf_counter()
             rows = 0
