@@ -33,6 +33,18 @@ def _cents(col, scale: int = 100):
     return (col * scale).cast("bigint")
 
 
+def _literal_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A small driver-side table, typed by the DDL ``ddl``, as a local
+    relation shipped through Arrow. ``createDataFrame(list)`` would scan a
+    Python RDD instead and start the Python worker daemon to decode it."""
+    import pyarrow as pa
+    from pyspark.sql.types import DataType
+
+    schema = DataType.fromDDL(ddl)
+    cols = {f.name: [r[i] for r in rows] for i, f in enumerate(schema.fields)}
+    return spark.createDataFrame(pa.table(cols), schema)
+
+
 # ---------------------------------------------------------------------------
 # Reduce operators (§2.4) on the events stream table, batch-mode correctness.
 # ---------------------------------------------------------------------------
@@ -432,7 +444,8 @@ def q_range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from numaflow_spark.operators.asof import range_join
 
     part = load_table(spark, sf_dir, "part")
-    bands = spark.createDataFrame(
+    bands = _literal_frame(
+        spark,
         [(i, 900.0 + i * 10.0, 900.0 + (i + 1) * 10.0) for i in range(10)],
         "band int, lo double, hi double",
     )
@@ -2507,7 +2520,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     merges, _ = train_bpe(word_freq_table(docs), 8)
     rows = [(i + 1, a, b) for i, (a, b) in enumerate(merges)]
-    return spark.createDataFrame(rows, "step int, sym_a string, sym_b string")
+    return _literal_frame(spark, rows, "step int, sym_a string, sym_b string")
 
 
 def q_yoy_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4165,7 +4178,8 @@ def q_order_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = [(r["c_mktsegment"], r["day"], r["net"]) for r in daily.collect()]
     assert len(rows) < 500_000, "segment×day census bound blown"
-    return spark.createDataFrame(
+    return _literal_frame(
+        spark,
         _sweep_peak(rows),
         "c_mktsegment string, first_peak_day bigint, peak_open bigint",
     )

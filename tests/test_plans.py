@@ -86,6 +86,25 @@ def test_range_join_is_broadcast_nested_loop(spark):
     assert nodes(plan, "CartesianProduct") == 0
 
 
+def test_literal_tables_scan_no_python_rdd(spark, monkeypatch):
+    """The benchmark's relational pass, plus the two other queries that
+    build a driver-side literal table, plans no scan of a Python RDD: the
+    literal enters as an Arrow local relation, so no query of the pass
+    starts the Python worker daemon."""
+    import importlib
+    import pathlib
+
+    monkeypatch.syspath_prepend(str(pathlib.Path(__file__).parent.parent / "perfbench"))
+    relational = importlib.import_module("workload").WORKLOADS["batch-relational"].queries
+    scans = {}
+    with lazy_plans():
+        for name in (*relational, "bpe_merges", "order_concurrency_peak"):
+            plan = QUERIES[name](spark, SF)._jdf.queryExecution().executedPlan().toString()
+            if "ExistingRDD" in plan:
+                scans[name] = plan
+    assert not scans, scans
+
+
 @pytest.mark.parametrize("name", ["text_stats", "token_count_bpe", "lang_id"])
 def test_text_ops_stay_jvm_side(spark, name):
     plan = plan_of(spark, name)
