@@ -282,7 +282,7 @@ class DaemonServer:
       * ``/api/v1/vertices/<name>``   GetVertexMetrics JSON (404 unknown)
       * ``/api/v1/snapshot``          everything (PipelineMonitor.snapshot)
 
-    Same stdlib ThreadingHTTPServer pattern as ``sources/http_source.py`` —
+    Same ``wire.TLSThreadingHTTPServer`` as ``sources/http_source.py`` —
     driver-side only, daemon-threaded, ephemeral port by default.
     """
 
@@ -307,8 +307,10 @@ class DaemonServer:
         return self._server.server_address[1]
 
     def start(self) -> "DaemonServer":
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
         import threading
+        from http.server import BaseHTTPRequestHandler
+
+        from numaflow_spark import wire
 
         monitor, pipeline = self._monitor, self._pipeline
 
@@ -354,15 +356,11 @@ class DaemonServer:
             def log_message(self, *a) -> None:  # quiet CI logs
                 pass
 
-        self._server = ThreadingHTTPServer(("127.0.0.1", self._port), Handler)
-        if self._tls_cert_file:
-            import ssl
-
-            ctx = ssl.SSLContext(ssl.PROTOCOL_TLS_SERVER)
-            ctx.load_cert_chain(self._tls_cert_file, self._tls_key_file)
-            self._server.socket = ctx.wrap_socket(
-                self._server.socket, server_side=True
-            )
+        self._server = wire.TLSThreadingHTTPServer(
+            ("127.0.0.1", self._port), Handler,
+            wire.server_context(self._tls_cert_file, self._tls_key_file)
+            if self._tls_cert_file else None,
+        )
         threading.Thread(target=self._server.serve_forever, daemon=True).start()
         return self
 

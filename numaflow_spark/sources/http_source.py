@@ -25,10 +25,11 @@ from __future__ import annotations
 
 import threading
 from datetime import datetime, timezone
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 
 from pyspark.sql import types as T
 
+from numaflow_spark import wire
 from numaflow_spark.sources.user_defined import SourceHandle
 
 HTTP_SOURCE_SCHEMA = T.StructType(
@@ -90,7 +91,7 @@ class HttpSourceHandle(SourceHandle):
         self.tls_cert_file = options.get("tls_cert_file")
         self.tls_key_file = options.get("tls_key_file")
         self._buf: _Buffer | None = None
-        self._server: ThreadingHTTPServer | None = None
+        self._server: wire.TLSThreadingHTTPServer | None = None
 
     # -- server lifecycle (lazy: the handle is pickled before the reader
     # process exists; sockets must be created post-unpickle) ---------------
@@ -139,15 +140,11 @@ class HttpSourceHandle(SourceHandle):
             def log_message(self, *a) -> None:  # quiet CI logs
                 pass
 
-        self._server = ThreadingHTTPServer(("127.0.0.1", self.port), Handler)
-        if self.tls_cert_file:
-            import ssl
-
-            ctx = ssl.SSLContext(ssl.PROTOCOL_TLS_SERVER)
-            ctx.load_cert_chain(self.tls_cert_file, self.tls_key_file)
-            self._server.socket = ctx.wrap_socket(
-                self._server.socket, server_side=True
-            )
+        self._server = wire.TLSThreadingHTTPServer(
+            ("127.0.0.1", self.port), Handler,
+            wire.server_context(self.tls_cert_file, self.tls_key_file)
+            if self.tls_cert_file else None,
+        )
         threading.Thread(target=self._server.serve_forever, daemon=True).start()
         self._buf = buf
         return buf

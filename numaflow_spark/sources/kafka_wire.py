@@ -87,14 +87,13 @@ AddPartitionsToTxn, EndTxn writing commit/abort control-marker
 batches, last-stable-offset semantics, Fetch v4 aborted_transactions
 index, and the published read_committed client filter — abort ranges
 closed by their markers so later commits from the same producer
-deliver). ALL FOUR batch codecs are implemented: gzip, snappy with
-xerial framing, zstd (pyarrow-bundled codecs), and lz4 (r10: the LZ4
-frame + block formats implemented from the published specs directly —
-pure-Python xxHash32 header/content checksums, an overlap-safe block
-decoder that needs no content-size hint, and a greedy hash-table block
-compressor honoring the spec's end-of-block rules; pyarrow's bundled
-lz4 codec could not decode size-less frames, which kept this codec out
-through r9). Not implemented (documented divergence): SASL
+deliver). ALL FOUR batch codecs are implemented on Arrow: gzip, lz4 and
+zstd decode through its streaming reader (``pa.CompressedInputStream``,
+which needs no content size — Kafka producers omit it); snappy keeps its
+xerial framing around ``pa.Codec("snappy")`` blocks; gzip encodes with
+the stdlib, zstd with ``pa.Codec("zstd")``, and lz4 writes the
+block-independent frame Kafka's producer writes, each 64 KB block through
+``pa.Codec("lz4_raw")``. Not implemented (documented divergence): SASL
 GSSAPI/Kerberos (OAUTHBEARER per RFC 7628 IS implemented,
 with KIP-255 unsecured-JWS validation, principal allow-listing, and
 the published challenge-then-dummy-response failure dance; swap the
@@ -111,6 +110,7 @@ broker is always the coordinator), multi-broker metadata.
 from __future__ import annotations
 
 import base64
+import gzip
 import hashlib
 import hmac as _hmac
 import secrets
@@ -121,6 +121,8 @@ import time
 import zlib
 
 from pyspark.sql import types as T
+
+from numaflow_spark import wire
 
 API_PRODUCE = 0
 API_FETCH = 1
@@ -413,9 +415,19 @@ def _vbytes(b: bytes | None) -> bytes:
     return _vint(len(b)) + b
 
 
-GZIP = 1  # RecordBatch attributes bits 0-2: compression codec
+# ---------------------------------------------------------------------------
+# Batch codecs (RecordBatch attributes bits 0-2). Only the records section
+# compresses. gzip, lz4 and zstd decode through Arrow's streaming reader
+# (pa.CompressedInputStream): unlike the one-shot Codec.decompress it needs
+# no content size, which Kafka producers leave out of lz4 and zstd frames,
+# and it reads block-dependent and checksummed LZ4 frames too. snappy keeps
+# the xerial framing around pa.Codec("snappy") blocks.
+# ---------------------------------------------------------------------------
+
+GZIP = 1
 SNAPPY = 2  # xerial block framing around raw snappy blocks (the published
 #             snappy-java stream format Kafka producers emit)
+LZ4 = 3  # standard LZ4 frames (github.com/lz4/lz4 Frame format spec)
 ZSTD = 4  # standard zstd frames (RFC 8878)
 
 _XERIAL_HEADER = bytes([0x82]) + b"SNAPPY" + bytes([0]) + _i32(1) + _i32(1)
@@ -468,299 +480,29 @@ def _snappy_xerial_decompress(buf: bytes) -> bytes:
     )
 
 
-def _zstd_content_size(buf: bytes) -> int:
-    """Frame_Content_Size from the zstd frame header (RFC 8878 §3.1.1) —
-    pyarrow needs the exact decompressed size up front."""
-    if len(buf) < 5 or buf[:4] != b"\x28\xb5\x2f\xfd":
-        raise ValueError("not a zstd frame")
-    fhd = buf[4]
-    fcs_flag = fhd >> 6
-    single_segment = (fhd >> 5) & 1
-    did_size = (0, 1, 2, 4)[fhd & 3]
-    pos = 5 + (0 if single_segment else 1) + did_size
-    if fcs_flag == 0:
-        if not single_segment:
-            raise ValueError("zstd frame carries no content size")
-        return buf[pos]
-    if fcs_flag == 1:
-        return struct.unpack("<H", buf[pos : pos + 2])[0] + 256
-    if fcs_flag == 2:
-        return struct.unpack("<I", buf[pos : pos + 4])[0]
-    return struct.unpack("<Q", buf[pos : pos + 8])[0]
+# magic 0x184D2204, FLG (version 01, B.Indep, no checksums or content
+# size), BD (64 KB blocks), HC = second byte of xxHash32(FLG BD)
+_LZ4_HEADER = b"\x04\x22\x4d\x18\x60\x40\x82"
+_LZ4_BLOCK = 64 * 1024
 
 
-# ---------------------------------------------------------------------------
-# LZ4 (attributes codec 3): record batches carry a standard LZ4 FRAME
-# (github.com/lz4/lz4 Frame format spec v1.6.x) around LZ4 BLOCKS. pyarrow's
-# bundled lz4 frame codec cannot decode without a Frame_Content_Size (which
-# Kafka producers legitimately omit), so both directions are implemented
-# from the PUBLISHED specs directly: a pure-Python xxHash32 (header/content
-# checksums), a pure-Python block decoder (token / literals / offset+match
-# copy, overlap-safe), and a greedy hash-chain block compressor honoring the
-# end-of-block rules (last 5 bytes literal, last match starts >= 12 bytes
-# from the end; blocks < 13 bytes never compress). Message-format v2 uses
-# the UNMODIFIED frame spec (the v0/v1 legacy HC quirk does not apply).
-# ---------------------------------------------------------------------------
+def _lz4_compress(raw: bytes) -> bytes:
+    """Block-independent LZ4 frame, the shape Kafka's producer writes.
+    Arrow's own frame writers link blocks once the input passes one
+    block, so each <= 64 KB chunk goes through pa.Codec("lz4_raw") here,
+    stored raw (size word high bit) when it does not shrink."""
+    import pyarrow as pa
 
-LZ4 = 3
-_LZ4_MAGIC = b"\x04\x22\x4d\x18"  # 0x184D2204 LE
-_XXH32_P1, _XXH32_P2, _XXH32_P3, _XXH32_P4, _XXH32_P5 = (
-    2654435761, 2246822519, 3266489917, 668265263, 374761393)
-_M32 = 0xFFFFFFFF
-
-
-def _rotl32(x: int, r: int) -> int:
-    return ((x << r) | (x >> (32 - r))) & _M32
-
-
-def _xxh32(data: bytes, seed: int = 0) -> int:
-    """xxHash32 (the published algorithm; required by the LZ4 frame spec
-    for the descriptor HC byte and the optional content checksum)."""
-    n = len(data)
-    pos = 0
-    if n >= 16:
-        v1 = (seed + _XXH32_P1 + _XXH32_P2) & _M32
-        v2 = (seed + _XXH32_P2) & _M32
-        v3 = seed & _M32
-        v4 = (seed - _XXH32_P1) & _M32
-        while pos + 16 <= n:
-            for i, v in enumerate((v1, v2, v3, v4)):
-                (lane,) = struct.unpack_from("<I", data, pos + 4 * i)
-                v = (v + lane * _XXH32_P2) & _M32
-                v = (_rotl32(v, 13) * _XXH32_P1) & _M32
-                if i == 0:
-                    v1 = v
-                elif i == 1:
-                    v2 = v
-                elif i == 2:
-                    v3 = v
-                else:
-                    v4 = v
-            pos += 16
-        h = (_rotl32(v1, 1) + _rotl32(v2, 7) + _rotl32(v3, 12)
-             + _rotl32(v4, 18)) & _M32
-    else:
-        h = (seed + _XXH32_P5) & _M32
-    h = (h + n) & _M32
-    while pos + 4 <= n:
-        (lane,) = struct.unpack_from("<I", data, pos)
-        h = (h + lane * _XXH32_P3) & _M32
-        h = (_rotl32(h, 17) * _XXH32_P4) & _M32
-        pos += 4
-    while pos < n:
-        h = (h + data[pos] * _XXH32_P5) & _M32
-        h = (_rotl32(h, 11) * _XXH32_P1) & _M32
-        pos += 1
-    h ^= h >> 15
-    h = (h * _XXH32_P2) & _M32
-    h ^= h >> 13
-    h = (h * _XXH32_P3) & _M32
-    h ^= h >> 16
-    return h
-
-
-def _lz4_block_decompress(src: bytes, history: bytes = b"") -> bytes:
-    """LZ4 block format decode (lz4_Block_format.md): token high nibble =
-    literal run (15 extends byte-wise), low nibble = match length - 4;
-    2-byte LE offset; overlap-safe byte-range match copy. `history` is the
-    prior decoded window (last <=64 KB) for block-DEPENDENT frames: match
-    offsets may reach back into it; only the newly decoded bytes are
-    returned."""
-    out = bytearray(history)
-    pos, n = 0, len(src)
-    while pos < n:
-        token = src[pos]
-        pos += 1
-        lit = token >> 4
-        if lit == 15:
-            while True:
-                if pos >= n:
-                    raise ValueError("truncated lz4 literal length")
-                b = src[pos]
-                pos += 1
-                lit += b
-                if b != 255:
-                    break
-        if pos + lit > n:
-            raise ValueError("truncated lz4 literals")
-        out += src[pos:pos + lit]
-        pos += lit
-        if pos == n:
-            break  # last sequence carries literals only
-        if pos + 2 > n:
-            raise ValueError("truncated lz4 offset")
-        offset = src[pos] | (src[pos + 1] << 8)
-        pos += 2
-        if offset == 0 or offset > len(out):
-            raise ValueError("corrupt lz4 offset")
-        mlen = (token & 0x0F) + 4
-        if (token & 0x0F) == 15:
-            while True:
-                if pos >= n:
-                    raise ValueError("truncated lz4 match length")
-                b = src[pos]
-                pos += 1
-                mlen += b
-                if b != 255:
-                    break
-        start = len(out) - offset
-        if offset >= mlen:  # disjoint: one slice copy
-            out += out[start:start + mlen]
+    codec = pa.Codec("lz4_raw")
+    out = bytearray(_LZ4_HEADER)
+    for i in range(0, len(raw), _LZ4_BLOCK):
+        chunk = raw[i:i + _LZ4_BLOCK]
+        block = codec.compress(chunk, asbytes=True)
+        if len(block) < len(chunk):
+            out += struct.pack("<I", len(block)) + block
         else:
-            for i in range(mlen):  # overlap: byte-wise replication
-                out.append(out[start + i])
-    return bytes(out[len(history):])
-
-
-def _lz4_block_compress(src: bytes) -> bytes | None:
-    """Greedy LZ4 block encoder (hash table over 4-byte windows). Honors
-    the spec's end rules: the last 5 bytes are literals and no match may
-    start within 12 bytes of the end. Returns None when the block doesn't
-    shrink (caller stores it uncompressed — also valid LZ4F)."""
-    n = len(src)
-    if n < 13:
-        return None
-    out = bytearray()
-    table: dict[int, int] = {}
-    anchor = 0
-    pos = 0
-    limit = n - 12  # last match must start before here (mflimit)
-    while pos < limit:
-        key = src[pos:pos + 4]
-        cand = table.get(hash(key))
-        table[hash(key)] = pos
-        if (cand is not None and pos - cand <= 65535
-                and src[cand:cand + 4] == key):
-            # extend the match forward (stop 5 literals before the end)
-            mend = pos + 4
-            cend = cand + 4
-            stop = n - 5
-            while mend < stop and src[mend] == src[cend]:
-                mend += 1
-                cend += 1
-            lit = src[anchor:pos]
-            mlen = mend - pos
-            token_lit = 15 if len(lit) >= 15 else len(lit)
-            token_m = 15 if mlen - 4 >= 15 else mlen - 4
-            out.append((token_lit << 4) | token_m)
-            rem = len(lit) - 15
-            while token_lit == 15 and rem >= 0:
-                out.append(255 if rem >= 255 else rem)
-                if rem < 255:
-                    break
-                rem -= 255
-            out += lit
-            out += struct.pack("<H", pos - cand)
-            rem = mlen - 4 - 15
-            while token_m == 15 and rem >= 0:
-                out.append(255 if rem >= 255 else rem)
-                if rem < 255:
-                    break
-                rem -= 255
-            anchor = mend
-            pos = mend
-        else:
-            pos += 1
-    # final literal run (everything from anchor to end)
-    lit = src[anchor:]
-    token_lit = 15 if len(lit) >= 15 else len(lit)
-    out.append(token_lit << 4)
-    rem = len(lit) - 15
-    while token_lit == 15 and rem >= 0:
-        out.append(255 if rem >= 255 else rem)
-        if rem < 255:
-            break
-        rem -= 255
-    out += lit
-    return bytes(out) if len(out) < n else None
-
-
-_LZ4_BLOCK_MAX = 4 * 1024 * 1024  # BD block-max code 7 (4 MB)
-
-
-def _lz4_frame_compress(raw: bytes) -> bytes:
-    """Standard LZ4 frame: FLG(version 01, block-independent), BD(4 MB),
-    HC = (xxh32(descriptor) >> 8) & 0xFF, independent data blocks (high
-    bit of the size word = stored uncompressed), empty EndMark."""
-    flg = (1 << 6) | (1 << 5)  # version 01, B.Indep, no checksums/size
-    bd = 7 << 4
-    desc = bytes([flg, bd])
-    hc = (_xxh32(desc) >> 8) & 0xFF
-    out = bytearray(_LZ4_MAGIC + desc + bytes([hc]))
-    for i in range(0, len(raw), _LZ4_BLOCK_MAX):
-        chunk = raw[i:i + _LZ4_BLOCK_MAX]
-        comp = _lz4_block_compress(chunk)
-        if comp is None:
-            out += struct.pack("<I", len(chunk) | 0x80000000)
-            out += chunk
-        else:
-            out += struct.pack("<I", len(comp))
-            out += comp
-    out += struct.pack("<I", 0)  # EndMark
-    return bytes(out)
-
-
-def _lz4_frame_decompress(buf: bytes) -> bytes:
-    """Decode a standard LZ4 frame (any compliant producer's output):
-    validates magic + descriptor HC, honors B.Checksum / C.Size / DictID
-    descriptor layout, decodes blocks until EndMark, verifies the content
-    checksum when present. No content-size hint needed — this is the
-    divergence pyarrow's bundled codec could not close."""
-    if len(buf) < 7 or buf[:4] != _LZ4_MAGIC:
-        raise ValueError("not an lz4 frame")
-    flg = buf[4]
-    if (flg >> 6) != 1:
-        raise ValueError("unsupported lz4 frame version")
-    b_indep = bool(flg & (1 << 5))
-    has_bchk = bool(flg & (1 << 4))
-    has_csize = bool(flg & (1 << 3))
-    has_cchk = bool(flg & (1 << 2))
-    has_dict = bool(flg & 1)
-    desc_len = 2 + (8 if has_csize else 0) + (4 if has_dict else 0)
-    desc = buf[4:4 + desc_len]
-    hc_pos = 4 + desc_len
-    if hc_pos >= len(buf):
-        raise ValueError("truncated lz4 frame descriptor")
-    if buf[hc_pos] != (_xxh32(desc) >> 8) & 0xFF:
-        raise ValueError("lz4 frame header checksum mismatch")
-    pos = hc_pos + 1
-    out = bytearray()
-    while True:
-        if pos + 4 > len(buf):
-            raise ValueError("truncated lz4 frame (no EndMark)")
-        (word,) = struct.unpack_from("<I", buf, pos)
-        pos += 4
-        if word == 0:
-            break  # EndMark
-        stored = bool(word & 0x80000000)
-        size = word & 0x7FFFFFFF
-        if pos + size > len(buf):
-            raise ValueError("truncated lz4 block")
-        block = buf[pos:pos + size]
-        pos += size
-        if has_bchk:
-            if pos + 4 > len(buf):
-                raise ValueError("truncated lz4 block checksum")
-            (bchk,) = struct.unpack_from("<I", buf, pos)
-            pos += 4
-            if bchk != _xxh32(block):
-                raise ValueError("lz4 block checksum mismatch")
-        if stored:
-            out += block
-        else:
-            # Block-DEPENDENT frames (B.Indep clear — legal per the frame
-            # spec, though Kafka's clients set independence) let matches
-            # reach into the previous blocks' last 64 KB (ADVICE r10: a
-            # fresh history per block mis-decoded such frames as corrupt).
-            hist = b"" if b_indep else bytes(out[-65536:])
-            out += _lz4_block_decompress(block, hist)
-    if has_cchk:
-        if pos + 4 > len(buf):
-            raise ValueError("truncated lz4 content checksum")
-        (cchk,) = struct.unpack_from("<I", buf, pos)
-        if cchk != _xxh32(bytes(out)):
-            raise ValueError("lz4 content checksum mismatch")
-    return bytes(out)
+            out += struct.pack("<I", len(chunk) | 0x80000000) + chunk
+    return bytes(out + _i32(0))  # EndMark
 
 
 def _zstd_compress(raw: bytes) -> bytes:
@@ -769,12 +511,40 @@ def _zstd_compress(raw: bytes) -> bytes:
     return pa.Codec("zstd").compress(raw, asbytes=True)
 
 
-def _zstd_decompress(buf: bytes) -> bytes:
-    import pyarrow as pa
+def _arrow_reader(codec: str):
+    def read(buf: bytes) -> bytes:
+        import pyarrow as pa
 
-    return pa.Codec("zstd").decompress(
-        buf, decompressed_size=_zstd_content_size(buf), asbytes=True
-    )
+        with pa.CompressedInputStream(pa.BufferReader(buf), codec) as s:
+            return s.read()
+
+    return read
+
+
+# attributes codec -> (compress, decompress)
+_CODECS = {
+    GZIP: (gzip.compress, _arrow_reader("gzip")),
+    SNAPPY: (_snappy_xerial_compress, _snappy_xerial_decompress),
+    LZ4: (_lz4_compress, _arrow_reader("lz4")),
+    ZSTD: (_zstd_compress, _arrow_reader("zstd")),
+}
+
+
+def _codec(codec: int):
+    if codec not in _CODECS:
+        raise ValueError(f"unsupported compression codec {codec}")
+    return _CODECS[codec]
+
+
+def _decompress(codec: int, buf: bytes) -> bytes:
+    """A batch's records section, decoded. Every codec failure surfaces as
+    ValueError, so the produce path answers ERR_CORRUPT and keeps the
+    connection."""
+    decompress = _codec(codec)[1]
+    try:
+        return decompress(buf)
+    except (OSError, MemoryError) as e:
+        raise ValueError(f"corrupt compressed records (codec {codec}): {e}") from e
 
 
 def encode_record_batch_v2(
@@ -811,18 +581,8 @@ def encode_record_batch_v2(
         for hk, hv in headers:
             inner += _vbytes(hk.encode()) + _vbytes(hv)
         recs += _vint(len(inner)) + inner
-    if compression == GZIP:
-        import gzip as _gzip
-
-        recs = _gzip.compress(recs)
-    elif compression == SNAPPY:
-        recs = _snappy_xerial_compress(recs)
-    elif compression == ZSTD:
-        recs = _zstd_compress(recs)
-    elif compression == LZ4:
-        recs = _lz4_frame_compress(recs)
-    elif compression:
-        raise ValueError(f"unsupported compression codec {compression}")
+    if compression:
+        recs = _codec(compression)[0](recs)
     attrs = compression
     if transactional:
         attrs |= 0x10
@@ -913,18 +673,8 @@ def decode_record_batches_v2_ex(
         entries: list = []
         rec_buf = after[r.pos :]
         codec = attrs & 0x07
-        if codec == GZIP:
-            import gzip as _gzip
-
-            rec_buf = _gzip.decompress(rec_buf)
-        elif codec == SNAPPY:
-            rec_buf = _snappy_xerial_decompress(rec_buf)
-        elif codec == ZSTD:
-            rec_buf = _zstd_decompress(rec_buf)
-        elif codec == LZ4:
-            rec_buf = _lz4_frame_decompress(rec_buf)
-        elif codec:
-            raise ValueError(f"unsupported compression codec {codec}")
+        if codec:
+            rec_buf = _decompress(codec, rec_buf)
         p = 0
         for _ in range(count):
             rlen, p = _read_vint(rec_buf, p)
@@ -1217,18 +967,10 @@ class MiniKafkaBroker:
                     mech, password, salt, _SCRAM_ITERATIONS)
                 self._scram_creds[(mech, user)] = (
                     salt, _SCRAM_ITERATIONS, stored, server)
-        self._ssl_ctx = None
-        if tls_cert_file:
-            import ssl
-
-            self._ssl_ctx = ssl.SSLContext(ssl.PROTOCOL_TLS_SERVER)
-            self._ssl_ctx.load_cert_chain(tls_cert_file, tls_key_file)
-            if tls_client_ca_file:
-                # Mutual TLS (ssl.client.auth=required parity): the
-                # handshake itself rejects a peer without a cert chained
-                # to this CA — no application frame is ever exchanged.
-                self._ssl_ctx.verify_mode = ssl.CERT_REQUIRED
-                self._ssl_ctx.load_verify_locations(cafile=tls_client_ca_file)
+        # tls_client_ca_file: mutual TLS (ssl.client.auth=required parity)
+        ssl_ctx = (wire.server_context(tls_cert_file, tls_key_file,
+                                       tls_client_ca_file)
+                   if tls_cert_file else None)
         # log entry: (key, value, ts, headers, txn_pid | None, ctrl | None)
         # — txn_pid marks records produced inside a transaction, ctrl marks
         # commit/abort control markers (they occupy offsets, never deliver)
@@ -1253,16 +995,13 @@ class MiniKafkaBroker:
         self._srv.bind((host, port))
         self.port = self._srv.getsockname()[1]
         self._srv.listen(16)
-        self._closing = False
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
+        wire.accept_loop(self._srv, self._serve_conn, ssl_ctx)
 
     @property
     def bootstrap(self) -> str:
         return f"{self.host}:{self.port}"
 
     def close(self) -> None:
-        self._closing = True
         try:
             self._srv.close()
         except OSError:
@@ -1292,43 +1031,14 @@ class MiniKafkaBroker:
                 self._logs[(topic, p)] = []
 
     # -- wire loop ----------------------------------------------------------
-    def _accept_loop(self) -> None:
-        while not self._closing:
-            try:
-                conn, _ = self._srv.accept()
-            except OSError:
-                return
-            threading.Thread(
-                target=self._serve_entry, args=(conn,), daemon=True
-            ).start()
-
-    def _serve_entry(self, conn: socket.socket) -> None:
-        # TLS handshake in the per-connection thread so a stalled handshake
-        # cannot block the accept loop.
-        if self._ssl_ctx is not None:
-            try:
-                conn = self._ssl_ctx.wrap_socket(conn, server_side=True)
-            except OSError:
-                try:
-                    conn.close()
-                except OSError:
-                    pass
-                return
-        self._serve_conn(conn)
-
     def _serve_conn(self, conn: socket.socket) -> None:
         # Per-connection SASL session state: authenticated-from-birth when
         # the broker carries no credential store.
         state = {"authenticated": self._sasl_users is None, "handshake": False}
         try:
             while True:
-                head = _recv_exact(conn, 4)
-                if head is None:
-                    return
-                (size,) = struct.unpack(">i", head)
-                frame = _recv_exact(conn, size)
-                if frame is None:
-                    return
+                (size,) = struct.unpack(">i", wire.recv_exact(conn, 4))
+                frame = wire.recv_exact(conn, size)
                 try:
                     resp = self._handle(frame, state)
                 except _CloseConn:
@@ -2115,16 +1825,6 @@ class MiniKafkaBroker:
         return _i32(n_topics) + out_topics
 
 
-def _recv_exact(conn: socket.socket, n: int) -> bytes | None:
-    buf = b""
-    while len(buf) < n:
-        chunk = conn.recv(n - len(buf))
-        if not chunk:
-            return None
-        buf += chunk
-    return buf
-
-
 # --------------------------------------------------------------------------
 # client
 # --------------------------------------------------------------------------
@@ -2194,14 +1894,10 @@ class KafkaWireClient:
     def _ensure_sock(self) -> socket.socket:
         if self._sock is None:
             host, port = self._bootstrap.rsplit(":", 1)
-            sock = socket.create_connection((host, int(port)), timeout=30)
-            if self._tls:
-                import ssl
-
-                ctx = ssl.create_default_context(cafile=self._tls_ca_file)
-                if self._tls_cert_file:
-                    ctx.load_cert_chain(self._tls_cert_file, self._tls_key_file)
-                sock = ctx.wrap_socket(sock, server_hostname=host)
+            ctx = (wire.client_context(self._tls_ca_file, self._tls_cert_file,
+                                       self._tls_key_file)
+                   if self._tls else None)
+            sock = wire.connect(host, int(port), 30, ctx)
             if self._sasl_user is not None or self._sasl_oauth_token is not None:
                 self._sasl_exchange(sock)
             self._sock = sock
@@ -2220,14 +1916,8 @@ class KafkaWireClient:
                 + _string(self._client_id) + body
             )
             sock.sendall(_i32(len(frame)) + frame)
-            head = _recv_exact(sock, 4)
-            if head is None:
-                raise ConnectionError("broker closed connection during SASL")
-            (size,) = struct.unpack(">i", head)
-            resp = _recv_exact(sock, size)
-            if resp is None:
-                raise ConnectionError("broker closed connection mid-SASL-frame")
-            r = _Reader(resp)
+            (size,) = struct.unpack(">i", wire.recv_exact(sock, 4))
+            r = _Reader(wire.recv_exact(sock, size))
             if r.i32() != self._corr:
                 raise ValueError("correlation id mismatch during SASL")
             return r
@@ -2344,13 +2034,8 @@ class KafkaWireClient:
                 + _string(self._client_id) + body
             )
             self._sock.sendall(_i32(len(frame)) + frame)
-            head = _recv_exact(self._sock, 4)
-            if head is None:
-                raise ConnectionError("broker closed connection")
-            (size,) = struct.unpack(">i", head)
-            resp = _recv_exact(self._sock, size)
-            if resp is None:
-                raise ConnectionError("broker closed connection mid-frame")
+            (size,) = struct.unpack(">i", wire.recv_exact(self._sock, 4))
+            resp = wire.recv_exact(self._sock, size)
         r = _Reader(resp)
         got = r.i32()
         if got != corr:

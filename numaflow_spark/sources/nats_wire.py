@@ -59,6 +59,8 @@ import json
 import threading
 import time
 
+from numaflow_spark import wire
+
 
 def _subject_matches(pattern: str, subject: str) -> bool:
     """Core-NATS subject matching: tokens split on '.', '*' matches exactly
@@ -119,11 +121,8 @@ class WireNatsConnection:
             # TLS-first handshake mode (docs.nats.io handshake_first):
             # encrypt from byte 0, INFO arrives inside the tunnel. Full
             # verification; optional client cert for mutual TLS.
-            import ssl
-
-            ssl_ctx = ssl.create_default_context(cafile=tls_ca_file)
-            if tls_cert_file:
-                ssl_ctx.load_cert_chain(tls_cert_file, tls_key_file)
+            ssl_ctx = wire.client_context(tls_ca_file, tls_cert_file,
+                                          tls_key_file)
         self._reader, self._writer = await asyncio.open_connection(
             host, port, ssl=ssl_ctx, server_hostname=host if ssl_ctx else None
         )
@@ -292,16 +291,10 @@ class MiniNatsServer:
         self.host, self.port = host, port
         self._auth_users = auth_users
         self._auth_token = auth_token
-        self._ssl_ctx = None
         self._tls = bool(tls_cert_file)
-        if tls_cert_file:
-            import ssl
-
-            self._ssl_ctx = ssl.SSLContext(ssl.PROTOCOL_TLS_SERVER)
-            self._ssl_ctx.load_cert_chain(tls_cert_file, tls_key_file)
-            if tls_client_ca_file:
-                self._ssl_ctx.verify_mode = ssl.CERT_REQUIRED
-                self._ssl_ctx.load_verify_locations(cafile=tls_client_ca_file)
+        self._ssl_ctx = (wire.server_context(tls_cert_file, tls_key_file,
+                                             tls_client_ca_file)
+                         if tls_cert_file else None)
         self._loop = asyncio.new_event_loop()
         self._thread = threading.Thread(target=self._loop.run_forever, daemon=True)
         self._server = None

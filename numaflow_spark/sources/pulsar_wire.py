@@ -84,6 +84,8 @@ import threading
 import time
 from collections.abc import Sequence
 
+from numaflow_spark import wire
+
 # ---------------------------------------------------------------------------
 # CRC32C (Castagnoli) — reflected polynomial 0x82F63B78, init/xorout
 # 0xFFFFFFFF. Public check value: crc32c(b"123456789") == 0xE3069283.
@@ -273,21 +275,11 @@ def _pack_batch(
     return bytes(out)
 
 
-def _recv_exact(sock: socket.socket, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            raise ConnectionError("peer closed")
-        buf += chunk
-    return buf
-
-
 def read_frame(sock: socket.socket) -> tuple[int, dict[int, list], dict[int, list] | None, bytes | None, bool]:
     """Read one frame → (cmd_type, cmd_fields_of_sub_message, metadata_fields,
     payload, checksum_ok). metadata/payload are None for simple commands."""
-    (total,) = struct.unpack(">I", _recv_exact(sock, 4))
-    frame = _recv_exact(sock, total)
+    (total,) = struct.unpack(">I", wire.recv_exact(sock, 4))
+    frame = wire.recv_exact(sock, total)
     (cmd_size,) = struct.unpack(">I", frame[:4])
     base = pb_decode(frame[4 : 4 + cmd_size])
     cmd_type = _one(base, 1)
@@ -375,24 +367,16 @@ class Client:
         self._timeout = operation_timeout_seconds
         self._handshake_error: str | None = None
         host, port, tls = _parse_service_url(service_url)
-        self._sock = socket.create_connection((host, port), timeout=operation_timeout_seconds)
-        if tls:
-            # pulsar+ssl:// — TLS with full certificate verification, the
-            # reference's tls block (pulsar spec: tlsTrustCertsFilePath). A
-            # custom CA file covers the self-signed/private-CA deployment;
-            # with none given, the system trust store applies.
-            # tlsCertificateFilePath/tlsKeyFilePath present a CLIENT
-            # certificate (AuthenticationTls / mutual TLS).
-            import ssl
-
-            ctx = ssl.create_default_context(
-                cafile=tls_trust_certs_file_path
-            )
-            if tls_certificate_file_path:
-                ctx.load_cert_chain(
-                    tls_certificate_file_path, tls_key_file_path
-                )
-            self._sock = ctx.wrap_socket(self._sock, server_hostname=host)
+        # pulsar+ssl:// — TLS with full certificate verification, the
+        # reference's tls block (pulsar spec: tlsTrustCertsFilePath). A
+        # custom CA file covers the self-signed/private-CA deployment;
+        # with none given, the system trust store applies.
+        # tlsCertificateFilePath/tlsKeyFilePath present a CLIENT
+        # certificate (AuthenticationTls / mutual TLS).
+        ctx = (wire.client_context(tls_trust_certs_file_path,
+                                   tls_certificate_file_path, tls_key_file_path)
+               if tls else None)
+        self._sock = wire.connect(host, port, operation_timeout_seconds, ctx)
         self._sock.settimeout(None)
         self._wlock = threading.Lock()
         self._cv = threading.Condition()
@@ -1063,18 +1047,11 @@ class MiniPulsarServer:
         # auth_method_name="basic" + "user:password" auth_data or the
         # broker answers CommandError(AuthenticationError) and closes.
         self._basic_users = basic_users
-        self._ssl_ctx = None
-        if tls_cert_file:
-            import ssl
-
-            self._ssl_ctx = ssl.SSLContext(ssl.PROTOCOL_TLS_SERVER)
-            self._ssl_ctx.load_cert_chain(tls_cert_file, tls_key_file)
-            if tls_client_ca_file:
-                # Mutual TLS (tlsRequireTrustedClientCertOnConnect parity):
-                # the handshake rejects any peer whose cert doesn't chain
-                # to this CA before a single Pulsar frame is read.
-                self._ssl_ctx.verify_mode = ssl.CERT_REQUIRED
-                self._ssl_ctx.load_verify_locations(cafile=tls_client_ca_file)
+        # tls_client_ca_file: mutual TLS
+        # (tlsRequireTrustedClientCertOnConnect parity)
+        self._ssl_ctx = (wire.server_context(tls_cert_file, tls_key_file,
+                                             tls_client_ca_file)
+                         if tls_cert_file else None)
         self._lock = threading.RLock()
         self._topics: dict[str, list[_Stored]] = {}
         self._producer_topics: dict[tuple, str] = {}
@@ -1085,7 +1062,6 @@ class MiniPulsarServer:
         self.crc_failures = 0
         self._corrupt_next: set[str] = set()  # topics whose next dispatch is mangled
         self._srv: socket.socket | None = None
-        self._threads: list[threading.Thread] = []
         self._running = False
 
     @property
@@ -1097,13 +1073,9 @@ class MiniPulsarServer:
         self._srv = socket.create_server((self._host, self._port))
         self._actual_port = self._srv.getsockname()[1]
         self._running = True
-        t = threading.Thread(target=self._accept_loop, daemon=True)
-        t.start()
-        self._threads.append(t)
+        wire.accept_loop(self._srv, self._serve, self._ssl_ctx)
         if self.ack_timeout_s:
-            tt = threading.Thread(target=self._timeout_loop, daemon=True)
-            tt.start()
-            self._threads.append(tt)
+            threading.Thread(target=self._timeout_loop, daemon=True).start()
         return self
 
     def stop(self) -> None:
@@ -1139,30 +1111,6 @@ class MiniPulsarServer:
         self._dispatch(topic)
 
     # -- internals --------------------------------------------------------
-
-    def _accept_loop(self) -> None:
-        while self._running:
-            try:
-                conn, _ = self._srv.accept()
-            except OSError:
-                return
-            t = threading.Thread(target=self._serve_entry, args=(conn,), daemon=True)
-            t.start()
-            self._threads.append(t)
-
-    def _serve_entry(self, conn: socket.socket) -> None:
-        # TLS handshake happens in the per-connection thread so a stalled
-        # handshake cannot block the accept loop.
-        if self._ssl_ctx is not None:
-            try:
-                conn = self._ssl_ctx.wrap_socket(conn, server_side=True)
-            except OSError:
-                try:
-                    conn.close()
-                except OSError:
-                    pass
-                return
-        self._serve(conn)
 
     def _timeout_loop(self) -> None:
         while self._running:

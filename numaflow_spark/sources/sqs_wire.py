@@ -31,7 +31,9 @@ import json
 import threading
 import time
 import uuid
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
+
+from numaflow_spark import wire
 
 _ACCOUNT = "123456789012"
 
@@ -126,18 +128,14 @@ class MiniSqsServer:
                 self.end_headers()
                 self.wfile.write(data)
 
-        self._httpd = ThreadingHTTPServer((host, port), Handler)
-        if tls_cert_file:
-            # HTTPS endpoint — production SQS is TLS-only; botocore
-            # verifies against AWS_CA_BUNDLE (or the system store), so the
-            # real client exercises certificate verification end to end.
-            import ssl
-
-            ctx = ssl.SSLContext(ssl.PROTOCOL_TLS_SERVER)
-            ctx.load_cert_chain(tls_cert_file, tls_key_file)
-            self._httpd.socket = ctx.wrap_socket(
-                self._httpd.socket, server_side=True
-            )
+        # HTTPS endpoint — production SQS is TLS-only; botocore verifies
+        # against AWS_CA_BUNDLE (or the system store), so the real client
+        # exercises certificate verification end to end.
+        self._httpd = wire.TLSThreadingHTTPServer(
+            (host, port), Handler,
+            wire.server_context(tls_cert_file, tls_key_file)
+            if tls_cert_file else None,
+        )
         self.host = host
         self.port = self._httpd.server_address[1]
 

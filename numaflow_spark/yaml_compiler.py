@@ -61,13 +61,20 @@ _GO_DUR = re.compile(r"(\d+)(ms|s|m|h)")
 _UNIT_MS = {"ms": 1, "s": 1000, "m": 60_000, "h": 3_600_000}
 
 
+def _go_ms(s: str) -> int:
+    """Go duration literal ('10s', '1m30s', '100ms') → milliseconds;
+    ValueError on anything else ('5x', '2sec')."""
+    text = str(s).strip()
+    parts = _GO_DUR.findall(text)
+    if not parts or _GO_DUR.sub("", text):
+        raise ValueError(f"unparseable duration {s!r}")
+    return sum(int(n) * _UNIT_MS[u] for n, u in parts)
+
+
 def parse_go_duration(s: str) -> str:
     """Go duration literal ('10s', '1m30s', '100ms') → Spark interval
     string ('10 seconds', '90 seconds', '100 milliseconds')."""
-    parts = _GO_DUR.findall(str(s).strip())
-    if not parts or _GO_DUR.sub("", str(s).strip()):
-        raise ValueError(f"unparseable duration {s!r}")
-    ms = sum(int(n) * _UNIT_MS[u] for n, u in parts)
+    ms = _go_ms(s)
     return f"{ms} milliseconds" if ms % 1000 else f"{ms // 1000} seconds"
 
 
@@ -174,10 +181,7 @@ def _build_source(name: str, spec: Mapping[str, Any], registry: Mapping[str, Any
         # 8 is only the Python-API harness default, never a YAML default.
         key_count = int(g.get("keyCount", 0) or 0)
         jitter = g.get("jitter")
-        jitter_s = 0
-        if jitter:
-            ms = sum(int(n) * _UNIT_MS[u] for n, u in _GO_DUR.findall(str(jitter)))
-            jitter_s = ms // 1000
+        jitter_s = _go_ms(jitter) // 1000 if jitter else 0
 
         def stream_reader(s, rpu=rpu, key_count=key_count, jitter_s=jitter_s):
             from numaflow_spark.sources.generator import generator_stream
@@ -592,13 +596,14 @@ def _schedule_interval_s(schedule: str) -> float:
         return named[s]
     if s.startswith("@every "):
         s = s[len("@every "):]
-    if _GO_DUR.findall(s) and not _GO_DUR.sub("", s):
-        return sum(int(n) * _UNIT_MS[u] for n, u in _GO_DUR.findall(s)) / 1000.0
-    raise ValueError(
-        f"side input schedule {schedule!r}: positional cron is not supported "
-        "— use an interval form (`@every 30m`, `@hourly`, `90s`); the engine "
-        "refreshes via TTL (streaming/side_inputs.py)"
-    )
+    try:
+        return _go_ms(s) / 1000.0
+    except ValueError:
+        raise ValueError(
+            f"side input schedule {schedule!r}: positional cron is not "
+            "supported — use an interval form (`@every 30m`, `@hourly`, "
+            "`90s`); the engine refreshes via TTL (streaming/side_inputs.py)"
+        ) from None
 
 
 # PipelineSpec keys (pipeline_types.go:495-530). Handled keys compile onto
@@ -652,8 +657,7 @@ def _parse_idle_source(wm: Mapping[str, Any], p: Pipeline) -> None:
     idle = wm.get("idleSource")
     if not idle:
         return
-    step = idle.get("stepInterval", "1s")
-    step_ms = sum(int(n) * _UNIT_MS[u] for n, u in _GO_DUR.findall(str(step)))
+    step_ms = _go_ms(idle.get("stepInterval", "1s"))
     p.idle_source = {
         "threshold": parse_go_duration(idle["threshold"]) if idle.get("threshold") else None,
         "increment_by": parse_go_duration(idle["incrementBy"]) if idle.get("incrementBy") else None,

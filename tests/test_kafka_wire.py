@@ -1073,29 +1073,18 @@ def test_snappy_and_zstd_codecs_over_the_wire(broker):
 
 def test_lz4_codec_over_the_wire_and_reference_interop(broker):
     """Codec 3 (lz4): standard LZ4 frames round-trip through real
-    produce/fetch frames, and the from-scratch frame+block implementation
-    interops with the REFERENCE implementation in BOTH directions
-    (pyarrow's bundled lz4): our decoder reads reference frames with no
-    content-size hint (the capability pyarrow itself lacks — why this
-    codec was a documented divergence through r9), and the reference
-    decoder reads our frames. xxHash32 is pinned to published vectors."""
-    from numaflow_spark.sources.kafka_wire import (
-        LZ4,
-        _lz4_frame_compress,
-        _lz4_frame_decompress,
-        _xxh32,
-    )
-
-    # published xxHash32 vectors (seed 0)
-    assert _xxh32(b"") == 0x02CC5D05
-    assert _xxh32(b"a") == 0x550D7456
-    assert _xxh32(b"Hello World") == 0xB1FD16EE
+    produce/fetch frames, and the codec interops with the REFERENCE
+    implementation (pyarrow's one-shot lz4 frame codec) in BOTH
+    directions: the broker reads reference frames with no content-size
+    hint (the one-shot decoder itself needs one), and the reference
+    decoder reads the frames this module writes."""
+    from numaflow_spark.sources.kafka_wire import LZ4, _decompress, _lz4_compress
 
     pa = pytest.importorskip("pyarrow")
     raw = b"the quick brown fox " * 500
     real = pa.Codec("lz4").compress(raw, asbytes=True)
-    assert _lz4_frame_decompress(real) == raw  # reference -> ours, sizeless
-    ours = _lz4_frame_compress(raw)
+    assert _decompress(LZ4, real) == raw  # reference -> ours, sizeless
+    ours = _lz4_compress(raw)
     assert len(ours) < len(raw) // 5  # actually compresses, not store-mode
     assert pa.Codec("lz4").decompress(
         ours, decompressed_size=len(raw), asbytes=True
@@ -1118,44 +1107,157 @@ def test_lz4_codec_over_the_wire_and_reference_interop(broker):
 def test_lz4_block_dependent_frame_decodes():
     """Frames with the B.Indep FLG bit CLEAR are legal LZ4F: a match in
     block N may reach into the previous blocks' last 64 KB of decoded
-    output (ADVICE r10: the decoder used a fresh history per block and
+    output (ADVICE r10: a decoder with a fresh history per block
     mis-reported such frames as corrupt offsets). Hand-built frame: a
     stored first block, then a compressed block whose first sequence is a
     match reaching 20 bytes back — entirely into block 1."""
     import struct
 
-    from numaflow_spark.sources.kafka_wire import (
-        _LZ4_MAGIC,
-        _lz4_frame_decompress,
-        _xxh32,
-    )
+    from numaflow_spark.sources.kafka_wire import LZ4, _decompress
 
-    flg = 1 << 6  # version 01, B.Indep CLEAR, no checksums/size
-    bd = 7 << 4
-    desc = bytes([flg, bd])
-    hc = (_xxh32(desc) >> 8) & 0xFF
+    # magic, FLG (version 01, B.Indep CLEAR, no checksums/size), BD (4 MB
+    # blocks), HC = second byte of xxHash32(FLG BD)
+    header = b"\x04\x22\x4d\x18" + bytes([0x40, 0x70, 0xDF])
 
     b1 = b"0123456789abcdefghij"  # 20 bytes, stored
     # block 2: [token lit=0 match=8][offset=20 LE] then a literals-only
     # closing sequence of 5 bytes — decodes to b1[:8] + b"WXYZ!"
     b2 = bytes([0x04]) + struct.pack("<H", 20) + bytes([0x50]) + b"WXYZ!"
 
-    frame = bytearray(_LZ4_MAGIC + desc + bytes([hc]))
+    frame = bytearray(header)
     frame += struct.pack("<I", len(b1) | 0x80000000) + b1
     frame += struct.pack("<I", len(b2)) + b2
     frame += struct.pack("<I", 0)  # EndMark
 
-    assert _lz4_frame_decompress(bytes(frame)) == b1 + b1[:8] + b"WXYZ!"
+    assert _decompress(LZ4, bytes(frame)) == b1 + b1[:8] + b"WXYZ!"
 
 
-def test_zstd_frame_content_size_parse():
-    """RFC 8878 header parse: every FCS field width decodes correctly
-    (pyarrow needs the exact size up front)."""
-    import pyarrow as pa
+def _batch(records, codec, compress):
+    """One RecordBatch v2 of ``records`` whose records section is
+    ``compress(section)`` under attributes codec ``codec``, with a valid
+    CRC32C: payloads the engine's own encoder never writes."""
+    import struct
 
-    from numaflow_spark.sources.kafka_wire import _zstd_content_size
+    from numaflow_spark.sources.kafka_wire import (
+        _crc32c,
+        _i8,
+        _i16,
+        _i32,
+        _i64,
+        encode_record_batch_v2,
+    )
 
-    for n in (5, 300, 70_000):
-        raw = bytes(range(256)) * (n // 256) + b"x" * (n % 256)
-        z = pa.Codec("zstd").compress(raw, asbytes=True)
-        assert _zstd_content_size(z) == n
+    plain = encode_record_batch_v2(0, records)
+    # base offset, length, epoch, magic and CRC take 21 bytes; the
+    # attributes..record-count header after them takes 40
+    after = _i16(codec) + plain[23:61] + compress(plain[61:])
+    body = _i32(-1) + _i8(2) + struct.pack(">I", _crc32c(after)) + after
+    return _i64(0) + _i32(len(body)) + body
+
+
+def _produce_batch(client, topic, batch) -> int:
+    """Produce v3 of one prebuilt batch to partition 0 -> its error code."""
+    from numaflow_spark.sources.kafka_wire import (
+        API_PRODUCE,
+        _i16,
+        _i32,
+        _string,
+    )
+
+    body = (
+        _string(None) + _i16(1) + _i32(5000) + _i32(1)
+        + _string(topic) + _i32(1) + _i32(0) + _i32(len(batch)) + batch
+    )
+    r = client._request(API_PRODUCE, body, version=3)
+    r.i32(); r.string(); r.i32(); r.i32()
+    return r.i16()
+
+
+_RECS = [(b"k%d" % i, b"payload-%d" % i * 30, 1000 + i, []) for i in range(25)]
+
+
+@pytest.mark.parametrize("codec, payload", [
+    (1, b"\x1f\x8b\x08\x00" + bytes(6) + b"not deflate data"),
+    (2, b"\x82SNAPPY\x00" + bytes(3) + b"\x01" + bytes(3) + b"\x01"
+        + bytes(3) + b"\x09" + b"\x20not snappy"),
+    # a snappy block claiming a 2**62-byte output: the allocation fails
+    (2, b"\x82SNAPPY\x00" + bytes(3) + b"\x01" + bytes(3) + b"\x01"
+        + bytes(3) + b"\x0d" + b"\xff" * 8 + b"\x3fjunk"),
+], ids=["gzip", "snappy", "snappy-size"])
+def test_undecodable_payload_is_err_corrupt(broker, codec, payload):
+    """A gzip or snappy batch whose CRC32C holds but whose payload does
+    not decompress gets ERR_CORRUPT, and the same connection answers the
+    next request (a codec error must not drop the link)."""
+    from numaflow_spark.sources.kafka_wire import ERR_CORRUPT
+
+    pytest.importorskip("pyarrow")
+    c = KafkaWireClient(broker.bootstrap)
+    c.metadata(["tbad"])
+    assert _produce_batch(c, "tbad", _batch(_RECS, codec, lambda _s: payload)) \
+        == ERR_CORRUPT
+    assert c.metadata(["tbad"]) == {"tbad": [0, 1]}
+    c.close()
+
+
+def test_zstd_frame_without_content_size_round_trips(broker):
+    """Kafka producers may write zstd frames with no Frame_Content_Size
+    (a streaming compressor does): such a batch survives produce→fetch."""
+    from numaflow_spark.sources.kafka_wire import ERR_NONE, ZSTD
+
+    pa = pytest.importorskip("pyarrow")
+
+    def stream_zstd(section: bytes) -> bytes:
+        sink = pa.BufferOutputStream()
+        with pa.CompressedOutputStream(sink, "zstd") as out:
+            out.write(section)
+        frame = sink.getvalue().to_pybytes()
+        assert frame[4] >> 6 == 0 and not frame[4] & 0x20  # no FCS field
+        return frame
+
+    c = KafkaWireClient(broker.bootstrap)
+    c.metadata(["tzs"])
+    assert _produce_batch(c, "tzs", _batch(_RECS, ZSTD, stream_zstd)) == ERR_NONE
+    got, _hw = c.fetch_records("tzs", 0, 0)
+    assert [(k, v, t) for _o, k, v, t, _h in got] == [
+        (k, v, t) for k, v, t, _h in _RECS
+    ]
+    c.close()
+
+
+def test_lz4_frames_are_block_independent_and_checked(broker):
+    """The engine's LZ4 batches keep the shape Kafka's producer writes
+    past one 64 KB block — FLG 0x60 (B.Indep set; Arrow's own frame
+    writers clear it there) and BD 0x40 — and a frame whose header
+    checksum is wrong gets ERR_CORRUPT."""
+    import random
+
+    from numaflow_spark.sources.kafka_wire import (
+        ERR_CORRUPT,
+        LZ4,
+        _lz4_compress,
+        encode_record_batch_v2,
+    )
+
+    pytest.importorskip("pyarrow")
+    rng = random.Random(0)
+    big = [(b"k%d" % i, rng.randbytes(1000) + b"x" * 1000, 1000 + i, [])
+           for i in range(100)]
+    frame = encode_record_batch_v2(0, big, LZ4)[61:]
+    assert len(frame) > 64 * 1024
+    assert frame[4:6] == bytes([0x60, 0x40])
+
+    c = KafkaWireClient(broker.bootstrap)
+    c.metadata(["tl4h"])
+    c.produce_records("tl4h", 0, big, compression=LZ4)
+    got, _hw = c.fetch_records("tl4h", 0, 0)
+    assert [v for _o, _k, v, _t, _h in got] == [v for _k, v, _t, _h in big]
+
+    def bad_checksum(section: bytes) -> bytes:
+        frame = bytearray(_lz4_compress(section))
+        frame[6] ^= 0xFF  # HC byte
+        return bytes(frame)
+
+    assert _produce_batch(c, "tl4h", _batch(_RECS, LZ4, bad_checksum)) \
+        == ERR_CORRUPT
+    c.close()
+

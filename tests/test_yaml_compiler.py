@@ -835,6 +835,21 @@ def test_idle_source_yaml_closes_windows(spark, tmp_path):
         d.stop()
 
 
+@pytest.mark.parametrize("text", [
+    SIMPLE.replace("duration: 1s", "duration: 1s\n          jitter: 5x"),
+    IDLE_YAML.replace("stepInterval: 1s", "stepInterval: 2sec"),
+], ids=["jitter", "stepInterval"])
+def test_malformed_go_durations_raise(text):
+    """A generator jitter or idle-source stepInterval that is not a Go
+    duration fails the compile instead of reading as 0 s ('5x') or 2 s
+    ('2sec')."""
+    from numaflow_spark.pipeline import Source
+
+    registry = {"in": Source(reader=lambda s: None), "agg": lambda: []}
+    with pytest.raises(ValueError, match="unparseable duration"):
+        pipeline_from_yaml(text, registry)
+
+
 SIDE_YAML = """
 kind: Pipeline
 metadata: {name: si}
